@@ -10,8 +10,10 @@ Skew story (north_rule: "partitioning / shuffle / skew handled explicitly"):
    not 10^11 rows. This is the two-phase aggregation; HashAggregate does it
    automatically and `explicit_two_phase` below materializes the same plan
    with an explicit salt for engines/readers that want it visible.
-2. AQE skew-join splitting is enabled in the session defaults for the join
-   back to violating rows.
+2. When the key is the id column, each duplicated key's violation rows are
+   the key repeated dup_count times, so there is no join back. For any
+   other key, AQE skew-join splitting (enabled in the session defaults)
+   covers the join back to the violating rows.
 """
 
 from __future__ import annotations
@@ -49,11 +51,23 @@ def duplicate_keys(df: DataFrame, key_cols: list[str],
 def uniqueness_violations(df: DataFrame, key_cols: list[str],
                           id_col: str = "url") -> DataFrame:
     """Violation rows (id, constraint_id, observed_value) for duplicated
-    keys, matching the engine's violations schema."""
+    keys, matching the engine's violations schema: one row per row whose
+    key is duplicated. Null keys are never reported."""
     constraint_id = ".".join(key_cols) + ".unique"
+    if key_cols == [id_col]:
+        # the key is the reported id, so each duplicated key's rows are n
+        # copies of the key: repeat it instead of joining back to df
+        key = F.col(id_col)
+        dups = duplicate_keys(df.filter(key.isNotNull()), key_cols)
+        rows = dups.select(F.explode(F.array_repeat(
+            key, F.col("dup_count").cast("int"))).alias(id_col))
+        return rows.select(
+            key.cast("string").alias(id_col),
+            F.lit(constraint_id).alias("constraint_id"),
+            key.cast("string").alias("observed_value"))
     dups = duplicate_keys(df, key_cols)
-    # join back so every duplicated row is reported (semi-join keeps the
-    # plan a shuffle join that AQE can split on skew)
+    # join back so every duplicated row is reported (the inner join drops
+    # null keys; a shuffle join that AQE can split on skew)
     joined = df.select(id_col, *[c for c in key_cols if c != id_col]).join(
         dups, on=key_cols, how="inner")
     return joined.select(

@@ -1,20 +1,23 @@
 """Single-pass constraint evaluation → violations + per-partition verdicts.
 
-Inverts the reference's fail-fast model (first failure throws
-ValidationException — /root/reference/src/Validator.php:228-235): every
-compiled constraint is evaluated in ONE projection over ONE scan, failures
-are collected per row into an array of (constraint_id, observed_value)
-structs, and the violations / verdict outputs are derived views of that
-annotated DataFrame. Catalyst CSE + whole-stage codegen fuse all predicates
-into a single generated function per partition — this is the property that
-makes the design hold at 10^12 rows: cost is one scan, no shuffle for the
-row-level checks, shuffles only for the dataset-level checks (uniqueness,
-referential) which are explicitly skew-managed.
+Inverts the reference's fail-fast model (its Validator.php:228-235 throws
+ValidationException at the first failure): every compiled constraint is
+evaluated in ONE projection over ONE scan. Each row gets a bitmask of the
+constraints it fails (one ``long`` per MASK_BITS constraints) and an
+``_ok`` flag; the violations / verdict outputs are derived views of that
+annotated DataFrame. The mask is CASE WHEN and bitwise OR only, so the
+projection stays inside whole-stage codegen, and the per-violation structs
+are built after the ``_ok`` filter, for failing rows alone. Cost is one
+scan, no shuffle for the row-level checks, shuffles only for the
+dataset-level checks (uniqueness, referential) which are explicitly
+skew-managed.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
+from operator import add, and_
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -27,8 +30,10 @@ from json_schema_spark.constraints.compiler import (
 )
 from json_schema_spark.constraints.spec import ConstraintSet
 
-VIOLATIONS_COL = "_violations"
 OK_COL = "_ok"
+MASK_PREFIX = "_mask"
+# constraints per mask word: a long's bits below the sign bit
+MASK_BITS = 63
 
 
 def apply_defaults(df: DataFrame, cset: ConstraintSet) -> DataFrame:
@@ -47,43 +52,92 @@ def apply_defaults(df: DataFrame, cset: ConstraintSet) -> DataFrame:
     return df.withColumns(repl)
 
 
+def _mask_columns(compiled: list[CompiledConstraint]) -> list[str]:
+    """Names of the mask words annotate() adds for ``compiled``."""
+    n_words = -(-len(compiled) // MASK_BITS)
+    return [f"{MASK_PREFIX}{w}" for w in range(n_words)]
+
+
+def annotate(df: DataFrame, compiled: list[CompiledConstraint]) -> DataFrame:
+    """``df`` plus one mask word per MASK_BITS constraints — bit
+    ``i % MASK_BITS`` of word ``i // MASK_BITS`` is set when the row fails
+    constraint ``i`` — and ``_ok`` (no bit set)."""
+    words = {}
+    for name, start in zip(_mask_columns(compiled),
+                           range(0, len(compiled), MASK_BITS)):
+        bits = [F.when(~c.predicate, F.lit(1 << b)).otherwise(F.lit(0))
+                for b, c in enumerate(compiled[start:start + MASK_BITS])]
+        words[name] = reduce(Column.bitwiseOR, bits).cast("long")
+    ok = reduce(and_, [F.col(w) == 0 for w in words]) if words else F.lit(True)
+    return df.withColumns(words).withColumn(OK_COL, ok)
+
+
+def _violation_count(compiled: list[CompiledConstraint]) -> Column:
+    """Number of constraints the annotated row fails."""
+    counts = [F.bit_count(F.col(w)) for w in _mask_columns(compiled)]
+    return reduce(add, counts, F.lit(0))
+
+
+def violation_array(compiled: list[CompiledConstraint]) -> Column:
+    """One (constraint_id, observed_value) struct per constraint, in
+    constraint order, null where the annotated row passes it."""
+    if not compiled:
+        return F.array().cast(
+            "array<struct<constraint_id:string,observed_value:string>>")
+    words = _mask_columns(compiled)
+    return F.array(*[
+        F.when(F.col(words[i // MASK_BITS])
+               .bitwiseAND(F.lit(1 << (i % MASK_BITS))) != 0,
+               F.struct(F.lit(c.constraint_id).alias("constraint_id"),
+                        c.observed.cast("string").alias("observed_value")))
+        for i, c in enumerate(compiled)])
+
+
+def violation_rows(annotated: DataFrame, compiled: list[CompiledConstraint],
+                   *cols: Column) -> DataFrame:
+    """One row per failed constraint of each failing annotated row, in
+    constraint order: ``cols``, then constraint_id and observed_value.
+    Passing rows are filtered out before any violation struct is built."""
+    exploded = (annotated.filter(~F.col(OK_COL))
+                .select(*cols, F.explode(violation_array(compiled))
+                        .alias("_v")))
+    keep = [c for c in exploded.columns if c != "_v"]
+    return exploded.filter(F.col("_v").isNotNull()).select(*keep, "_v.*")
+
+
 @dataclass
 class ValidationResult:
     """Lazy handles over the annotated DataFrame; nothing executes until an
     action. ``observation`` carries scan-free metrics (filled after the
     first action on ``annotated``)."""
 
-    annotated: DataFrame            # input + _violations array + _ok flag
+    annotated: DataFrame            # input + mask words + _ok flag
     constraints: list[CompiledConstraint]
     cset: ConstraintSet
     id_col: str
     observation: Observation | None
     _dataset_violations: DataFrame | None  # unique/referential (shuffled path)
+    _dataset_ids: list[str]
 
     # -- outputs --------------------------------------------------------
+    @property
+    def constraint_ids(self) -> list[str]:
+        """Every constraint id violations() can emit, row-level first."""
+        return [c.constraint_id for c in self.constraints] + self._dataset_ids
+
     def violations(self) -> DataFrame:
         """(id, constraint_id, observed_value) — row-level violations plus
         dataset-level (uniqueness / referential) ones."""
-        # no size()>0 pre-filter: explode of an empty array already emits
-        # nothing, and a Filter node would force the (large) violation
-        # array expression to be evaluated twice per row
-        row_level = (
-            self.annotated
-            .select(
-                F.col(self.id_col).cast("string").alias(self.id_col),
-                F.explode(F.col(VIOLATIONS_COL)).alias("v"))
-            .select(
-                self.id_col,
-                F.col("v.constraint_id").alias("constraint_id"),
-                F.col("v.observed_value").alias("observed_value"))
-        )
+        row_level = violation_rows(
+            self.annotated, self.constraints,
+            F.col(self.id_col).cast("string").alias(self.id_col))
         if self._dataset_violations is not None:
             row_level = row_level.unionByName(self._dataset_violations)
         return row_level
 
     def valid_rows(self) -> DataFrame:
-        base = [c for c in self.annotated.columns
-                if c not in (VIOLATIONS_COL, OK_COL)]
+        drop = set(_mask_columns(self.constraints)) | {OK_COL}
+        base = [c for c in self.annotated.columns if c not in drop]
         return self.annotated.filter(F.col(OK_COL)).select(*base)
 
     def partition_verdicts(self, by: Column | str | None = None) -> DataFrame:
@@ -100,7 +154,7 @@ class ValidationResult:
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum((~F.col(OK_COL)).cast("long")).alias("n_failed_rows"),
-                F.sum(F.size(F.col(VIOLATIONS_COL)).cast("long"))
+                F.sum(_violation_count(self.constraints).cast("long"))
                  .alias("n_violations"))
             .withColumn("pass", F.col("n_failed_rows") == 0)
         )
@@ -122,31 +176,31 @@ class ValidationResult:
 
 
 def _dataset_checks(df: DataFrame, cset: ConstraintSet,
-                    id_col: str) -> DataFrame | None:
+                    id_col: str) -> tuple[DataFrame | None, list[str]]:
     """Dataset-level checks that genuinely need data movement → violation
-    rows. Uniqueness always shuffles (see checks/uniqueness.py for the skew
-    story); referential checks against a *DataFrame* dimension broadcast-join.
-    Literal allow-list referentials are pure predicates and are fused into
-    the single-pass row-level projection instead (see validate()) — zero
-    extra scans for them.
+    rows, and their constraint ids. Uniqueness always shuffles (see
+    checks/uniqueness.py for the skew story); referential checks against a
+    *DataFrame* dimension broadcast-join. Literal allow-list referentials
+    are pure predicates and are fused into the single-pass row-level
+    projection instead (see validate()) — zero extra scans for them.
     """
     from json_schema_spark.checks.referential import referential_violations
     from json_schema_spark.checks.uniqueness import uniqueness_violations
 
     parts: list[DataFrame] = []
+    ids: list[str] = []
     for key in cset.unique:
         cols = list(key) if isinstance(key, (list, tuple)) else [key]
         parts.append(uniqueness_violations(df, cols, id_col=id_col))
+        ids.append(".".join(cols) + ".unique")
     for col, allowed in cset.referential.items():
         if isinstance(allowed, DataFrame):
             parts.append(referential_violations(df, col, allowed,
                                                 id_col=id_col))
+            ids.append(f"{col}.referential")
     if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return None, ids
+    return reduce(DataFrame.unionByName, parts), ids
 
 
 def _referential_constraints(df: DataFrame,
@@ -190,24 +244,7 @@ def validate(
     if dataset_checks:
         compiled = compiled + _referential_constraints(df, cset)
 
-    # one struct per constraint, null when it passes; filter drops the nulls
-    tagged = [
-        F.when(
-            ~c.predicate,
-            F.struct(
-                F.lit(c.constraint_id).alias("constraint_id"),
-                c.observed.cast("string").alias("observed_value")))
-        for c in compiled
-    ]
-    if tagged:
-        varr = F.filter(F.array(*tagged), lambda x: x.isNotNull())
-    else:
-        varr = F.array().cast(
-            "array<struct<constraint_id:string,observed_value:string>>")
-
-    annotated = (df
-                 .withColumn(VIOLATIONS_COL, varr)
-                 .withColumn(OK_COL, F.size(F.col(VIOLATIONS_COL)) == 0))
+    annotated = annotate(df, compiled)
 
     obs = None
     if observe:
@@ -216,10 +253,11 @@ def validate(
             obs,
             F.count(F.lit(1)).alias("rows_total"),
             F.sum((~F.col(OK_COL)).cast("long")).alias("rows_failed"),
-            F.sum(F.size(F.col(VIOLATIONS_COL)).cast("long"))
+            F.sum(_violation_count(compiled).cast("long"))
              .alias("violations_total"))
 
-    ds_viol = _dataset_checks(df, cset, id_col) if dataset_checks else None
+    ds_viol, ds_ids = (_dataset_checks(df, cset, id_col) if dataset_checks
+                       else (None, []))
 
     return ValidationResult(
         annotated=annotated,
@@ -228,4 +266,5 @@ def validate(
         id_col=id_col,
         observation=obs,
         _dataset_violations=ds_viol,
+        _dataset_ids=ds_ids,
     )

@@ -92,6 +92,23 @@ RX_REL_JSON_POINTER = r"^(0|[1-9][0-9]*)((?:/[^/#]+)*)(#?)$"
 # refined below in _uri()
 RX_URI_SCHEME = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
 
+# Plain http(s) urls that _uri_exact() accepts, by one possessive regex: a
+# hostname authority of at most 63 characters (so no label can exceed 63),
+# an optional port, then path / query / fragment characters of
+# RX_PATH_CHARS's class with well-formed %XX escapes. Userinfo, IP
+# literals and line terminators (\z, not $) fall through to the exact
+# check. tests/test_formats_uri.py checks that it accepts nothing the
+# exact check rejects.
+_PCHAR = r"A-Za-z0-9\-._~!$&'()*+,;=:@"
+_LABEL = r"[A-Za-z0-9]++(?:-++[A-Za-z0-9]++)*+"
+RX_URI_FAST = (
+    r"^https?://(?=[^/?#]{1,63}+(?:[/?#]|\z))"
+    rf"{_LABEL}(?:\.{_LABEL})*+(?::[0-9]++)?+"
+    rf"(?:/(?:[{_PCHAR}/]++|%[0-9A-Fa-f]{{2}})*+)?+"
+    rf"(?:\?(?:[{_PCHAR}/?]++|%[0-9A-Fa-f]{{2}})*+)?+"
+    rf"(?:#(?:[{_PCHAR}/]++|%[0-9A-Fa-f]{{2}})*+)?+\z"
+)
+
 
 def _not_tilde_broken(col: Column) -> Column:
     return ~F.coalesce(col.rlike(RX_TILDE_BAD), F.lit(False))
@@ -111,6 +128,20 @@ def _hostname(col: Column) -> Column:
 
 
 def _uri(col: Column) -> Column:
+    """Absolute URI: the RX_URI_FAST regex, else the exact check.
+
+    CASE WHEN, not ``fast | exact``: in validate()'s projection the Or
+    costs most of the exact check, likely because subexpression elimination
+    hoists the exact check's repeated regexp_extract calls ahead of the
+    short-circuit. validate() of this format alone on 1M cached webtext
+    urls, local[4] on 4 vCPUs, best of 3: exact 2.60 s, ``fast | exact``
+    2.02 s, CASE WHEN 1.06 s.
+    """
+    return F.when(col.rlike(RX_URI_FAST), F.lit(True)) \
+        .otherwise(_uri_exact(col))
+
+
+def _uri_exact(col: Column) -> Column:
     """Absolute URI: scheme required; host (if present) must be a hostname;
     path/fragment restricted to URI char classes — Check.php:243-272.
 

@@ -9,8 +9,9 @@ stand-in). For each partition the driver:
    COMPLETE entry whose constraint-set hash matches is skipped on resume,
 2. runs the single-pass validation job restricted to that partition
    (the partition filter prunes at the scan — no other partition is read),
-3. writes violations + a verdict summary idempotently
-   (`.../partition=<p>/`, overwritten on retry),
+3. writes violations idempotently (`.../partition=<p>/`, overwritten on
+   retry), counting them per constraint with df.observe during that one
+   write, and writes a one-row verdict built from those counts,
 4. atomically (tmp + rename) records the lineage manifest:
    partition value, input files actually read, Iceberg snapshot-id (when
    the source is Iceberg), constraint-set content hash, row/violation
@@ -34,11 +35,16 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 from json_schema_spark.constraints.evaluator import validate
 from json_schema_spark.constraints.spec import ConstraintSet
 
 STATUS_COMPLETE = "COMPLETE"
+# one row per partition; n_failed_rows counts rows failing a row-level
+# constraint, n_violations every violation row written (dataset-level too)
+VERDICT_SCHEMA = ("partition_key string, n_rows long, n_failed_rows long, "
+                  "n_violations long, pass boolean")
 
 
 @dataclass
@@ -136,17 +142,35 @@ def run_validation(
         part_df = df.filter(F.col(partition_col).cast("string") == part)
         result = validate(part_df, cset, id_col=id_col, observe=True)
 
+        # the written rows, dataset-level ones included, are what the
+        # verdict and the manifest count: observed during the one write
+        counted = Observation()
+        cid = F.col("constraint_id")
         viol_path = os.path.join(output_dir, "violations",
                                  f"partition={part}")
         (result.violations()
+         .observe(counted, F.count(F.lit(1)).alias("violations_total"),
+                  *[F.count_if(cid == c).alias(c)
+                    for c in result.constraint_ids])
          .write.mode("overwrite").parquet(viol_path))
 
+        by_constraint = dict(counted.get)
+        rows = result.metrics()
+        metrics = {
+            "rows_total": int(rows["rows_total"]),
+            "rows_failed": int(rows["rows_failed"] or 0),
+            "violations_total": int(by_constraint.pop("violations_total")),
+            "violations_by_constraint": {
+                k: int(v) for k, v in by_constraint.items()},
+        }
         verdict_path = os.path.join(output_dir, "verdicts",
                                     f"partition={part}")
-        (result.partition_verdicts(by=F.lit(part))
+        (spark.createDataFrame(
+            [(part, metrics["rows_total"], metrics["rows_failed"],
+              metrics["violations_total"], metrics["violations_total"] == 0)],
+            VERDICT_SCHEMA)
          .write.mode("overwrite").parquet(verdict_path))
 
-        metrics = result.metrics()
         manifest = {
             "partition": part,
             "status": STATUS_COMPLETE,
@@ -154,8 +178,7 @@ def run_validation(
             "constraint_set": cset.name,
             "snapshot_id": snapshot_id,
             "input_files": input_files_for(part_df),
-            "metrics": {k: int(v) if isinstance(v, int) else v
-                        for k, v in metrics.items()},
+            "metrics": metrics,
             "wall_seconds": round(time.time() - t0, 3),
             "outputs": {"violations": viol_path, "verdicts": verdict_path},
         }

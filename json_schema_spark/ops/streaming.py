@@ -23,39 +23,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from json_schema_spark.constraints.compiler import compile_constraints
+from json_schema_spark.constraints.evaluator import (
+    OK_COL,
+    annotate,
+    violation_array,
+    violation_rows,
+)
 from json_schema_spark.constraints.spec import ConstraintSet
-
-
-def annotate_stream(stream_df: DataFrame, cset: ConstraintSet) -> DataFrame:
-    """Add `_violations` (array of (constraint_id, observed_value)) to a
-    streaming DataFrame — identical expression set as the batch path
-    (evaluator.validate), re-derived here because streams cannot observe()
-    or run dataset-level joins."""
-    compiled = compile_constraints(cset, stream_df.schema)
-    tagged = [
-        F.when(~c.predicate,
-               F.struct(F.lit(c.constraint_id).alias("constraint_id"),
-                        c.observed.cast("string").alias("observed_value")))
-        for c in compiled]
-    varr = (F.filter(F.array(*tagged), lambda x: x.isNotNull()) if tagged
-            else F.array().cast(
-                "array<struct<constraint_id:string,observed_value:string>>"))
-    return (stream_df
-            .withColumn("_violations", varr)
-            .withColumn("_ok", F.size("_violations") == 0))
 
 
 def stream_violations(stream_df: DataFrame, cset: ConstraintSet,
                       id_col: str = "url",
                       ts_col: str | None = None) -> DataFrame:
     """Streaming violation feed: (id, constraint_id, observed_value,
-    event_ts) — append-mode safe (stateless projection + filter).
+    event_ts) — append-mode safe (stateless projection + filter), with
+    the batch path's row-level annotation and violation rows.
 
     ``ts_col`` names the event-time column explicitly; when omitted the
     schema must contain at most ONE timestamp column (ambiguity raises
     instead of silently stamping the wrong event time), falling back to
     processing time when there is none."""
-    ann = annotate_stream(stream_df, cset)
     if ts_col is not None:
         ts = F.col(ts_col)
     else:
@@ -65,30 +52,30 @@ def stream_violations(stream_df: DataFrame, cset: ConstraintSet,
             raise ValueError(
                 f"multiple timestamp columns {ts_cols}; pass ts_col=")
         ts = F.col(ts_cols[0]) if ts_cols else F.current_timestamp()
-    return (ann.filter(F.size("_violations") > 0)
-            .select(F.col(id_col).cast("string").alias(id_col),
-                    F.explode("_violations").alias("v"),
-                    ts.alias("event_ts"))
-            .select(id_col, F.col("v.constraint_id").alias("constraint_id"),
-                    F.col("v.observed_value").alias("observed_value"),
-                    "event_ts"))
+    compiled = compile_constraints(cset, stream_df.schema)
+    return (violation_rows(annotate(stream_df, compiled), compiled,
+                           F.col(id_col).cast("string").alias(id_col),
+                           ts.alias("event_ts"))
+            .select(id_col, "constraint_id", "observed_value", "event_ts"))
 
 
 def violation_counts(stream_df: DataFrame, cset: ConstraintSet,
                      ts_col: str = "warc_ts",
                      window_duration: str = "1 hour",
                      watermark: str = "2 hours") -> DataFrame:
-    """Windowed violation counts per constraint id with late-data
-    tolerance: watermark bounds state, tumbling windows aggregate. Output
-    mode `append` emits a window once the watermark passes it."""
-    ann = annotate_stream(stream_df, cset)
+    """Windowed violation counts per constraint id (``__ok__`` counts the
+    passing rows) with late-data tolerance: watermark bounds state,
+    tumbling windows aggregate. Output mode `append` emits a window once
+    the watermark passes it."""
+    compiled = compile_constraints(cset, stream_df.schema)
+    ann = annotate(stream_df, compiled).withWatermark(ts_col, watermark)
+    ids = (F.when(F.col(OK_COL), F.array(F.lit("__ok__")))
+           .otherwise(violation_array(compiled)["constraint_id"]))
     return (ann
-            .withWatermark(ts_col, watermark)
-            .select(F.col(ts_col),
-                    F.explode_outer("_violations").alias("v"))
+            .select(F.col(ts_col), F.explode(ids).alias("constraint_id"))
+            .filter(F.col("constraint_id").isNotNull())
             .groupBy(F.window(F.col(ts_col), window_duration),
-                     F.coalesce(F.col("v.constraint_id"), F.lit("__ok__"))
-                      .alias("constraint_id"))
+                     "constraint_id")
             .agg(F.count(F.lit(1)).alias("n")))
 
 
@@ -109,7 +96,7 @@ def host_violation_monitor(stream_df: DataFrame, cset: ConstraintSet,
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    ann = annotate_stream(stream_df, cset)
+    ann = annotate(stream_df, compile_constraints(cset, stream_df.schema))
     hosted = ann.select(
         F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.\-]*://([^/]*)",
                          1).alias("host"),

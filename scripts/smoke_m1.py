@@ -20,4 +20,4 @@ print("day verdicts:")
 from pyspark.sql import functions as F
 res.partition_verdicts(by=F.to_date("warc_ts")).orderBy("partition_key").show(31, False)
 print(f"elapsed: {time.time()-t0:.1f}s")
-res.annotated.select("url", "_violations", "_ok").filter("!_ok").show(5, False)
+res.violations().show(5, False)

@@ -1,0 +1,116 @@
+"""`format: uri` fast path: RX_URI_FAST may only short-cut the exact check.
+
+_uri() is CASE WHEN fast THEN true ELSE exact, so it equals the exact check
+on every string exactly when the fast regex accepts nothing the exact check
+rejects. Both are evaluated by Spark's (Java) regex engine, as in the
+engine."""
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from json_schema_spark.constraints.formats import (
+    RX_URI_FAST,
+    _uri,
+    _uri_exact,
+)
+
+LABEL_63 = "a" + "b" * 61 + "c"
+
+EDGE_CASES = [
+    # label and authority lengths around the 63-character bounds
+    f"http://{LABEL_63}/p",
+    f"http://{LABEL_63}d/p",
+    "http://" + "a" * 31 + "." + "b" * 31 + "/",            # authority 63
+    "http://" + "a" * 31 + "." + "b" * 32 + "/",            # authority 64
+    "http://" + "a" * 28 + "." + "b" * 31 + ":8080/",       # 63 with port
+    "http://" + "a" * 29 + "." + "b" * 31 + ":8080/",       # 64 with port
+    # leading and trailing '-'
+    "http://-a.example/", "http://a-.example/", "http://a.example-/",
+    "http://a--b.example/", "http://a.-example/",
+    # ports
+    "http://a.example:80/x", "http://a.example:/x", "http://a.example:8a/",
+    "http://a.example:80:90/",
+    # percent escapes
+    "http://a.example/%zz", "http://a.example/%4F", "http://a.example/%4",
+    "http://a.example/?q=%zz", "http://a.example/#%zz",
+    "http://a.example/#%4F",
+    # query and fragment
+    "http://a.example?x=1", "http://a.example/p?x=1&y=/?#f",
+    "http://a.example/p#f?g", "http://a.example/p#f#g", "http://a.example#",
+    "http://a.example/p?<bad>", "http://a.example/p?x y",
+    # userinfo
+    "http://user@a.example/", "http://u:p@a.example/", "http://@a.example/",
+    "http://a@b@c.example/",
+    # trailing line terminators and spaces
+    "http://a.example/\n", "http://a.example\n", "http://a.example/p#f\n",
+    "http://a.example/ ", "http://a.example/\r\n",
+    # hosts that are not plain labels
+    "http://a.example./", "http://a..example/", "http:///p", "http://",
+    "http://1.2.3.4/", "http://[::1]/", "http://a_b.example/",
+    "https://bad_host!3.example/d1/page/7",
+    # schemes
+    "HTTP://a.example/", "ftp://a.example/", "https:a.example", "http:/a",
+    "www.host7.example/d1/page/7", "https://www.host7.example/d1/page/7",
+]
+
+
+def _verdicts(spark, urls):
+    df = spark.createDataFrame([(u,) for u in urls], "u string")
+    u = F.col("u")
+    return [(r["u"], r["fast"], r["exact"], r["combined"]) for r in df.select(
+        "u", u.rlike(RX_URI_FAST).alias("fast"),
+        F.coalesce(_uri_exact(u), F.lit(False)).alias("exact"),
+        F.coalesce(_uri(u), F.lit(False)).alias("combined")).collect()]
+
+
+def _unsound(rows):
+    return [(u, exact) for u, fast, exact, combined in rows
+            if (fast and not exact) or combined != exact]
+
+
+def test_fast_uri_edge_cases(spark):
+    rows = _verdicts(spark, EDGE_CASES)
+    assert _unsound(rows) == []
+    fast = {u for u, f, _, _ in rows if f}
+    # the fast path does take the plain urls, so it is not dead code
+    assert {f"http://{LABEL_63}/p", "https://www.host7.example/d1/page/7",
+            "http://a.example/p?x=1&y=/?#f", "http://a.example:80/x",
+            "http://a.example/%4F"} <= fast
+    # ...and leaves the rest to the exact check
+    assert not fast & {f"http://{LABEL_63}d/p", "http://a.example/\n",
+                       "http://user@a.example/", "http://a-.example/",
+                       "http://a.example/%zz", "http://a.example/p#f?g"}
+
+
+_ALNUM = "abcXYZ019"
+# labels of 58-66 characters straddle the 63-character bounds
+_label = st.one_of(st.text(_ALNUM + "-_", max_size=20),
+                   st.integers(58, 66).map(lambda n: "a" + "b" * (n - 1)))
+_host = st.one_of(
+    st.lists(_label, min_size=1, max_size=4).map(".".join),
+    st.lists(_label, min_size=1, max_size=3)
+    .map(lambda ls: ".".join(ls) + "."),
+    st.just("1.2.3.4"), st.just("[::1]"))
+_piece = st.text(_ALNUM + "-._~!$&'()*+,;=:@/%4Fz?#[] <>\n", max_size=20)
+_url = st.builds(
+    lambda scheme, userinfo, host, port, path, query, frag, tail:
+        f"{scheme}://{userinfo}{host}{port}{path}{query}{frag}{tail}",
+    st.sampled_from(["http", "https", "HTTP", "ftp"]),
+    st.sampled_from(["", "", "", "user@", "u:p@", "@"]),
+    _host,
+    st.one_of(st.just(""), st.integers(0, 99999).map(lambda p: f":{p}"),
+              st.just(":")),
+    st.one_of(st.just(""), _piece.map(lambda s: "/" + s)),
+    st.one_of(st.just(""), _piece.map(lambda s: "?" + s)),
+    st.one_of(st.just(""), _piece.map(lambda s: "#" + s)),
+    st.sampled_from(["", "", "", "\n", " ", "\r\n"]),
+)
+
+
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.data_too_large])
+@given(st.lists(_url, min_size=50, max_size=150))
+def test_fast_uri_accepts_nothing_exact_rejects(spark, urls):
+    assert _unsound(_verdicts(spark, urls)) == []

@@ -206,6 +206,31 @@ def test_manifest_input_files_respect_partition_filter(spark, tmp_path):
         assert all(f"day={part}" in f for f in files), (part, files)
 
 
+def test_checkpoint_verdict_counts_dataset_level_rows(spark, tmp_path):
+    """A duplicated url fails the partition: the verdict and the manifest
+    count the written url.unique rows, not only the row-level ones."""
+    from json_schema_spark import ConstraintSet
+    from json_schema_spark.ops.checkpoint import run_validation
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("u1", "d1", 1), ("u1", "d1", 2), ("u2", "d1", 3)],
+        "url string, day string, v long").write.partitionBy("day").parquet(src)
+    cset = ConstraintSet(name="t", columns={"v": {"minimum": 0}},
+                         unique=["url"])
+    stats = run_validation(spark, spark.read.parquet(src), cset,
+                           str(tmp_path / "out"), partition_col="day")
+    manifest = stats.manifests["d1"]
+    assert manifest["metrics"] == {
+        "rows_total": 3, "rows_failed": 0, "violations_total": 2,
+        "violations_by_constraint": {"v.minimum": 0, "url.unique": 2}}
+    verdicts = spark.read.parquet(manifest["outputs"]["verdicts"]).collect()
+    assert [tuple(r) for r in verdicts] == [("d1", 3, 0, 2, False)]
+    written = spark.read.parquet(manifest["outputs"]["violations"])
+    assert sorted(tuple(r) for r in written.collect()) == [
+        ("u1", "url.unique", "u1"), ("u1", "url.unique", "u1")]
+
+
 def test_variant_fast_path_works_on_streams(spark, tmp_path):
     """validate_json_variant is a pure projection, so it must compose
     with Structured Streaming unchanged (stateless, append-safe)."""

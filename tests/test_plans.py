@@ -5,6 +5,8 @@ a production run."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,19 +53,29 @@ def test_validation_is_pure_codegen(docs):
                    "MapInPandas"):
         assert marker not in plan, f"Python on the hot path: {marker}"
     # codegen stages render as '*(n)' in executedPlan().toString()
-    # (the higher-order filter/array projection itself doesn't codegen,
-    # but the scan and output stages must)
     assert "*(1)" in plan
+    assert _projects_outside_codegen(plan) == []
+
+
+def _projects_outside_codegen(plan: str) -> list[str]:
+    """Project nodes not drawn inside a '*(n)' whole-stage codegen stage."""
+    return re.findall(r"^[\s:|+-]*Project \[.*$", plan, re.MULTILINE)
 
 
 def test_webtext_validation_pure_codegen(spark):
     from json_schema_spark.flagship import validate_webtext
     from json_schema_spark.sources.webtext import generate_webtext
 
-    res = validate_webtext(generate_webtext(spark, 1000))
-    plan = _plan(res.violations())
+    out = validate_webtext(generate_webtext(spark, 1000)).violations()
+    # AQE plans codegen per query stage: read the final plan after a run
+    out.collect()
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan, f"Python on the hot path: {marker}"
+    # the row-level validation projection stays inside codegen
+    final = plan.split("+- == Initial Plan ==")[0]
+    assert _projects_outside_codegen(final) == []
 
 
 def test_referential_dim_join_broadcasts(spark, docs):

@@ -107,6 +107,7 @@ def main() -> None:
     # unit tests.
     from pyspark.sql import functions as F
 
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.sources.webtext import generate_skewed_corpus
     from json_schema_spark.textops import dedup as _dd
     from json_schema_spark.textops.sampling import cap_per_group
@@ -120,12 +121,12 @@ def main() -> None:
         t0 = time.perf_counter()
         _run(_dd.near_duplicates(skew, threshold=0.8,
                                  max_bucket_size=50))
-        _dd.release_caches()
+        release_caches()
         _run(cap_per_group(skew, "host", 5, [F.col("doc_id")],
                            salt_shards=16, id_col="doc_id"))
         _run(semantic_dedup(skew, id_col="doc_id", vec_col="embedding",
                             max_cluster_size=500))
-        _dd.release_caches()
+        release_caches()
         skew_sec = min(skew_sec, time.perf_counter() - t0)
     timings["skew_stress"] = round(skew_sec, 4)
     skew.unpersist()

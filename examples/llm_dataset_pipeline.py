@@ -36,6 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from json_schema_spark.cache import release_caches  # noqa: E402
 from json_schema_spark.session import get_spark  # noqa: E402
 from json_schema_spark.textops import dedup  # noqa: E402
 from json_schema_spark.sources.io import (  # noqa: E402
@@ -203,7 +204,7 @@ delays = {r.host: r.crawl_delay for r in crawl_delays(robots).collect()}
 frontier = fetch_batches(hosted, per_host=50)
 n_batches = frontier.agg(F.max("batch")).first()[0] + 1
 
-dedup.release_caches()  # pair-finder intermediates
+release_caches()  # pair-finder intermediates
 
 print(f"input docs:          {n0}")
 print(f"structurally valid:  {n1}")

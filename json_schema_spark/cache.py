@@ -19,7 +19,10 @@ _ACTIVE_CACHES: list[DataFrame] = []
 
 
 def register_cache(df: DataFrame) -> DataFrame:
-    df.persist()
+    """Persist ``df`` (unless it already is) and hold it for
+    release_caches()."""
+    if not df.is_cached:
+        df.persist()
     _ACTIVE_CACHES.append(df)
     return df
 

@@ -1,15 +1,13 @@
 """Dataset-level uniqueness — the scale generalization of `uniqueItems`
-(/root/reference/src/Validator.php:1383-1410 checks one in-memory array; here
-the "array" is 10^12 urls).
+(the PHP reference validator checks one in-memory array; here the
+"array" is 10^12 urls).
 
 Skew story (north_rule: "partitioning / shuffle / skew handled explicitly"):
 
 1. The count aggregation uses Spark's partial (map-side) aggregation — each
    task emits at most one (key, partial_count) row per distinct key, so even
    a key owning 10% of the table reaches the reducer as ≤ num_tasks rows,
-   not 10^11 rows. This is the two-phase aggregation; HashAggregate does it
-   automatically and `explicit_two_phase` below materializes the same plan
-   with an explicit salt for engines/readers that want it visible.
+   not 10^11 rows. HashAggregate does this two-phase aggregation itself.
 2. When the key is the id column, each duplicated key's violation rows are
    the key repeated dup_count times, so there is no join back. For any
    other key, AQE skew-join splitting (enabled in the session defaults)
@@ -22,30 +20,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(df: DataFrame, key_cols: list[str],
-                   salt_buckets: int | None = None) -> DataFrame:
-    """Keys appearing more than once → (key..., dup_count).
-
-    With ``salt_buckets`` the two-phase (salted partial → final) aggregation
-    is written out explicitly: phase 1 groups by (key, salt) — hot keys are
-    spread over ``salt_buckets`` reducers — phase 2 sums the partials by key.
-    Without it, Spark's own partial aggregation achieves the same data
-    movement for count(); the explicit form exists for skew-sensitive aggs
-    and for auditability of the plan.
-    """
-    if salt_buckets:
-        salted = df.select(*key_cols).withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(F.monotonically_increasing_id()),
-                   F.lit(salt_buckets)))
-        partial = (salted.groupBy(*key_cols, "_salt")
-                   .agg(F.count(F.lit(1)).alias("_partial")))
-        counts = (partial.groupBy(*key_cols)
-                  .agg(F.sum("_partial").alias("dup_count")))
-    else:
-        counts = (df.groupBy(*key_cols)
-                  .agg(F.count(F.lit(1)).alias("dup_count")))
-    return counts.filter(F.col("dup_count") > 1)
+def duplicate_keys(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Keys appearing more than once → (key..., dup_count)."""
+    return (df.groupBy(*key_cols)
+            .agg(F.count(F.lit(1)).alias("dup_count"))
+            .filter(F.col("dup_count") > 1))
 
 
 def uniqueness_violations(df: DataFrame, key_cols: list[str],

@@ -141,23 +141,55 @@ class ValidationResult:
         return self.annotated.filter(F.col(OK_COL)).select(*base)
 
     def partition_verdicts(self, by: Column | str | None = None) -> DataFrame:
-        """Per-partition pass/fail — the north_rule's per-partition verdict.
+        """Per-partition pass/fail — the north_rule's per-partition verdict,
+        with the columns of ops.checkpoint.VERDICT_SCHEMA: n_failed_rows
+        counts rows failing a row-level constraint, n_violations every
+        violations() row, and ``pass`` is n_violations == 0.
 
         ``by`` defaults to the physical partition id; pass e.g.
         ``F.to_date("warc_ts")`` for logical (Iceberg-style) partitions.
+        A dataset-level violation names a row by its id only; it counts
+        in that row's partition. When one id names several rows, its
+        violations are dealt out over them in partition-key order.
         """
-        key = F.spark_partition_id().alias("partition_key") if by is None \
-            else (F.col(by) if isinstance(by, str) else by).alias("partition_key")
-        return (
-            self.annotated
-            .groupBy(key)
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.col(OK_COL)).cast("long")).alias("n_failed_rows"),
-                F.sum(_violation_count(self.constraints).cast("long"))
-                 .alias("n_violations"))
-            .withColumn("pass", F.col("n_failed_rows") == 0)
-        )
+        key = F.spark_partition_id() if by is None \
+            else (F.col(by) if isinstance(by, str) else by)
+        counts = self.annotated.select(
+            key.alias("partition_key"),
+            F.lit(1).alias("n_rows"),
+            (~F.col(OK_COL)).cast("long").alias("n_failed_rows"),
+            _violation_count(self.constraints).cast("long")
+            .alias("n_violations"))
+        if self._dataset_violations is not None:
+            counts = counts.unionByName(self._dataset_counts(key))
+        return (counts.groupBy("partition_key")
+                .agg(*[F.sum(c).cast("long").alias(c) for c in
+                       ("n_rows", "n_failed_rows", "n_violations")])
+                .withColumn("pass", F.col("n_violations") == 0))
+
+    def _dataset_counts(self, key: Column) -> DataFrame:
+        """Dataset-level violation rows per partition key, in the shape
+        of partition_verdicts' per-row counts. The ``n`` violations of
+        an id go to its ``m`` rows in key order: row ``r`` (from 0)
+        takes n // m, plus one if r < n % m."""
+        from pyspark.sql import Window
+
+        per_id = self._dataset_violations.groupBy(
+            F.col(self.id_col).alias("_vid")).agg(
+                F.count(F.lit(1)).alias("_n"))
+        named = (self.annotated
+                 .select(key.alias("partition_key"),
+                         F.col(self.id_col).cast("string").alias("_id"))
+                 .join(per_id, F.col("_id").eqNullSafe(F.col("_vid"))))
+        n = F.col("_n")
+        m = F.count(F.lit(1)).over(Window.partitionBy("_id"))
+        r = F.row_number().over(
+            Window.partitionBy("_id").orderBy("partition_key")) - 1
+        share = F.floor(n / m) + (r < n % m).cast("long")
+        return named.select(
+            "partition_key", F.lit(0).alias("n_rows"),
+            F.lit(0).cast("long").alias("n_failed_rows"),
+            share.cast("long").alias("n_violations"))
 
     def constraint_summary(self) -> DataFrame:
         """Violation count per constraint_id (one shuffle over the tiny
@@ -231,14 +263,13 @@ def validate(
     df: DataFrame,
     cset: ConstraintSet,
     id_col: str = "url",
-    with_defaults: bool = True,
     dataset_checks: bool = True,
     observe: bool = True,
 ) -> ValidationResult:
-    """Compile the ConstraintSet against ``df``'s schema and build the
-    annotated DataFrame. Pure transformation — no action is triggered."""
-    if with_defaults:
-        df = apply_defaults(df, cset)
+    """Apply the schema defaults, compile the ConstraintSet against
+    ``df``'s schema and build the annotated DataFrame. Pure
+    transformation — no action is triggered."""
+    df = apply_defaults(df, cset)
 
     compiled = compile_constraints(cset, df.schema)
     if dataset_checks:

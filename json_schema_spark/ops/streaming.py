@@ -146,105 +146,49 @@ def start_violation_sink(stream_df: DataFrame, cset: ConstraintSet,
     return writer.start()
 
 
-class StreamingNovelFilter:
+class ShardedNovelFilter:
     """Cross-micro-batch incremental dedup: a foreachBatch processor
-    that keeps a Bloom filter of every key seen in PRIOR batches on the
-    driver (~1 MB at the default 8 Mbit), probes each new batch against
-    it, hands the definitely-novel rows to ``sink``, then folds the
-    batch's keys into the filter.
+    that emits each key at most once over the stream's lifetime. The
+    filter state is a sharded (shard, bloom) PARQUET TABLE under
+    ``state_dir`` — built, probed, merged and stored entirely on
+    executors/disk, never materialized on the driver — so membership
+    state scales to whatever n_shards x bits_per_shard the cluster's
+    storage holds (see textops.dedup's sharding sizing rule).
 
-    Semantics: a key is emitted at most once across the stream's
-    lifetime (no false negatives in the filter means no duplicate
-    emissions); at the configured false-positive rate a genuinely novel
-    key may be mistaken for seen and dropped — this is a PRE-FILTER for
-    volume reduction (route `_maybe_seen` rows to exact reconciliation
-    if completeness matters). The filter state lives on the driver, so
-    restarts need re-priming: pass a `bloom` built over the already-
-    emitted corpus (build_bloom), mirroring how the batch seen_filter
-    primes from a reference table. All per-row work (md5 positions,
-    bitmap scatter/probe) runs on executors via the same vectorized
-    build/probe as the batch path; only the O(n_bits/8) byte OR runs
-    per batch on the driver.
+    Per batch: probe the batch against the newest complete epoch
+    BELOW ``batch_id`` (cogrouped applyInPandas — one task per touched
+    shard), hand the definitely-novel rows to ``sink``, then OR-merge
+    the batch's shard bitmaps into ``state_dir/epoch=<batch_id>``, and
+    delete the epochs below it other than the one probed. State is
+    versioned by batch id the way Spark's own state store is, so the
+    processor is replay-safe: foreachBatch delivers at least once,
+    and a batch re-run after its state write (crash before Spark's
+    commit) probes the same prior epoch and hands the sink the same
+    rows. An epoch
+    counts once its parquet ``_SUCCESS`` marker exists; a torn write
+    is ignored and overwritten by the replay. Restart recovery is
+    automatic, as long as ``state_dir`` stays with the query's
+    checkpoint (batch ids must keep increasing).
+
+    No false negatives: a key never re-emits. False positives at the
+    configured rate drop novel keys — a volume pre-filter, not an
+    exact dedup. Within-batch duplicates all pass (the probe sees only
+    prior batches): dropDuplicates upstream or in the sink if
+    per-batch uniqueness matters.
 
     Usage::
 
-        f = StreamingNovelFilter(sink=lambda df, bid: df.write...)
+        f = ShardedNovelFilter(state, sink=lambda df, bid: df.write...)
         q = (stream.writeStream.foreachBatch(f)
              .option("checkpointLocation", ckpt).start())
-    """
-
-    def __init__(self, key_col: str = "digest", n_bits: int = 1 << 23,
-                 n_hashes: int = 3, sink=None,
-                 bloom: bytes | None = None):
-        import numpy as np
-
-        self.key_col = key_col
-        self.n_bits = n_bits
-        self.n_hashes = n_hashes
-        self.sink = sink
-        if bloom is not None and len(bloom) != n_bits // 8:
-            raise ValueError(
-                f"priming bloom is {len(bloom)} bytes but n_bits="
-                f"{n_bits} needs {n_bits // 8} — the filter must be "
-                "re-primed with a bloom built at the same n_bits "
-                "(mismatched sizes probe wrong bit positions)")
-        self.bits = (np.frombuffer(bloom, dtype=np.uint8).copy()
-                     if bloom is not None
-                     else np.zeros(n_bits // 8, dtype=np.uint8))
-        self.novel_count = 0
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import numpy as np
-
-        from json_schema_spark.textops.dedup import bloom_probe, build_bloom
-
-        novel = (bloom_probe(batch_df, self.bits.tobytes(), self.key_col,
-                             self.n_bits, self.n_hashes)
-                 .filter(~F.col("_maybe_seen")).drop("_maybe_seen"))
-        # the sink must consume novel BEFORE the filter absorbs the
-        # batch (probe uses the pre-batch bitmap; within-batch
-        # duplicates therefore all pass — dropDuplicates upstream or in
-        # the sink if per-batch uniqueness matters)
-        if self.sink is not None:
-            self.sink(novel, batch_id)
-        else:
-            self.novel_count += novel.count()
-        self.bits |= np.frombuffer(
-            build_bloom(batch_df, self.key_col, self.n_bits,
-                        self.n_hashes), dtype=np.uint8)
-
-
-class ShardedNovelFilter:
-    """Web-scale cross-batch incremental dedup: the sharded-bloom
-    analog of StreamingNovelFilter. The filter state is a (shard,
-    bloom) PARQUET TABLE under ``state_dir`` — built, probed, merged,
-    and stored entirely on executors/disk, never materialized on the
-    driver — so membership state scales past the single-bitmap
-    driver cap (~10^9 keys) to whatever n_shards x bits_per_shard the
-    cluster's storage holds (see textops.dedup's sharding sizing
-    rule).
-
-    Per batch: probe the batch against the current state epoch
-    (cogrouped applyInPandas — one task per touched shard), hand the
-    definitely-novel rows to ``sink``, then OR-merge the batch's shard
-    bitmaps into a NEW state epoch directory (write-then-promote:
-    ``state_dir/epoch=N`` is only adopted after its write completes,
-    so a mid-write crash leaves the previous epoch intact; once the
-    new epoch is adopted the superseded one is deleted — state on
-    disk stays ONE filter copy, not one per batch). Restart
-    recovery is automatic — the newest complete epoch on disk primes
-    the filter, mirroring how Spark's own streaming state store
-    versions per batch. Same semantics as StreamingNovelFilter: no
-    false negatives (a key never re-emits), false positives at the
-    configured rate drop novel keys — a volume pre-filter, not an
-    exact dedup.
     """
 
     def __init__(self, state_dir: str, key_col: str = "digest",
                  n_shards: int = 16, bits_per_shard: int = 1 << 23,
                  n_hashes: int = 3, sink=None):
         import os
-        import re
+
+        from json_schema_spark.textops.dedup import BLOOM_SCHEME
 
         self.state_dir = state_dir
         self.key_col = key_col
@@ -253,41 +197,45 @@ class ShardedNovelFilter:
         self.n_hashes = n_hashes
         self.sink = sink
         self.novel_count = 0
-        self._epoch_re = re.compile(r"^epoch=(\d+)$")
         os.makedirs(state_dir, exist_ok=True)
-        # refuse state from a different bit-position scheme: bitmaps
-        # are length-compatible across schemes, so without this stamp
-        # a restart would probe stale bits silently (re-emitting seen
-        # keys AND dropping novel ones)
-        from json_schema_spark.textops.dedup import BLOOM_SCHEME
-
+        # refuse state built under another position scheme or layout:
+        # the bitmaps would be read as if they were this filter's, and
+        # probing the wrong bits silently re-emits seen keys AND drops
+        # novel ones
+        scheme = (f"{BLOOM_SCHEME} n_shards={n_shards} "
+                  f"bits_per_shard={bits_per_shard} n_hashes={n_hashes}")
         marker = os.path.join(state_dir, "_scheme.txt")
         if os.path.exists(marker):
             with open(marker) as fh:
                 found = fh.read().strip()
-            if found != BLOOM_SCHEME:
+            if found != scheme:
                 raise ValueError(
                     f"state_dir was written under bloom scheme "
-                    f"{found!r} but the engine now uses "
-                    f"{BLOOM_SCHEME!r} — stale bitmaps probe "
-                    "uselessly; start from a fresh state_dir")
+                    f"{found!r} but this filter uses {scheme!r} — its "
+                    "bitmaps would probe the wrong bits; open it with "
+                    "the same settings or start from a fresh state_dir")
         else:
             with open(marker, "w") as fh:
-                fh.write(BLOOM_SCHEME)
+                fh.write(scheme)
         self.current_epoch = self._latest_epoch()
 
-    def _latest_epoch(self) -> int | None:
+    def _epochs(self) -> dict[int, bool]:
+        """Epoch number -> complete (its parquet _SUCCESS exists)."""
         import os
+        import re
 
-        epochs = []
+        out = {}
         for name in os.listdir(self.state_dir):
-            m = self._epoch_re.match(name)
-            # _SUCCESS marks a complete parquet write — a torn epoch
-            # from a mid-write crash is ignored (and superseded)
-            if m and os.path.exists(
-                    os.path.join(self.state_dir, name, "_SUCCESS")):
-                epochs.append(int(m.group(1)))
-        return max(epochs) if epochs else None
+            m = re.fullmatch(r"epoch=(\d+)", name)
+            if m:
+                out[int(m.group(1))] = os.path.exists(
+                    os.path.join(self.state_dir, name, "_SUCCESS"))
+        return out
+
+    def _latest_epoch(self, below: int | None = None) -> int | None:
+        done = [e for e, ok in self._epochs().items()
+                if ok and (below is None or e < below)]
+        return max(done, default=None)
 
     def _epoch_path(self, epoch: int) -> str:
         import os
@@ -295,15 +243,17 @@ class ShardedNovelFilter:
         return os.path.join(self.state_dir, f"epoch={epoch}")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        import shutil
+
         from json_schema_spark.textops.dedup import (
             bloom_probe_shards, build_bloom_shards, merge_bloom_shards)
 
         spark = batch_df.sparkSession
+        prior = self._latest_epoch(below=batch_id)
         batch_df = batch_df.persist()
         try:
-            if self.current_epoch is not None:
-                state = spark.read.parquet(
-                    self._epoch_path(self.current_epoch))
+            if prior is not None:
+                state = spark.read.parquet(self._epoch_path(prior))
                 novel = (bloom_probe_shards(
                     batch_df, state, self.key_col, self.n_shards,
                     self.bits_per_shard, self.n_hashes)
@@ -321,26 +271,22 @@ class ShardedNovelFilter:
                                        self.n_hashes)
             merged = (merge_bloom_shards(state, fresh)
                       if state is not None else fresh)
-            next_epoch = (self.current_epoch or 0) + 1
             merged.write.mode("overwrite").parquet(
-                self._epoch_path(next_epoch))
-            prev = self.current_epoch
-            self.current_epoch = next_epoch
+                self._epoch_path(batch_id))
+            self.current_epoch = batch_id
             # each epoch is a FULL filter copy (n_shards x
-            # bits_per_shard/8 bytes) — drop the superseded one or the
-            # state store grows by one copy per micro-batch
-            if prev is not None:
-                import shutil
-
-                shutil.rmtree(self._epoch_path(prev),
-                              ignore_errors=True)
+            # bits_per_shard/8 bytes): keep the one a replay of this
+            # batch probes and drop the older ones
+            for e in self._epochs():
+                if e < batch_id and e != prior:
+                    shutil.rmtree(self._epoch_path(e), ignore_errors=True)
         finally:
             batch_df.unpersist()
 
 
 class StreamingNearNovelFilter:
     """Cross-batch NEAR-dup novelty on the live ingest path: the
-    MinHash-LSH analog of the Bloom novel filters — "have we seen
+    MinHash-LSH analog of ShardedNovelFilter — "have we seen
     something LIKE this" instead of "this exact key". State is the
     persistable LSH bucket index (textops.dedup.build_minhash_index
     rows) under ``index_dir``, APPEND-ONLY parquet: bucket rows are
@@ -353,7 +299,7 @@ class StreamingNearNovelFilter:
     Per batch: probe against the index so far (candidates only — LSH
     recall applies: a near-dup that shares no band bucket re-emits),
     hand rows with no candidate to ``sink``, append their buckets.
-    Caveats, shared with the Bloom filters: within-batch near-dups
+    Caveats: as with ShardedNovelFilter, within-batch near-dups
     all pass (the probe sees only prior batches — near_dedup_corpus
     the batch first if that matters); a crash between sink and append
     re-runs the batch (the usual foreachBatch at-least-once contract;

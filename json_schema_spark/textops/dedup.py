@@ -31,12 +31,8 @@ DEFAULT_BANDS = 4  # 4 bands x 4 rows at the default signature size
 # Pair-finders persist their self-join inputs; the shared registry
 # (json_schema_spark.cache) holds them and the CALLER releases after
 # the consuming action — see that module's docstring for the ownership
-# contract. Re-exported here for backward compatibility.
-from json_schema_spark.cache import (  # noqa: E402
-    _ACTIVE_CACHES,
-    register_cache as _register_cache,
-    release_caches,
-)
+# contract.
+from json_schema_spark.cache import register_cache  # noqa: E402
 from json_schema_spark.plan import fan_out  # noqa: E402
 
 
@@ -253,7 +249,7 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
     # persist: the bucket self-join would otherwise recompute the whole
     # shingle-explode + min-agg signature pipeline for BOTH join sides;
     # the bucket table is (id, band_idx, 32-hex) x bands — tiny
-    buckets = _register_cache(sig.select(
+    buckets = register_cache(sig.select(
         "_id", F.posexplode(lsh_band_hashes(F.col("_sig"), bands,
                                             num_hashes))
         .alias("band_idx", "band_hash")))
@@ -378,7 +374,7 @@ def near_duplicates(df: DataFrame, text_col: str = "text",
     # it for every candidate pair and every jaccard sub-term; persisted
     # because it joins on BOTH pair sides (two scans of the same plan
     # otherwise; MEMORY_AND_DISK spills if the corpus outgrows memory)
-    sh = _register_cache(
+    sh = register_cache(
         shingle_rows(df, text_col, id_col, k)
         .groupBy("_id")
         .agg(F.collect_set("s").alias("_shingles")))
@@ -491,7 +487,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     # sides — three full recomputes of the posexplode + window-min
     # winnowing pipeline otherwise ((id, 16-hex) rows, far smaller than
     # the text they summarize; MEMORY_AND_DISK spills beyond memory)
-    fp = _register_cache(
+    fp = register_cache(
         winnowing_fingerprint_rows(df, text_col, id_col, k, w)
         if fingerprints is None else fingerprints)
     if max_doc_freq:
@@ -545,7 +541,7 @@ def contamination_pairs(df: DataFrame, eval_df: DataFrame,
                          f"(both {id_col!r})")
     cfp = (winnowing_fingerprint_rows(df, text_col, id_col, k, w)
            if corpus_fingerprints is None else corpus_fingerprints)
-    efp = _register_cache(
+    efp = register_cache(
         winnowing_fingerprint_rows(eval_df, eval_text_col,
                                    eval_id_col, k, w)
         .select(F.col("_id").alias("_eid"), "fp"))
@@ -664,7 +660,7 @@ def corpus_overlap(df: DataFrame, group_col: str = "lang",
     # signature table is n_groups rows but its lineage is the full
     # corpus shingle scan — persist so the self-join below doesn't
     # recompute both branches from the raw text
-    sigs = _register_cache(sh.groupBy("_g").agg(*mins))
+    sigs = register_cache(sh.groupBy("_g").agg(*mins))
     a, b = sigs.alias("a"), sigs.alias("b")
     matches = sum(
         F.when(F.col(f"a._h{i}") == F.col(f"b._h{i}"), 1).otherwise(0)
@@ -696,52 +692,12 @@ def _token_bit_vote(h_lo: Column, h_hi: Column, j: int) -> Column:
     return F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1))
 
 
-def simhash(col: Column, bits: int = 32) -> Column:
-    """SimHash over whitespace tokens: per-token 32-bit hash from the md5
-    prefix, +/-1 vote per bit position, sign of the vote total sets the
-    output bit. Pure expression — one aggregate() fold per row.
-
-    Capped at 32 bits: the bit position is a lambda variable here, so
-    extraction must go through double-precision pow (shiftright needs a
-    literal count), which is only exact below 2^53, and the 2^j output
-    weights overflow under ANSI casts at j=63. For 33-64 bit
-    fingerprints use `simhash_table` (literal per-bit shifts)."""
-    if not 1 <= bits <= 32:
-        raise ValueError("simhash supports 1-32 bits; use simhash_table "
-                         "for up to 64")
-    toks = tokens(col)
-    positions = F.sequence(F.lit(0), F.lit(bits - 1))
-
-    def token_votes(t: Column) -> Column:
-        h = F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint")
-        # bit j of h, via division (shiftright needs a literal count);
-        # h < 2^32 so double-precision pow is exact
-        return F.transform(
-            positions,
-            lambda j: F.when(
-                F.floor(h / F.pow(F.lit(2.0), j)).cast("bigint") % 2 == 1,
-                F.lit(1)).otherwise(F.lit(-1)))
-
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, t: F.zip_with(acc, token_votes(t),
-                                  lambda x, y: x + y.cast("long")))
-    return F.aggregate(
-        F.zip_with(votes, positions,
-                   lambda v, j: F.when(
-                       v > 0, F.pow(F.lit(2.0), j).cast("bigint"))
-                   .otherwise(F.lit(0).cast("bigint"))),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x)
-
-
 def simhash_table(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", bits: int = 32) -> DataFrame:
     """(id, simhash) for non-empty documents, token-at-a-time: explode
-    tokens, hash each ONCE, aggregate the per-bit votes as sums (the
-    pure-expression `simhash` re-derives the token hash per bit position
-    — no CSE inside lambdas — costing bits x the md5 work).
+    tokens, hash each ONCE, aggregate the per-bit votes as sums (a
+    per-row fold would re-derive the token hash per bit position — no
+    CSE inside lambdas — costing bits x the md5 work).
 
     Supports 1-64 bits. The token hash is assembled from two 32-bit md5
     halves (hex chars 1-8 and 9-16); for bits <= 32 only the first half
@@ -824,7 +780,7 @@ def hamming_pairs(fp_df: DataFrame, fp_col: str = "simhash",
     # its input otherwise (no ReuseExchange across join sides), doubling
     # the fingerprint derivation. The table is (id, int64) — ~16
     # bytes/doc — so it stays cacheable at any corpus size.
-    sh = _register_cache(fp_df.select(F.col(id_col).alias("_id"),
+    sh = register_cache(fp_df.select(F.col(id_col).alias("_id"),
                                       F.col(fp_col).alias("_fp"),
                                       *[F.col(c) for c in groups]))
 
@@ -1032,7 +988,7 @@ def dedup_groups(pairs: DataFrame, id_a: str = "id_a",
         edges.unpersist()
         if driver_threshold:
             sel.unpersist()
-        _ACTIVE_CACHES.append(labels)  # released via release_caches()
+        register_cache(labels)  # caller releases via release_caches()
 
 
 def near_dedup_corpus(df: DataFrame, text_col: str = "text",
@@ -1105,10 +1061,10 @@ def near_dedup_keep_best(df: DataFrame, text_col: str = "text",
     return df.join(losers, id_col, "left_anti")
 
 
-# Version marker for PERSISTED bloom state (ShardedNovelFilter epochs,
-# caller-saved priming bitmaps): bits set under a different position
-# scheme probe uselessly — same byte length, silent corruption. Bump
-# on any change to _bloom_positions.
+# Version marker for PERSISTED bloom state (ShardedNovelFilter epochs):
+# bits set under a different position scheme probe uselessly — same
+# byte length, silent corruption. Bump on any change to
+# _bloom_positions.
 BLOOM_SCHEME = "md5-km-v2"
 
 
@@ -1159,124 +1115,21 @@ def _bloom_position_cols(key: Column, n_hashes: int,
             for i in range(n_hashes)]
 
 
-def build_bloom(df: DataFrame, key_col: str = "digest",
-                n_bits: int = 1 << 23, n_hashes: int = 3) -> bytes:
-    """Mergeable Bloom filter over a key column — the t-digest pattern:
-    each partition builds its own bit array, the driver ORs the
-    per-partition arrays (bytes, not data). Positions are computed as
-    Spark md5 expressions (JVM, codegen); the mapInPandas stage only
-    scatters them into the bitmap with numpy (np.bitwise_or.at), and
-    the driver merge is one numpy OR per partition — no per-byte or
-    per-key Python loops anywhere. Deterministic positions, so filters
-    built anywhere agree. Default 8 Mbit ~ 1 MB; size n_bits ~ 10x
-    expected distinct keys for ~2-3%% fpp with 3 hashes."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    def per_partition(batches):
-        import numpy as np
-        import pandas as pd
-
-        bits = np.zeros(n_bits // 8, dtype=np.uint8)
-        for pdf in batches:
-            for col in pdf.columns:
-                p = pdf[col].to_numpy(dtype="float64", na_value=np.nan)
-                p = p[~np.isnan(p)].astype(np.int64)
-                np.bitwise_or.at(
-                    bits, p >> 3,
-                    (np.uint8(1) << (p & 7).astype(np.uint8)))
-        yield pd.DataFrame({"bloom": [bits.tobytes()]})
-
-    parts = (df.select(*_bloom_position_cols(F.col(key_col), n_hashes,
-                                             n_bits))
-             .mapInPandas(per_partition,
-                          T.StructType([T.StructField("bloom",
-                                                      T.BinaryType())]))
-             .collect())
-    merged = np.zeros(n_bits // 8, dtype=np.uint8)
-    for row in parts:
-        merged |= np.frombuffer(row["bloom"], dtype=np.uint8)
-    return merged.tobytes()
-
-
-def bloom_probe(candidates: DataFrame, bloom: bytes,
-                key_col: str = "digest",
-                n_bits: int = 1 << 23, n_hashes: int = 3) -> DataFrame:
-    """Tag each candidate row with `_maybe_seen` = membership of its
-    key in a pre-built Bloom filter (see build_bloom). Positions come
-    from the same Spark md5 expressions as the build side; the pandas
-    UDF only indexes the broadcast bitmap — one vectorized numpy
-    gather per hash, no Python hashing (the bitmap probe itself is the
-    sanctioned non-expressible step, like the t-digest sketches)."""
-    from pyspark.sql import types as T
-
-    sc = candidates.sparkSession.sparkContext
-    b_bloom = sc.broadcast(bloom)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(*pos_series):
-        import numpy as np
-        import pandas as pd
-
-        bits = np.frombuffer(b_bloom.value, dtype=np.uint8)
-        n = len(pos_series[0])
-        ok = np.ones(n, dtype=bool)
-        for s in pos_series:
-            pn = s.to_numpy(dtype="float64", na_value=np.nan)
-            valid = ~np.isnan(pn)
-            hit = np.zeros(n, dtype=bool)
-            pv = pn[valid].astype(np.int64)
-            hit[valid] = (bits[pv >> 3] >> (pv & 7).astype(np.uint8)) & 1
-            ok &= hit  # NULL key -> NULL positions -> not seen
-        return pd.Series(ok)
-
-    return candidates.withColumn(
-        "_maybe_seen",
-        probe(*_bloom_position_cols(F.col(key_col), n_hashes, n_bits)))
-
-
-def seen_filter(reference: DataFrame, candidates: DataFrame,
-                key_col: str = "digest",
-                n_bits: int = 1 << 23, n_hashes: int = 3) -> DataFrame:
-    """Incremental-dedup membership pre-filter: tag each candidate row
-    with `_maybe_seen` = whether its key is (probably) present in the
-    reference corpus.
-
-    Guarantee: NO false negatives — every key actually present in the
-    reference is flagged. False positives occur at the configured rate,
-    so `_maybe_seen` rows needing certainty must be exact-verified
-    (join) — but that join then runs on the tiny flagged subset instead
-    of the full corpus: at 10^12 candidates vs a large reference, the
-    ~1 MB bloom broadcast replaces a full shuffle join for the
-    mostly-novel majority."""
-    bloom = build_bloom(reference, key_col, n_bits, n_hashes)
-    return bloom_probe(candidates, bloom, key_col, n_bits, n_hashes)
-
-
-def novel_documents(reference: DataFrame, candidates: DataFrame,
-                    key_col: str = "digest",
-                    n_bits: int = 1 << 23) -> DataFrame:
-    """Candidates whose key is DEFINITELY absent from the reference
-    (bloom no-false-negative guarantee makes the complement exact-new);
-    the dropped remainder is the maybe-seen set for exact verification."""
-    return (seen_filter(reference, candidates, key_col, n_bits)
-            .filter(~F.col("_maybe_seen")).drop("_maybe_seen"))
-
-
 # ---------------------------------------------------------------------
-# Hash-range-SHARDED Bloom filter — the web-scale membership path.
+# Hash-range-SHARDED Bloom filter — the one membership path.
 #
-# The single-bitmap bloom above holds its whole bit array on the driver:
-# fine to ~10^9 distinct keys (~1 GB at 10 bits/key), physically
-# impossible at 10^12 (a 10 Tbit filter is ~1.25 TB of driver bytes).
-# The standard fix is hash-range sharding: shard id = hash(key) mod S,
-# one independent bitmap per shard, and the bitmaps STAY DISTRIBUTED as
-# a (shard, bloom) DataFrame — built with one groupBy(shard)
-# applyInPandas, probed with a cogrouped applyInPandas that hands each
-# task one shard's candidate rows plus that shard's single bitmap row.
-# No driver materialization, no per-row duplication of bitmap bytes
-# (a bitmap-to-candidates equi-join would copy the shard's megabytes
-# onto every row — the cogroup is what makes the probe scale).
+# A single bitmap has to sit somewhere whole: fine to ~10^9 distinct
+# keys (~1 GB at 10 bits/key), physically impossible at 10^12 (a
+# 10 Tbit filter is ~1.25 TB). Hash-range sharding splits it: shard
+# id = hash(key) mod S, one independent bitmap per shard, and the
+# bitmaps STAY DISTRIBUTED as a (shard, bloom) DataFrame — built with
+# one groupBy(shard) applyInPandas, probed with a cogrouped
+# applyInPandas that hands each task one shard's candidate rows plus
+# that shard's single bitmap row. No driver materialization, no
+# per-row duplication of bitmap bytes (a bitmap-to-candidates
+# equi-join would copy the shard's megabytes onto every row — the
+# cogroup is what makes the probe scale). n_shards=1 is the plain
+# one-bitmap filter.
 #
 # Sizing rule: bits_per_shard ~ 10x the expected distinct keys PER
 # SHARD for ~2-3% fpp at 3 hashes; pick n_shards so both (keys/S) rows
@@ -1301,12 +1154,12 @@ def build_bloom_shards(df: DataFrame, key_col: str = "digest",
                        bits_per_shard: int = 1 << 23,
                        n_hashes: int = 3) -> DataFrame:
     """Distributed sharded Bloom build: (shard, bloom) with one bitmap
-    row per shard that actually received keys. Positions are the SAME
-    Spark md5 expressions as the single-bitmap path (JVM, codegen) —
-    with n_shards=1 the output bitmap is byte-identical to
-    build_bloom's. The groupBy(shard) shuffle carries only (shard,
-    positions) longs; each task scatters one shard's positions into
-    its bitmap with numpy."""
+    row per shard that actually received keys; NULL keys are skipped.
+    Positions are Spark md5 expressions (JVM, codegen) that equal the
+    Python reference _bloom_positions — with n_shards=1 the bitmap is
+    exactly the one _bloom_positions describes. The groupBy(shard)
+    shuffle carries only (shard, positions) longs; each task scatters
+    one shard's positions into its bitmap with numpy."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1342,9 +1195,8 @@ def bloom_probe_shards(candidates: DataFrame, shards: DataFrame,
     """Probe candidates against a sharded bloom table: adds
     `_maybe_seen`. Cogrouped applyInPandas — each task receives one
     shard's candidate rows AND that shard's single bitmap row (absent
-    bitmap = shard never saw a key = definitely novel). Same
-    no-false-negative guarantee as the single-bitmap probe, at any
-    total filter size, with zero driver bytes."""
+    bitmap = shard never saw a key = definitely novel). No false
+    negatives at any total filter size, with zero driver bytes."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1411,18 +1263,26 @@ def merge_bloom_shards(a: DataFrame, b: DataFrame) -> DataFrame:
             .applyInPandas(orr, out_schema))
 
 
-def seen_filter_sharded(reference: DataFrame, candidates: DataFrame,
-                        key_col: str = "digest",
-                        n_shards: int = 16,
-                        bits_per_shard: int = 1 << 23,
-                        n_hashes: int = 3) -> DataFrame:
-    """Sharded-bloom analog of seen_filter: tag candidates with
-    `_maybe_seen` vs a reference corpus, with the filter built, held,
-    and probed entirely on executors — no driver bitmap, so the
-    reference can be arbitrarily large (scale n_shards, not the
-    driver). The bloom table is persisted for the probe and registered
-    in the shared cache registry (caller releases)."""
-    shards = _register_cache(
+def seen_filter(reference: DataFrame, candidates: DataFrame,
+                key_col: str = "digest",
+                n_shards: int = 16,
+                bits_per_shard: int = 1 << 23,
+                n_hashes: int = 3) -> DataFrame:
+    """Incremental-dedup membership pre-filter: tag each candidate row
+    with `_maybe_seen` = whether its key is (probably) present in the
+    reference corpus.
+
+    Guarantee: NO false negatives — every key actually present in the
+    reference is flagged, so the `~_maybe_seen` rows are definitely
+    new. False positives occur at the configured rate, so `_maybe_seen`
+    rows needing certainty must be exact-verified (join) — but that
+    join then runs on the small flagged subset instead of the full
+    corpus. The filter is built, held and probed entirely on
+    executors, so the reference can be arbitrarily large (scale
+    n_shards, not the driver). The bloom table is persisted for the
+    probe and registered in the shared cache registry (caller
+    releases)."""
+    shards = register_cache(
         build_bloom_shards(reference, key_col, n_shards,
                            bits_per_shard, n_hashes))
     return bloom_probe_shards(candidates, shards, key_col, n_shards,

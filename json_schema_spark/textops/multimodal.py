@@ -1539,13 +1539,13 @@ def video_near_duplicates(df: DataFrame, blob_col: str,
     broadcast-or-shuffle joins against the tiny per-video frame-count
     table. Videos with different sampled-frame counts can never
     satisfy the equality gate, so variable-length inputs are safe."""
-    from json_schema_spark.textops.dedup import (_register_cache,
-                                                 hamming_pairs)
+    from json_schema_spark.cache import register_cache
+    from json_schema_spark.textops.dedup import hamming_pairs
 
     # persist the per-frame hashes: both the pairing and the frame-count
     # gate read them, and recomputing means re-decoding every frame.
     # (id, frame_idx, int64) is ~24 bytes/frame — cacheable at any scale.
-    hashes = _register_cache(
+    hashes = register_cache(
         video_frame_hashes(df, blob_col, id_col, every_n))
     pairs = hamming_pairs(hashes, fp_col="dhash", id_col=id_col,
                           max_hamming=max_hamming, n_chunks=n_chunks,

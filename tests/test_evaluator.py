@@ -82,6 +82,24 @@ def test_empty_constraint_set(spark):
     assert res.valid_rows().count() == 2
 
 
+def test_partition_verdicts_count_dataset_level_rows(spark):
+    """A duplicated url fails its partition, as the checkpoint verdict
+    says: n_violations counts the url.unique rows, each in the
+    partition of the row it names."""
+    df = spark.createDataFrame(
+        [("u1", "d1", 1), ("u1", "d1", 2), ("u2", "d1", 3)],
+        "url string, day string, v long")
+    cset = ConstraintSet(columns={"v": {"minimum": 0}}, unique=["url"])
+    assert _rows(validate(df, cset).partition_verdicts(by="day")) \
+        == [("d1", 3, 0, 2, False)]
+    # the duplicate pair split over two days: one violation in each
+    split = df.withColumn(
+        "day", F.when(F.col("v") == 2, "d2").otherwise("d1"))
+    verdicts = validate(split, cset).partition_verdicts(by="day")
+    assert _rows(verdicts.orderBy("partition_key")) \
+        == [("d1", 2, 0, 1, False), ("d2", 1, 0, 1, False)]
+
+
 def test_id_uniqueness_reports_every_duplicate_row(spark):
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 3), ("c", 4), ("c", 5), ("c", 6),

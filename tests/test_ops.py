@@ -355,57 +355,6 @@ def test_keyless_asof_join_parallel_carry(spark):
     assert "windowspecdefinition(_bkt" in plan
 
 
-def test_streaming_novel_filter_cross_batch(spark, tmp_path):
-    """Cross-batch incremental dedup: keys seen in batch 0 must not be
-    emitted again by batch 1; genuinely new keys pass. Exercised both
-    by driving the processor directly (the foreachBatch contract) and
-    through a real one-batch streaming query."""
-    from pyspark.sql import functions as F
-
-    from json_schema_spark.ops.streaming import StreamingNovelFilter
-
-    emitted: list[set] = []
-    f = StreamingNovelFilter(
-        key_col="digest",
-        sink=lambda df, bid: emitted.append(
-            {r["digest"] for r in df.collect()}))
-
-    b0 = spark.createDataFrame([(f"k{i}",) for i in range(100)],
-                               "digest string")
-    b1 = spark.createDataFrame(
-        [(f"k{i}",) for i in range(50, 150)], "digest string")
-    f(b0, 0)
-    f(b1, 1)
-    assert emitted[0] == {f"k{i}" for i in range(100)}
-    # batch 1: k50-k99 already seen -> only k100-k149 (minus any bloom
-    # false positives, none expected at 100 keys / 8 Mbit)
-    assert emitted[1] == {f"k{i}" for i in range(100, 150)}
-
-    # integration: a real streaming query drives the same processor
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.txt").write_text("\n".join(f"k{i}" for i in range(120)))
-    stream = (spark.readStream.format("text")
-              .schema("value string")
-              .load(str(src))
-              .select(F.col("value").alias("digest")))
-    f2 = StreamingNovelFilter(key_col="digest")
-    q = (stream.writeStream.foreachBatch(f2)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    assert f2.novel_count == 120
-
-    # re-priming from a prior bloom suppresses the already-seen corpus
-    from json_schema_spark.textops.dedup import build_bloom
-    prior = build_bloom(b0, "digest")
-    f3 = StreamingNovelFilter(key_col="digest", bloom=prior,
-                              sink=lambda df, bid: emitted.append(
-                                  {r["digest"] for r in df.collect()}))
-    f3(b1, 0)
-    assert emitted[-1] == {f"k{i}" for i in range(100, 150)}
-
-
 def test_stream_sessions_finalize_past_watermark(spark, tmp_path):
     """Append-mode session windows emit exactly once, when the
     watermark passes their close: a later flush batch advances the
@@ -453,21 +402,6 @@ def test_stream_sessions_finalize_past_watermark(spark, tmp_path):
     assert all(not s.startswith("2024-01-03") for s, _ in finalized)
 
 
-def test_streaming_novel_filter_rejects_mismatched_bloom():
-    """A priming bloom built at a different n_bits would probe wrong
-    bit positions (or index out of the bitmap) — constructor must
-    refuse it loudly (ADVICE r3)."""
-    import pytest as _pytest
-
-    from json_schema_spark.ops.streaming import StreamingNovelFilter
-
-    with _pytest.raises(ValueError, match="n_bits"):
-        StreamingNovelFilter(n_bits=1 << 23, bloom=bytes((1 << 20) // 8))
-    # matching size is accepted
-    f = StreamingNovelFilter(n_bits=1 << 20, bloom=bytes((1 << 20) // 8))
-    assert f.bits.nbytes == (1 << 20) // 8
-
-
 def test_keyless_asof_null_ts_matches_keyed(spark):
     """ADVICE r3: NULL-ts rows must route to bucket -1 (before every
     real bucket) so the keyless path reproduces the keyed path's
@@ -501,7 +435,7 @@ def test_sharded_novel_filter_batches_and_restart(spark, tmp_path):
     distributed (shard, bloom) parquet table — emits each key at most
     once across batches, and a NEW instance pointed at the same
     state_dir resumes from the newest complete epoch (restart
-    recovery, the property the driver-held bloom cannot give)."""
+    recovery)."""
     from json_schema_spark.ops.streaming import ShardedNovelFilter
 
     emitted: list[set] = []
@@ -547,6 +481,78 @@ def test_sharded_novel_filter_batches_and_restart(spark, tmp_path):
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
     assert f3.novel_count == 200
+
+
+def test_sharded_novel_filter_replay_after_state_write(spark, tmp_path):
+    """foreachBatch delivers at least once: a batch re-run after its
+    state write (a crash before Spark commits it) must hand the sink
+    the same rows, both when a restarted processor replays it by hand
+    and when a real query crashes there and restarts from its
+    checkpoint."""
+    import time
+
+    from json_schema_spark.ops.streaming import ShardedNovelFilter
+
+    def keys(lo, hi):
+        return [f"k{i}" for i in range(lo, hi)]
+
+    def make(state, out):
+        return ShardedNovelFilter(
+            state, key_col="digest", n_shards=4, bits_per_shard=1 << 20,
+            sink=lambda df, bid: out.__setitem__(
+                bid, sorted(r["digest"] for r in df.collect())))
+
+    b0 = spark.createDataFrame([(k,) for k in keys(0, 5)], "digest string")
+    b1 = spark.createDataFrame([(k,) for k in keys(3, 8)], "digest string")
+    state = str(tmp_path / "state")
+    out: dict[int, list] = {}
+    f = make(state, out)
+    f(b0, 0)
+    f(b1, 1)
+    assert out == {0: keys(0, 5), 1: keys(5, 8)}
+    make(state, out)(b1, 1)  # restarted instance replays batch 1
+    assert out == {0: keys(0, 5), 1: keys(5, 8)}
+    # the probed epoch is kept for such a replay, older ones are not
+    b2 = spark.createDataFrame([(k,) for k in keys(6, 10)],
+                               "digest string")
+    f(b2, 2)
+    assert out[2] == keys(8, 10)
+    assert sorted(n for n in os.listdir(state) if n.startswith("epoch=")) \
+        == ["epoch=1", "epoch=2"]
+
+    # a real query: crash after batch 1's state write, restart, replay
+    src = tmp_path / "src"
+    src.mkdir()
+    now = time.time()
+    for i, (name, ks) in enumerate((("a.txt", keys(0, 5)),
+                                    ("b.txt", keys(3, 8)))):
+        (src / name).write_text("\n".join(ks))
+        os.utime(src / name, (now - 60 + i, now - 60 + i))
+    state, ckpt = str(tmp_path / "state2"), str(tmp_path / "ckpt")
+    out = {}
+
+    def run(processor):
+        q = (spark.readStream.format("text").schema("value string")
+             .option("maxFilesPerTrigger", "1").load(str(src))
+             .select(F.col("value").alias("digest"))
+             .writeStream.foreachBatch(processor)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+
+    f = make(state, out)
+
+    def crash_after_state_write(df, bid):
+        f(df, bid)
+        if bid == 1:
+            raise RuntimeError("injected crash before commit")
+
+    with pytest.raises(Exception, match="injected crash"):
+        run(crash_after_state_write)
+    assert out == {0: keys(0, 5), 1: keys(5, 8)}
+    out.clear()
+    run(make(state, out))
+    assert out == {1: keys(5, 8)}
 
 
 def test_streaming_drift_matches_batch_operator(spark, tmp_path):

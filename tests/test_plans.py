@@ -334,7 +334,7 @@ def test_media_dedup_plans_arrow_only_no_cartesian(spark):
     Python, and the pigeonhole self-join must be a real equi-join:
     no CartesianProduct / BroadcastNestedLoopJoin anywhere, at any
     corpus size."""
-    from json_schema_spark.textops.dedup import release_caches
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.multimodal import (
         audio_near_duplicates, encode_gif_gray_frames, encode_wav_pcm,
         near_dedup_media, video_near_duplicates)
@@ -619,7 +619,7 @@ def test_adversarial_skew_fixture(spark):
     one deterministic corpus (Zipf-1.2 hosts + one giant duplicate
     digest + one hot LSH band + one degenerate embedding cell):
 
-    - salted two-phase exact dedup finds the hot digest with its exact
+    - exact dedup (duplicate_keys) finds the hot digest with its exact
       count;
     - dedup_minhash_lsh with max_bucket_size keeps every banded join
       bucket <= the cap (bounded per-task input: no join task reads
@@ -630,6 +630,7 @@ def test_adversarial_skew_fixture(spark):
     - semantic_dedup's max_cluster_size excludes the degenerate cell
       instead of pair-joining it.
     """
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.checks.uniqueness import duplicate_keys
     from json_schema_spark.sources.webtext import generate_skewed_corpus
     from json_schema_spark.textops import dedup as dd
@@ -640,10 +641,9 @@ def test_adversarial_skew_fixture(spark):
     corpus = generate_skewed_corpus(spark, n, n_dup=n_dup,
                                     n_hot_band=n_hot).cache()
     try:
-        # --- hot digest via salted two-phase aggregation ---
+        # --- hot digest: Spark's partial aggregation counts it map-side
         dups = duplicate_keys(
-            corpus.select(F.md5("text").alias("digest")),
-            ["digest"], salt_buckets=32)
+            corpus.select(F.md5("text").alias("digest")), ["digest"])
         hot = {r["digest"]: r["dup_count"] for r in dups.collect()}
         assert max(hot.values()) == n_dup
 
@@ -690,4 +690,4 @@ def test_adversarial_skew_fixture(spark):
         assert n_dup <= n_kept <= n
     finally:
         corpus.unpersist()
-        dd.release_caches()
+        release_caches()

@@ -173,15 +173,21 @@ def test_base_uri_change_in_subschema():
 def test_seeded_cache_resolves_meta_schema_without_network():
     """A pre-seeded url_cache is consulted even with fetch_remote=False
     (a cache hit is not a fetch) and pointer refs INSIDE the cached
-    document resolve against that document's own root."""
+    document resolve against that document's own root. The cache is
+    seeded with the draft-07 meta-schema that jsonschema_specifications
+    ships."""
+    from importlib.resources import files
+
     from json_schema_spark.validator.document import (DocumentValidator,
                                                       ValidationError,
                                                       compile_schema)
-    from tests.fixture_harness import meta_schema_cache
 
+    meta = files("jsonschema_specifications").joinpath(
+        "schemas", "draft7", "metaschema.json")
     cs = compile_schema(
         {"$ref": "http://json-schema.org/draft-07/schema#"},
-        url_cache=meta_schema_cache())
+        url_cache={"http://json-schema.org/draft-07/schema":
+                   json.loads(meta.read_text())})
     v = DocumentValidator()
     assert v.validate({"minLength": 1}, cs) == {"minLength": 1}
     with pytest.raises(ValidationError):

@@ -18,10 +18,6 @@ def test_duplicate_keys(spark):
     got = {(r["url"], r["dup_count"])
            for r in duplicate_keys(df, ["url"]).collect()}
     assert got == {("u1", 3)}
-    # explicit salted two-phase produces the same counts
-    got2 = {(r["url"], r["dup_count"])
-            for r in duplicate_keys(df, ["url"], salt_buckets=4).collect()}
-    assert got2 == got
 
 
 def test_uniqueness_violations_reports_every_dup_row(spark):

@@ -450,21 +450,29 @@ def test_dup_group_example_caps(spark):
 
 
 def test_bloom_seen_filter_no_false_negatives(spark):
-    from json_schema_spark.textops.dedup import novel_documents, seen_filter
+    """Every reference key is flagged (no false negatives), the rest
+    is definitely new, and a reference spread over 64 partitions gives
+    the same tags as a single-partition one."""
+    from json_schema_spark.cache import release_caches
+    from json_schema_spark.textops.dedup import seen_filter
 
     ref = spark.range(1000).selectExpr("concat('k', id) AS digest")
     # candidates: 500 overlapping + 500 new
     cand = spark.range(500, 1500).selectExpr("concat('k', id) AS digest")
-    tagged = seen_filter(ref, cand, n_bits=1 << 16)
-    seen = {r["digest"] for r in
-            tagged.filter("_maybe_seen").collect()}
     overlap = {f"k{i}" for i in range(500, 1000)}
-    assert overlap <= seen                      # no false negatives
-    novel = {r["digest"] for r in novel_documents(ref, cand,
-                                                  n_bits=1 << 16)
-             .collect()}
-    assert novel.isdisjoint(overlap)            # definite-new is exact
-    assert len(novel) > 400                     # low false-positive rate
+    try:
+        tags = []
+        for r in (ref.coalesce(1), ref.repartition(64)):
+            rows = seen_filter(r, cand, bits_per_shard=1 << 16).collect()
+            seen = {x["digest"] for x in rows if x["_maybe_seen"]}
+            novel = {x["digest"] for x in rows if not x["_maybe_seen"]}
+            assert overlap <= seen                  # no false negatives
+            assert novel.isdisjoint(overlap)        # definite-new is exact
+            assert len(novel) > 400                 # low false-positive rate
+            tags.append(seen)
+        assert tags[0] == tags[1]
+    finally:
+        release_caches()
 
 
 def test_deterministic_sampling_and_split(spark):
@@ -522,9 +530,7 @@ def test_simhash_64bit_uses_full_width(spark):
     word of every fingerprint was 0, and chunked pairing degenerated to
     all-pairs. bits=64 must now populate the high word while keeping the
     low 32 bits identical to the bits=32 fingerprint (oracle parity)."""
-    from pyspark.sql import functions as F
-
-    from json_schema_spark.textops.dedup import simhash, simhash_table
+    from json_schema_spark.textops.dedup import simhash_table
 
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
@@ -536,11 +542,6 @@ def test_simhash_64bit_uses_full_width(spark):
     high_words = {v >> 32 for v in sh64.values()}
     assert len(high_words) > 32          # genuinely 64-bit fingerprints
     assert all(sh64[k] & 0xFFFFFFFF == sh32[k] for k in sh32)
-
-    # the pure-Column form documents its 32-bit cap
-    import pytest
-    with pytest.raises(ValueError):
-        docs.select(simhash(F.col("text"), bits=64))
 
 
 def test_simhash_pairs_64bit_linear_candidates(spark):
@@ -644,16 +645,17 @@ def test_release_caches_frees_pair_finder_intermediates(docs):
     """Pair-finders persist their self-join inputs; callers own cleanup
     via release_caches() once results are materialized (a persisted
     table otherwise lives for the whole Spark application)."""
+    from json_schema_spark import cache
     from json_schema_spark.textops import dedup
 
-    dedup.release_caches()  # start clean
+    cache.release_caches()  # start clean
     corpus = _perturbed(docs)
     dedup.near_duplicates(corpus, threshold=0.5).count()
     dedup.simhash_pairs(corpus, max_hamming=3).count()
-    assert len(dedup._ACTIVE_CACHES) >= 3  # buckets, shingles, simhash
-    released = dedup.release_caches()
+    assert len(cache._ACTIVE_CACHES) >= 3  # buckets, shingles, simhash
+    released = cache.release_caches()
     assert released >= 3
-    assert not dedup._ACTIVE_CACHES
+    assert not cache._ACTIVE_CACHES
     spark = corpus.sparkSession
     jvm_cache = spark._jsparkSession.sharedState().cacheManager()
     assert jvm_cache.isEmpty()
@@ -701,25 +703,6 @@ def test_bloom_positions_python_spark_parity(spark):
     for r in rows:
         want = list(_bloom_positions(r["k"], 3, 1 << 23))
         assert [r["_p0"], r["_p1"], r["_p2"]] == want
-
-
-def test_bloom_merge_many_partitions(spark):
-    """Driver merge is one numpy OR per partition — 64 partitions must
-    merge in well under a second and preserve no-false-negatives."""
-    import time
-
-    from json_schema_spark.textops.dedup import (_bloom_positions,
-                                                 build_bloom)
-
-    df = (spark.range(5000).repartition(64)
-          .selectExpr("cast(id as string) as digest"))
-    t0 = time.perf_counter()
-    bloom = build_bloom(df, "digest", n_bits=1 << 20)
-    elapsed = time.perf_counter() - t0
-    assert elapsed < 30  # end-to-end incl. the Spark job
-    for key in ("0", "4999", "123"):
-        assert all(bloom[p >> 3] & (1 << (p & 7))
-                   for p in _bloom_positions(key, 3, 1 << 20))
 
 
 def test_dedup_groups_connected_components(spark):
@@ -1002,6 +985,7 @@ def test_near_dedup_keep_best_survivor_rules(spark):
     """Keep-best keeps the LONGEST member per group (even at a higher
     id), ties break to min id, singletons survive; quality_col
     overrides the length rule."""
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops import dedup
 
     base = ("the quick brown fox jumps over the lazy dog and then "
@@ -1020,7 +1004,7 @@ def test_near_dedup_keep_best_survivor_rules(spark):
     out_q = dedup.near_dedup_keep_best(corpus, threshold=0.5,
                                        quality_col="score")
     kept_q = {r.doc_id for r in out_q.select("doc_id").collect()}
-    dedup.release_caches()
+    release_caches()
     # by score doc 1 (0.9) beats the longer copies
     assert kept_q == {1, 7}
     assert out.columns == corpus.columns
@@ -1029,6 +1013,7 @@ def test_near_dedup_keep_best_survivor_rules(spark):
 def test_near_dedup_corpus_keeps_one_per_group(docs):
     """The one-call dedup keeps exactly one canonical doc (min id) per
     near-dup group plus every singleton, returning original rows."""
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops import dedup
 
     corpus = _perturbed(docs)
@@ -1037,7 +1022,7 @@ def test_near_dedup_corpus_keeps_one_per_group(docs):
     kept = {r["doc_id"] for r in out.select("doc_id").collect()}
     pairs = {(r["id_a"], r["id_b"]) for r in
              dedup.near_duplicates(corpus, threshold=0.5).collect()}
-    dedup.release_caches()
+    release_caches()
     # every pair lost its higher member somewhere; canonical (min) stays
     losers = set()
     import itertools
@@ -1130,32 +1115,37 @@ def test_emb_near_dup_default_engages_auto_sizing(emb, monkeypatch):
 
 
 def test_sharded_bloom_parity_and_no_false_negatives(spark):
-    """n_shards=1 must reproduce the single-bitmap bloom byte-for-byte
-    (same position expressions, same scatter); at n_shards=8 every
-    built key must still probe as maybe-seen (no false negatives
-    across the shard split), and a disjoint key set must come back
-    mostly novel (false positives only)."""
+    """n_shards=1 must be exactly the bitmap the Python reference
+    _bloom_positions describes (same positions, same scatter); at
+    n_shards=8 every built key must still probe as maybe-seen (no
+    false negatives across the shard split), and a disjoint key set
+    must come back mostly novel (false positives only)."""
+    import numpy as np
+
     from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.dedup import (
-        build_bloom, build_bloom_shards, seen_filter_sharded)
+        _bloom_positions, build_bloom_shards, seen_filter)
 
-    ref = spark.createDataFrame([(f"k{i}",) for i in range(500)],
-                                "digest string")
+    keys = [f"k{i}" for i in range(500)]
+    ref = spark.createDataFrame([(k,) for k in keys], "digest string")
     one = build_bloom_shards(ref, "digest", n_shards=1,
                              bits_per_shard=1 << 20).collect()
     assert len(one) == 1 and one[0]["shard"] == 0
-    assert bytes(one[0]["bloom"]) == build_bloom(ref, "digest",
-                                                 n_bits=1 << 20)
+    want = np.zeros((1 << 20) // 8, dtype=np.uint8)
+    for k in keys:
+        for p in _bloom_positions(k, 3, 1 << 20):
+            want[p >> 3] |= 1 << (p & 7)
+    assert bytes(one[0]["bloom"]) == want.tobytes()
 
     try:
-        tagged = seen_filter_sharded(ref, ref, "digest", n_shards=8,
-                                     bits_per_shard=1 << 20)
+        tagged = seen_filter(ref, ref, "digest", n_shards=8,
+                             bits_per_shard=1 << 20)
         assert all(r["_maybe_seen"] for r in tagged.collect())
 
         fresh = spark.createDataFrame(
             [(f"new{i}",) for i in range(300)], "digest string")
-        tagged2 = seen_filter_sharded(ref, fresh, "digest", n_shards=8,
-                                      bits_per_shard=1 << 20)
+        tagged2 = seen_filter(ref, fresh, "digest", n_shards=8,
+                              bits_per_shard=1 << 20)
         novel = sum(not r["_maybe_seen"] for r in tagged2.collect())
         assert novel >= 290  # a few bloom false positives allowed
     finally:
@@ -1701,7 +1691,7 @@ def test_video_near_duplicates(spark):
     animations pair at hamming 0; a corner-perturbed variant pairs as
     a near-dup; a different animation and a shorter animation do not
     pair (the all-frames gate rejects partial matches)."""
-    from json_schema_spark.textops.dedup import release_caches
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.multimodal import (
         encode_gif_gray_frames, video_near_duplicates)
 
@@ -1734,7 +1724,8 @@ def test_video_near_duplicates(spark):
 def test_hamming_pairs_group_cols(spark):
     """group_cols restrict pairing to equal-group rows and lead the
     output columns."""
-    from json_schema_spark.textops.dedup import hamming_pairs, release_caches
+    from json_schema_spark.cache import release_caches
+    from json_schema_spark.textops.dedup import hamming_pairs
 
     df = spark.createDataFrame(
         [(0, 1, 5), (0, 2, 5), (1, 1, 5), (1, 3, 4)],
@@ -1783,7 +1774,7 @@ def test_audio_near_duplicates(spark):
     """Identical PCM pairs at hamming 0; an early-window perturbation
     pairs as a near-dup; a different signal and an undecodable blob
     never pair."""
-    from json_schema_spark.textops.dedup import release_caches
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.multimodal import (
         audio_near_duplicates, encode_wav_pcm)
 
@@ -1810,7 +1801,7 @@ def test_near_dedup_media(spark):
     blob survive untouched; bad kind raises."""
     import pytest as _pytest
 
-    from json_schema_spark.textops.dedup import release_caches
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.multimodal import (
         encode_wav_pcm, near_dedup_media)
 
@@ -1889,9 +1880,9 @@ def test_contamination_and_decontaminate(spark):
     docs survive; id-name collision raises."""
     import pytest as _pytest
 
+    from json_schema_spark.cache import release_caches
     from json_schema_spark.textops.dedup import (contamination_pairs,
-                                                 decontaminate,
-                                                 release_caches)
+                                                 decontaminate)
 
     base = ("the quick brown fox jumps over the lazy dog while "
             "seventeen astronauts assemble a parquet reader on mars")
@@ -1929,7 +1920,8 @@ def test_dedup_groups_driver_fast_path_matches_distributed(spark):
     returns byte-identical (doc_id, group_id) labels to the
     distributed min-label propagation, across clique, path, and
     disjoint-component shapes."""
-    from json_schema_spark.textops.dedup import dedup_groups, release_caches
+    from json_schema_spark.cache import release_caches
+    from json_schema_spark.textops.dedup import dedup_groups
 
     edges = ([(1, 2), (2, 3), (1, 3)]          # clique -> min 1
              + [(10, 11), (11, 12), (12, 13)]  # path -> min 10
@@ -3368,17 +3360,18 @@ def test_minhash_index_family_guard(docs, spark, tmp_path):
 
 def test_bloom_rejects_non_power_of_two_bits(spark):
     """The KM stride is only full-period on power-of-two bitmaps."""
-    from json_schema_spark.textops.dedup import build_bloom
+    from json_schema_spark.textops.dedup import build_bloom_shards
 
     df = spark.createDataFrame([("k1",)], "digest string")
     with pytest.raises(ValueError, match="power of two"):
-        build_bloom(df, n_bits=3 << 20)
+        build_bloom_shards(df, bits_per_shard=3 << 20)
 
 
 def test_sharded_filter_rejects_stale_scheme(tmp_path):
-    """A state_dir stamped with a different bloom scheme must refuse
-    to start (stale bitmaps are length-compatible but probe wrong
-    bits)."""
+    """A state_dir stamped with a different bloom scheme, or written
+    with another n_shards / bits_per_shard / n_hashes, must refuse to
+    start (such bitmaps are read as this filter's but probe wrong
+    bits); the same settings reopen it."""
     from json_schema_spark.ops.streaming import ShardedNovelFilter
 
     d = tmp_path / "state"
@@ -3386,6 +3379,16 @@ def test_sharded_filter_rejects_stale_scheme(tmp_path):
     (d / "_scheme.txt").write_text("md5-per-position-v1")
     with pytest.raises(ValueError, match="scheme"):
         ShardedNovelFilter(str(d))
+
+    fresh = str(tmp_path / "fresh")
+    ShardedNovelFilter(fresh, n_shards=4, bits_per_shard=1 << 20)
+    for other in ({"n_shards": 8, "bits_per_shard": 1 << 20},
+                  {"n_shards": 4, "bits_per_shard": 1 << 21},
+                  {"n_shards": 4, "bits_per_shard": 1 << 20,
+                   "n_hashes": 5}):
+        with pytest.raises(ValueError, match="scheme"):
+            ShardedNovelFilter(fresh, **other)
+    ShardedNovelFilter(fresh, n_shards=4, bits_per_shard=1 << 20)
 
 
 def test_weighted_sample_bias_and_determinism(spark):

@@ -72,6 +72,9 @@ def test_partition_verdicts_by_day(webtext):
     days = res.partition_verdicts(by=F.to_date("warc_ts")).collect()
     assert len(days) == 30
     assert sum(r["n_rows"] for r in days) == N
+    # dataset-level rows (url.unique) count in their day too
+    assert sum(r["n_violations"] for r in days) == res.violations().count()
+    assert all(r["pass"] == (r["n_violations"] == 0) for r in days)
 
 
 def test_constraint_hash_stable():

@@ -483,6 +483,23 @@ def test_sharded_novel_filter_batches_and_restart(spark, tmp_path):
     assert f3.novel_count == 200
 
 
+def test_streaming_novel_filter_rejects_mismatched_bloom(spark, tmp_path):
+    """Bitmaps written at one bits_per_shard would be probed at wrong
+    bit positions by a filter of another size: a restart on a state_dir
+    that already holds an epoch must refuse the mismatch loudly, and
+    the matching size must resume that epoch."""
+    from json_schema_spark.ops.streaming import ShardedNovelFilter
+
+    state = str(tmp_path / "state")
+    f = ShardedNovelFilter(state, n_shards=4, bits_per_shard=1 << 20)
+    f(spark.createDataFrame([("k0",), ("k1",)], "digest string"), 0)
+    with pytest.raises(ValueError, match="bits_per_shard"):
+        ShardedNovelFilter(state, n_shards=4, bits_per_shard=1 << 23)
+    # matching size is accepted and resumes the written epoch
+    g = ShardedNovelFilter(state, n_shards=4, bits_per_shard=1 << 20)
+    assert g.current_epoch == f.current_epoch == 0
+
+
 def test_sharded_novel_filter_replay_after_state_write(spark, tmp_path):
     """foreachBatch delivers at least once: a batch re-run after its
     state write (a crash before Spark commits it) must hand the sink

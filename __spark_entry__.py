@@ -1580,7 +1580,7 @@ FROM pairs p JOIN etot t ON p.eval_id = t.eval_id
 
 def _q_validate_json_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same verdicts as validate_json_dynamic, but routed through the
-    columnar fast path (from_json + Catalyst constraints, zero Python) —
+    variant fast path (try_parse_json + schema_of_variant, zero Python) —
     validator/hybrid.py picks the path from the schema shape."""
     from json_schema_spark.validator.hybrid import validate_json_auto
 

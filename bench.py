@@ -62,7 +62,7 @@ def main() -> None:
                              "/root/testdata/sf0.001")
     qs = entry.queries()
     # 12, not 8: the round-5 driver-window rotation moved queries with
-    # heavy one-time codegen (baseline_drift's t-digest pipeline) into
+    # heavy one-time codegen (baseline_drift's PSI/JS pipeline) into
     # registry slots 9-10; measured best-of-2 at slot 9 was 7.2s cold
     # vs 1.4s steady-state — the warmup exists precisely to keep that
     # artifact out of the timed region

@@ -120,12 +120,6 @@ def _type_pred(col: Column, dtype: T.DataType, arg: Any) -> Column | None:
     return _never_null(col.isNotNull() & value_ok)
 
 
-def _enum_canon(v: Any) -> Any:
-    # deep-equality canonicalization is only needed for composite values;
-    # scalars compare natively (Helper.php:128-135: numbers numerically)
-    return v
-
-
 def _additional_items_pred(col: Column, dtype: T.DataType,
                            spec: dict[str, Any],
                            path: str) -> Column | None:

@@ -1,9 +1,10 @@
 """Rewrite modes as pure DataFrame -> DataFrame transforms (MODE_CAST /
-MODE_REMOVE_ADDITIONALS / MODE_APPLY_DEFAULTS — /root/reference/src/Cast.php
-and Validator.php:1190-1217, 1417-1437, 1444-1466).
+MODE_REMOVE_ADDITIONALS — the reference's Cast.php and
+Validator.php:1190-1217, 1417-1437). MODE_APPLY_DEFAULTS is
+evaluator.apply_defaults.
 
 The reference mutates a document in place; the table analog returns a new
-DataFrame with retyped/pruned/defaulted columns. One semantic shift is
+DataFrame with retyped/pruned columns. One semantic shift is
 inherent: a Spark column has ONE type, so a failed cast cannot "keep the
 original value" the way PHP does — it becomes NULL (try_cast semantics)
 and is surfaced by `cast_failures` so pipelines can route rejects. All
@@ -93,13 +94,3 @@ def remove_additional_columns(df: DataFrame,
     (Validator.php:1190-1217 unsets undeclared keys)."""
     keep = [c for c in df.columns if c in set(allowed)]
     return df.select(*keep)
-
-
-def apply_column_defaults(df: DataFrame,
-                          defaults: dict[str, Any]) -> DataFrame:
-    """MODE_APPLY_DEFAULTS: null -> default per column (Validator.php:
-    1444-1466 simple form; struct-merge defaults live in
-    evaluator.apply_defaults)."""
-    return df.withColumns({
-        c: F.coalesce(F.col(c), F.lit(v).cast(df.schema[c].dataType))
-        for c, v in defaults.items() if c in df.columns})

@@ -146,6 +146,22 @@ def start_violation_sink(stream_df: DataFrame, cset: ConstraintSet,
     return writer.start()
 
 
+def _complete_versions(root: str, prefix: str) -> list[int]:
+    """Sorted batch ids of the complete ``<prefix>=<id>`` directories
+    under ``root``: those whose parquet ``_SUCCESS`` marker exists. A
+    torn write has no marker, is never read, and is overwritten when
+    its batch is replayed."""
+    import os
+    import re
+
+    out = []
+    for name in os.listdir(root):
+        m = re.fullmatch(rf"{prefix}=(\d+)", name)
+        if m and os.path.exists(os.path.join(root, name, "_SUCCESS")):
+            out.append(int(m.group(1)))
+    return sorted(out)
+
+
 class ShardedNovelFilter:
     """Cross-micro-batch incremental dedup: a foreachBatch processor
     that emits each key at most once over the stream's lifetime. The
@@ -219,22 +235,9 @@ class ShardedNovelFilter:
                 fh.write(scheme)
         self.current_epoch = self._latest_epoch()
 
-    def _epochs(self) -> dict[int, bool]:
-        """Epoch number -> complete (its parquet _SUCCESS exists)."""
-        import os
-        import re
-
-        out = {}
-        for name in os.listdir(self.state_dir):
-            m = re.fullmatch(r"epoch=(\d+)", name)
-            if m:
-                out[int(m.group(1))] = os.path.exists(
-                    os.path.join(self.state_dir, name, "_SUCCESS"))
-        return out
-
     def _latest_epoch(self, below: int | None = None) -> int | None:
-        done = [e for e, ok in self._epochs().items()
-                if ok and (below is None or e < below)]
+        done = [e for e in _complete_versions(self.state_dir, "epoch")
+                if below is None or e < below]
         return max(done, default=None)
 
     def _epoch_path(self, epoch: int) -> str:
@@ -277,7 +280,7 @@ class ShardedNovelFilter:
             # each epoch is a FULL filter copy (n_shards x
             # bits_per_shard/8 bytes): keep the one a replay of this
             # batch probes and drop the older ones
-            for e in self._epochs():
+            for e in _complete_versions(self.state_dir, "epoch"):
                 if e < batch_id and e != prior:
                     shutil.rmtree(self._epoch_path(e), ignore_errors=True)
         finally:
@@ -289,23 +292,25 @@ class StreamingNearNovelFilter:
     MinHash-LSH analog of ShardedNovelFilter — "have we seen
     something LIKE this" instead of "this exact key". State is the
     persistable LSH bucket index (textops.dedup.build_minhash_index
-    rows) under ``index_dir``, APPEND-ONLY parquet: bucket rows are
-    immutable facts, so there is no epoch merge — each batch appends
-    the buckets of its NOVEL rows only (keep-first: near-dups of an
-    indexed doc never enter the index, so state grows with the
-    distinct corpus, not the stream). Restart recovery is automatic —
-    the index on disk IS the state.
+    rows) under ``index_dir``, one directory per batch: bucket rows are
+    immutable facts, so there is no merge — each batch writes the
+    buckets of its NOVEL rows only to ``batch=<batch_id>`` (keep-first:
+    near-dups of an indexed doc never enter the index, so state grows
+    with the distinct corpus, not the stream). Restart recovery is
+    automatic — the index on disk IS the state.
 
-    Per batch: probe against the index so far (candidates only — LSH
-    recall applies: a near-dup that shares no band bucket re-emits),
-    hand rows with no candidate to ``sink``, append their buckets.
-    Caveats: as with ShardedNovelFilter, within-batch near-dups
-    all pass (the probe sees only prior batches — near_dedup_corpus
-    the batch first if that matters); a crash between sink and append
-    re-runs the batch (the usual foreachBatch at-least-once contract;
-    re-appended buckets are harmless duplicates). Rows whose text
-    yields no shingle (< k words) never index and re-emit every
-    batch — route them through an exact novel filter first."""
+    Per batch: probe against the complete batch directories BELOW
+    ``batch_id`` (candidates only — LSH recall applies: a near-dup that
+    shares no band bucket re-emits), hand rows with no candidate to
+    ``sink``, then overwrite ``batch=<batch_id>`` with their buckets.
+    Like ShardedNovelFilter's epochs this is replay-safe: a batch re-run
+    after its index write (crash before Spark's commit) never probes its
+    own buckets, so it hands the sink the same rows. Caveats: as with
+    ShardedNovelFilter, within-batch near-dups all pass (the probe sees
+    only prior batches — near_dedup_corpus the batch first if that
+    matters). Rows whose text yields no shingle (< k words) never index
+    and re-emit every batch — route them through an exact novel filter
+    first."""
 
     def __init__(self, index_dir: str, text_col: str = "text",
                  id_col: str = "doc_id", k: int = 3,
@@ -323,27 +328,34 @@ class StreamingNearNovelFilter:
         self.sink = sink
         self.novel_count = 0
         os.makedirs(index_dir, exist_ok=True)
-
-    def _has_index(self) -> bool:
-        import os
-
-        return any(n.startswith("part-") and n.endswith(".parquet")
-                   for n in os.listdir(self.index_dir))
+        # an index appended at the top level is not versioned by batch
+        # id, so a replayed batch would probe its own buckets
+        if any(n.startswith("part-") and n.endswith(".parquet")
+               for n in os.listdir(index_dir)):
+            raise ValueError(
+                f"index_dir {index_dir!r} holds a top-level append-only "
+                "index from an older layout; start from a fresh "
+                "index_dir")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        import os
+
         from json_schema_spark.textops.dedup import (build_minhash_index,
                                                      novel_vs_index)
 
         spark = batch_df.sparkSession
-        if self._has_index():
-            index = spark.read.parquet(self.index_dir)
+        prior = [os.path.join(self.index_dir, f"batch={j}")
+                 for j in _complete_versions(self.index_dir, "batch")
+                 if j < batch_id]
+        if prior:
+            index = spark.read.parquet(*prior)
             novel = novel_vs_index(
                 batch_df, index, self.text_col, self.id_col,
                 k=self.k, num_hashes=self.num_hashes, bands=self.bands,
                 max_bucket_size=self.max_bucket_size)
         else:
             novel = batch_df
-        # two consumers (sink + the bucket append) — persist so the
+        # two consumers (sink + the bucket write) — persist so the
         # probe anti-join doesn't run twice
         novel = novel.persist()
         try:
@@ -353,7 +365,8 @@ class StreamingNearNovelFilter:
                 self.novel_count += novel.count()
             (build_minhash_index(novel, self.text_col, self.id_col,
                                  self.k, self.num_hashes, self.bands)
-             .write.mode("append").parquet(self.index_dir))
+             .write.mode("overwrite")
+             .parquet(os.path.join(self.index_dir, f"batch={batch_id}")))
         finally:
             novel.unpersist()
 

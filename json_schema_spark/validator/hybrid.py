@@ -1,26 +1,17 @@
 """Hybrid JSON validation: route each schema to the fastest capable path.
 
 A JSON-string column can be validated two ways:
+- the VARIANT path (`validate_json_variant`): one `try_parse_json` per
+  row, each property read as a sub-variant and type-checked against
+  `schema_of_variant` — zero Python, whole-stage codegen, and the same
+  verdicts as the document path — for (possibly untyped) object
+  schemas of scalar-constrained properties;
 - the DOCUMENT path (validator/json_column.py): full draft-7 semantics,
-  Arrow-batched Python — handles everything, costs Python time;
-- the COLUMNAR path: `from_json` into a typed struct + the Catalyst
-  constraint compiler — zero Python, whole-stage codegen, 10-50x the
-  throughput — but only expresses flat object schemas with scalar-typed
-  properties and SQL-representable keywords.
+  Arrow-batched Python — handles everything, costs Python time.
 
-`validate_json_auto` decides per SCHEMA (driver-side, once): if the
-schema is columnar-expressible it compiles to the fast path, otherwise
-it falls back to the document path. Malformed JSON, non-object roots,
-and numeric/boolean field-type mismatches are caught JVM-side via the
-corrupt-record column and fail like the document path. Remaining
-caveats of the fast path, inherent to Jackson/SQL:
-- a JSON `null` and an ABSENT key both become SQL NULL, so `required`
-  rejects explicit nulls that the document path (PHP property_exists
-  semantics) would accept;
-- Jackson coerces ANY JSON value to text for string-declared fields, so
-  `{"text": 123}` passes a `type: string` check the document path would
-  fail.
-Pick the document path when those distinctions matter.
+`validate_json_auto` decides per SCHEMA (driver-side, once): the
+variant path when `variant_plan` accepts the schema, otherwise the
+document path.
 """
 
 from __future__ import annotations
@@ -28,142 +19,22 @@ from __future__ import annotations
 import re
 from functools import reduce
 from operator import and_, or_
-from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from json_schema_spark.constraints.spec import ConstraintSet
-
-# integer parses as DOUBLE on purpose: the constraint compiler's type
-# check then becomes `col == floor(col)`, which accepts JSON 1.0 as an
-# integer (the reference's numeric-unification rule, Check.php:23-41)
-# and rejects 1.5 — LongType parsing would mark BOTH corrupt. Beyond
-# 2^53 double loses exactness; at that magnitude bounds checks are
-# approximate (documented, matches typical JSON number handling).
-_SCALAR_TYPE_MAP = {
-    "string": T.StringType(),
-    "integer": T.DoubleType(),
-    "number": T.DoubleType(),
-    "boolean": T.BooleanType(),
-}
-
-# struct field that captures Jackson parse failures; name is unlikely to
-# collide with real JSON properties
-_CORRUPT = "__jss_corrupt__"
-
-# Property / required names must survive three literal interpolations on
-# the fast paths: variant_get / get_json_object JSON paths ("$.{name}" —
-# '.' navigates into nesting, '[' is an index accessor and a hard error,
-# '*' is a wildcard) and the constraint compiler's F.col(name) attribute
-# parsing ('.' and '`'). Names outside this allowlist route to the
-# document path, whose dict lookups are exact for any name.
+# Property / required names are interpolated literally into variant_get
+# JSON paths ("$.{name}" — '.' navigates into nesting, '[' is an index
+# accessor and a hard error, '*' is a wildcard). Names outside this
+# allowlist route to the document path, whose dict lookups are exact for
+# any name.
 _SAFE_NAME = re.compile(r"^[A-Za-z0-9_-]+$")
 
 
 def _names_safe(*names: str) -> bool:
     return all(isinstance(n, str) and _SAFE_NAME.match(n) for n in names)
 
-# keywords the columnar compiler expresses with identical verdicts for
-# scalar-typed, flat object schemas
-_COLUMNAR_KEYWORDS = {
-    "type", "enum", "const", "minLength", "maxLength", "pattern",
-    "format", "minimum", "maximum", "exclusiveMinimum",
-    "exclusiveMaximum", "multipleOf",
-}
-
-
-def _property_spark_type(spec: Any) -> T.DataType | None:
-    if not isinstance(spec, dict):
-        return None
-    t = spec.get("type")
-    types = [t] if isinstance(t, str) else (t or [])
-    non_null = [x for x in types if x != "null"]
-    if len(non_null) == 1 and non_null[0] in _SCALAR_TYPE_MAP:
-        return _SCALAR_TYPE_MAP[non_null[0]]
-    if not types and set(spec) <= {"enum", "const", "minLength",
-                                   "maxLength", "pattern", "format"}:
-        return T.StringType()  # string-ish keywords imply string checks
-    return None
-
-
-def columnar_plan(
-    schema: dict,
-) -> tuple[T.StructType, ConstraintSet, list[str]] | None:
-    """(struct type for from_json, ConstraintSet, bare-required keys)
-    when the schema is fast-path-expressible, else None."""
-    if not isinstance(schema, dict):
-        return None
-    # The fast path maps "unparseable or non-object document" to a NULL
-    # struct and fails it. That verdict is only correct when the schema
-    # explicitly demands an object: with `type` ABSENT, JSON Schema
-    # accepts scalars/arrays (required/properties are ignored for
-    # non-objects), which the NULL-struct encoding can't distinguish
-    # from malformed input — so absent type routes to the document path.
-    if schema.get("type") != "object":
-        return None
-    unsupported = set(schema) - {"type", "properties", "required",
-                                 "$schema", "title", "description"}
-    if unsupported:
-        return None  # incl. additionalProperties: the struct parse
-        # cannot see undeclared keys, so it cannot enforce False
-    props = schema.get("properties", {})
-    if not isinstance(props, dict) or not props:
-        return None
-    required = schema.get("required", [])
-    if not isinstance(required, list) \
-            or not _names_safe(*props, *required):
-        return None
-
-    fields, columns = [], {}
-    for name, spec in props.items():
-        if not isinstance(spec, dict):
-            return None
-        if set(spec) - _COLUMNAR_KEYWORDS - {"default"}:
-            return None
-        if isinstance(spec.get("const"), (dict, list)):
-            return None
-        if any(isinstance(v, (dict, list)) for v in spec.get("enum", [])):
-            return None
-        if isinstance(spec.get("exclusiveMinimum"), bool) \
-                or isinstance(spec.get("exclusiveMaximum"), bool):
-            return None  # per-draft behavior lives in the document path
-        dtype = _property_spark_type(spec)
-        if dtype is None:
-            return None
-        fields.append(T.StructField(name, dtype))
-        col_spec = {k: v for k, v in spec.items()
-                    if k in _COLUMNAR_KEYWORDS or k == "default"}
-        # JSON Schema validates only PRESENT properties; absent keys parse
-        # to SQL NULL, so every property type is null-tolerant here and
-        # presence is enforced solely by `required`
-        if "type" in col_spec:
-            t = col_spec["type"]
-            types = [t] if isinstance(t, str) else list(t)
-            if "null" not in types:
-                types = types + ["null"]
-            col_spec["type"] = types
-        columns[name] = col_spec
-    for req in schema.get("required", []):
-        if req in columns:
-            columns[req]["required"] = True
-    # required keys WITHOUT a property spec are presence-probed straight
-    # off the JSON (get_json_object) in validate_json_auto — their value
-    # type is unknown, so they can't join the struct parse
-    bare_required = [r for r in schema.get("required", [])
-                     if r not in props]
-    return T.StructType(fields), ConstraintSet(columns=columns,
-                                               name="json_fast_path"), \
-        bare_required
-
-
-# ---------------------------------------------------------------------------
-# VARIANT exact fast path: one try_parse_json, field sub-variants, type
-# checks against schema_of_variant — closes every caveat of the
-# from_json struct path (string coercion, explicit-null-vs-absent,
-# non-object roots, union property types) while staying zero-Python.
-# ---------------------------------------------------------------------------
 
 _VARIANT_PROP_KEYWORDS = {
     "type", "enum", "const", "minLength", "maxLength", "pattern",
@@ -176,9 +47,9 @@ _VARIANT_TYPES = {"string", "integer", "number", "boolean", "null"}
 def variant_plan(schema: dict) -> dict | None:
     """Normalized {props, required, root_must_be_object} when the schema
     is variant-path-expressible: a (possibly untyped) object schema of
-    scalar-constrained properties. Unlike the struct path, union
-    property types and absent top-level `type` are fine — the JSON type
-    is read per row from schema_of_variant."""
+    scalar-constrained properties. Union property types and absent
+    top-level `type` are fine — the JSON type is read per row from
+    schema_of_variant."""
     if not isinstance(schema, dict):
         return None
     if schema.get("type") not in ("object", None):
@@ -235,8 +106,7 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
     variant) passes everything except `required` (handled by the
     caller); each keyword applies only to values of its JSON type —
     gates use schema_of_variant because try_variant_get COERCES across
-    types (BIGINT -> '123', true -> 1.0), which is exactly the
-    fidelity hole the struct path had."""
+    types (BIGINT -> '123', true -> 1.0)."""
     jt = F.schema_of_variant(v)
     present = v.isNotNull()
     is_string = jt == "STRING"
@@ -342,9 +212,7 @@ def validate_json_variant(df: DataFrame, schema: dict,
                           column: str | Column = "json",
                           id_col: str = "id") -> DataFrame:
     """(id, valid) with exact document-path verdicts for flat scalar
-    object schemas — single try_parse_json, zero Python.
-
-    Fidelity the struct fast path cannot offer:
+    object schemas — single try_parse_json, zero Python:
     - '123' (JSON string) vs 123 (number) distinguished for type checks;
     - explicit null vs absent key distinguished: `required` passes on
       explicit null (PHP property_exists semantics);
@@ -392,53 +260,19 @@ def validate_json_auto(df: DataFrame, schema: dict,
                        id_col: str = "id",
                        version: str = "7",
                        url_cache: dict | None = None) -> DataFrame:
-    """(id, valid) per document, by the fastest capable path:
-    variant exact path > from_json struct path > Arrow document path.
-    Schemas with $refs route to the document path (both fast-path
-    planners reject the keyword), whose driver-side resolver consults
-    a pre-seeded ``url_cache`` (never the network)."""
-    col = F.col(column) if isinstance(column, str) else column
-    if variant_plan(schema) is not None:
+    """(id, valid) per document, by the fastest capable path: the
+    variant path when ``variant_plan`` accepts the schema, else the
+    Arrow document path. Schemas with $refs take the document path
+    (``variant_plan`` rejects the keyword), whose driver-side resolver
+    consults a pre-seeded ``url_cache`` (never the network)."""
+    if is_fast_path(schema):
         return validate_json_variant(df, schema, column, id_col)
-    plan = columnar_plan(schema)
-    if plan is None:
-        from json_schema_spark.validator.json_column import (
-            validate_json_column)
-        out = validate_json_column(df, schema, column, version,
-                                   url_cache=url_cache)
-        return out.select(F.col(id_col),
-                          F.col("_validation.valid").alias("valid"))
-
-    struct_type, cset, bare_required = plan
-    from json_schema_spark.constraints.compiler import compile_constraints
-
-    # PERMISSIVE from_json never returns a NULL struct — malformed JSON,
-    # non-object roots ('42', '[1,2,3]', 'null', '"s"'), and per-field
-    # numeric/boolean type mismatches all surface ONLY through the
-    # corrupt-record column. The schema demands type=object
-    # (columnar_plan gate), so corrupt != NULL fails the document,
-    # matching the document path's parse/type verdicts.
-    parse_type = T.StructType(
-        list(struct_type.fields) + [T.StructField(_CORRUPT, T.StringType())])
-    parsed = df.withColumn(
-        "_doc",
-        F.from_json(col, parse_type,
-                    {"columnNameOfCorruptRecord": _CORRUPT}))
-    flat = parsed.select(
-        F.col(id_col),
-        col.alias("_raw_json"),
-        F.col(f"_doc.{_CORRUPT}").isNull().alias("_parsed"),
-        *[F.col(f"_doc.{f.name}").alias(f.name)
-          for f in struct_type.fields])
-    compiled = compile_constraints(cset, flat.schema)
-    ok = F.col("_parsed")
-    for c in compiled:
-        ok = ok & c.predicate
-    for req in bare_required:
-        ok = ok & F.get_json_object(F.col("_raw_json"),
-                                    f"$.{req}").isNotNull()
-    return flat.select(F.col(id_col), ok.alias("valid"))
+    from json_schema_spark.validator.json_column import validate_json_column
+    out = validate_json_column(df, schema, column, version,
+                               url_cache=url_cache)
+    return out.select(F.col(id_col),
+                      F.col("_validation.valid").alias("valid"))
 
 
 def is_fast_path(schema: dict) -> bool:
-    return columnar_plan(schema) is not None
+    return variant_plan(schema) is not None

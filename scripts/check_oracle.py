@@ -35,7 +35,7 @@ def main():
     import __spark_entry__ as e
     from json_schema_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"

@@ -1,4 +1,4 @@
-"""Hybrid JSON validation routing: columnar fast path vs document path."""
+"""Hybrid JSON validation routing: variant fast path vs document path."""
 
 from __future__ import annotations
 
@@ -20,12 +20,81 @@ NESTED_SCHEMA = {
 }
 
 
+def _auto_routing_cases():
+    """(docs, schemas) of test_auto_routing_randomized_parity, seeded:
+    40 random documents and 12 random object schemas, some of them
+    with composite enum members or additionalProperties."""
+    import json
+    import random
+
+    rng = random.Random(99)
+
+    def rand_spec():
+        spec = {}
+        t = rng.choice([["string"], ["integer"], None, ["number", "null"]])
+        if t:
+            spec["type"] = t
+        if rng.random() < 0.3:
+            spec["minLength"] = rng.randint(0, 5)
+        if rng.random() < 0.3:
+            spec["minimum"] = rng.randint(-3, 3)
+        if rng.random() < 0.25:
+            spec["enum"] = rng.sample(
+                ["a", "b", 1, 2.5, None, [1], {"z": 1}], k=3)
+        return spec
+
+    def rand_doc():
+        r = rng.random()
+        if r < 0.1:
+            return "oops {"
+        if r < 0.2:
+            return json.dumps(rng.choice([1, "s", [2], None, True]))
+        keys = rng.sample(["a", "b", "c", "d"], k=rng.randint(0, 4))
+        vals = ["a", "b", 1, 2.5, None, [1], {"z": 1}, True]
+        return json.dumps({k: rng.choice(vals) for k in keys})
+
+    docs = [rand_doc() for _ in range(40)]
+    schemas = []
+    for _ in range(12):
+        schema = {"type": "object",
+                  "properties": {k: rand_spec()
+                                 for k in rng.sample(["a", "b", "c"],
+                                                     k=rng.randint(1, 3))}}
+        if rng.random() < 0.5:
+            schema["required"] = rng.sample(["a", "b"], k=1)
+        if rng.random() < 0.4:
+            schema["additionalProperties"] = rng.choice([True, False])
+        schemas.append(schema)
+    return docs, schemas
+
+
 def test_routing_decision():
-    from json_schema_spark.validator.hybrid import is_fast_path
+    from json_schema_spark.validator.hybrid import is_fast_path, variant_plan
 
     assert is_fast_path(FLAT_SCHEMA)
+    no_type = {k: v for k, v in FLAT_SCHEMA.items() if k != "type"}
+    assert is_fast_path(no_type)
     assert not is_fast_path(NESTED_SCHEMA)     # array property
     assert not is_fast_path({"allOf": []})     # combinator at top level
+    # a real document schema: definitions, a local $ref, a nested
+    # object and array items all take the document path
+    doc_shaped = {
+        "definitions": {"link": {"type": "string", "format": "uri"}},
+        "type": "object",
+        "required": ["id", "url", "fetch"],
+        "properties": {
+            "id": {"type": "integer", "minimum": 0},
+            "url": {"$ref": "#/definitions/link"},
+            "fetch": {"type": "object", "required": ["day"],
+                      "properties": {"day": {"type": "integer"}}},
+            "tags": {"type": "array", "items": {"type": "string"}},
+        },
+    }
+    assert not is_fast_path(doc_shaped)
+    _, schemas = _auto_routing_cases()
+    routed = [is_fast_path(s) for s in schemas]
+    assert routed == [variant_plan(s) is not None for s in schemas]
+    assert True in routed and False in routed
 
 
 def test_fast_path_is_pure_jvm(spark):
@@ -63,26 +132,46 @@ def test_fast_and_document_paths_agree(spark):
     assert any(v for v in fast.values())
 
 
-def test_absent_type_routes_to_document_path():
-    """Without an explicit type=object the NULL-struct encoding can't
-    distinguish 'malformed' from 'valid non-object' — must fall back."""
-    from json_schema_spark.validator.hybrid import is_fast_path
-
-    no_type = {k: v for k, v in FLAT_SCHEMA.items() if k != "type"}
-    assert not is_fast_path(no_type)
-
-
-def test_fast_path_malformed_and_nonobject_agree_with_document_path(spark):
-    """from_json -> NULL struct inputs: unparseable text, scalars,
-    arrays, JSON null. All must fail under type=object, exactly like the
-    document path (ADVICE r1, high)."""
+def test_absent_type_routes_to_variant_path(spark):
+    """Without an explicit type=object the variant path still tells
+    'malformed' from 'valid non-object': an untyped object schema takes
+    it, runs no Python, and gives the document path's verdicts —
+    non-object roots pass, malformed JSON fails."""
     from json_schema_spark.validator.hybrid import (is_fast_path,
                                                     validate_json_auto)
     from json_schema_spark.validator.json_column import (
         validate_json_column)
 
-    # no required fields: every constraint is null-tolerant, so before
-    # the _parsed guard these all validated as true on the fast path
+    no_type = {k: v for k, v in FLAT_SCHEMA.items() if k != "type"}
+    assert is_fast_path(no_type)
+    rows = [(1, "not json"), (2, "[1,2,3]"), (3, "42"), (4, "null"),
+            (5, '"str"'), (6, "{}"),
+            (7, '{"doc_id": 1, "lang": "en", "text": "hello world"}'),
+            (8, '{"doc_id": 1, "lang": "xx"}')]
+    df = spark.createDataFrame(rows, "id long, json string")
+    out = validate_json_auto(df, no_type, "json", id_col="id")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
+        assert marker not in plan
+    fast = {r["id"]: r["valid"] for r in out.collect()}
+    slow = {r["id"]: r["_validation"]["valid"] for r in
+            validate_json_column(df, no_type, "json").collect()}
+    assert fast == slow
+    assert fast == {1: False, 2: True, 3: True, 4: True, 5: True,
+                    6: False, 7: True, 8: False}
+
+
+def test_fast_path_malformed_and_nonobject_agree_with_document_path(spark):
+    """Unparseable text, scalars, arrays, JSON null: all must fail
+    under type=object, exactly like the document path (ADVICE r1,
+    high)."""
+    from json_schema_spark.validator.hybrid import (is_fast_path,
+                                                    validate_json_auto)
+    from json_schema_spark.validator.json_column import (
+        validate_json_column)
+
+    # no required fields: every property constraint passes on an absent
+    # key, so only the root checks can fail these documents
     schema = {"type": "object",
               "properties": {"text": {"type": "string", "minLength": 5}}}
     assert is_fast_path(schema)
@@ -100,7 +189,7 @@ def test_fast_path_malformed_and_nonobject_agree_with_document_path(spark):
 
 
 def test_fast_path_numeric_type_fidelity(spark):
-    """Integer fields parse as double + floor-check: JSON 1.0 counts as
+    """Integer checks accept fraction-free numbers: JSON 1.0 counts as
     integer (reference numeric unification), 1.5 and "abc" fail — same
     verdicts as the document path."""
     from json_schema_spark.validator.hybrid import (is_fast_path,
@@ -175,7 +264,7 @@ def test_variant_path_exact_document_parity(spark):
 
 def test_variant_path_null_vs_absent_required(spark):
     """PHP property_exists semantics: required passes on explicit null
-    (the struct path's documented caveat — closed by the variant path)."""
+    and fails on an absent key."""
     from json_schema_spark.validator.hybrid import validate_json_auto
 
     schema = {"type": "object", "required": ["a"]}
@@ -189,7 +278,7 @@ def test_variant_path_null_vs_absent_required(spark):
 
 def test_variant_path_string_number_fidelity(spark):
     """'123' (JSON string) is not an integer; 123 is not a string —
-    the struct path's Jackson-coercion hole, closed."""
+    no coercion between JSON types."""
     from json_schema_spark.validator.hybrid import validate_json_auto
 
     schema = {"type": "object", "properties": {"a": {"type": "string"}}}
@@ -304,15 +393,13 @@ def test_boolean_exclusive_routes_to_document_path(spark):
     import pytest
 
     from json_schema_spark.errors import SchemaError
-    from json_schema_spark.validator.hybrid import (columnar_plan,
-                                                    validate_json_auto,
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
                                                     variant_plan)
 
     schema = {"type": "object",
               "properties": {"a": {"minimum": 5,
                                    "exclusiveMinimum": True}}}
     assert variant_plan(schema) is None
-    assert columnar_plan(schema) is None
     df = spark.createDataFrame([(1, '{"a": 6}')], "id long, json string")
     with pytest.raises(SchemaError):
         validate_json_auto(df, schema, "json", id_col="id").collect()
@@ -323,11 +410,9 @@ def test_boolean_exclusive_routes_to_document_path(spark):
 
 
 def test_variant_path_additional_properties_false(spark):
-    """additionalProperties: false is enforced via json_object_keys —
-    the struct path (which cannot see undeclared keys) must refuse such
-    schemas instead of silently ignoring the keyword."""
-    from json_schema_spark.validator.hybrid import (columnar_plan,
-                                                    validate_json_auto,
+    """additionalProperties: false is enforced via json_object_keys,
+    with the document path's verdicts."""
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
                                                     variant_plan)
     from json_schema_spark.validator.json_column import (
         validate_json_column)
@@ -336,7 +421,6 @@ def test_variant_path_additional_properties_false(spark):
               "properties": {"a": {"type": "integer"}},
               "additionalProperties": False}
     assert variant_plan(schema) is not None
-    assert columnar_plan(schema) is None
     docs = [(1, '{"a": 1}'), (2, '{"a": 1, "b": 2}'), (3, "{}"),
             (4, '{"b": 2}'), (5, "[1]"), (6, "bad")]
     df = spark.createDataFrame(docs, "id long, json string")
@@ -359,54 +443,17 @@ def test_variant_path_additional_properties_false(spark):
 
 def test_auto_routing_randomized_parity(spark):
     """Fuzz validate_json_auto itself: whatever path a schema routes to
-    (variant / struct / document), verdicts must equal the document
-    path — including additionalProperties and composite enum members
-    that force fallbacks."""
-    import json
-    import random
-
+    (variant / document), verdicts must equal the document path —
+    including additionalProperties and composite enum members that
+    force fallbacks."""
     from json_schema_spark.validator.hybrid import validate_json_auto
     from json_schema_spark.validator.json_column import (
         validate_json_column)
 
-    rng = random.Random(99)
-
-    def rand_spec():
-        spec = {}
-        t = rng.choice([["string"], ["integer"], None, ["number", "null"]])
-        if t:
-            spec["type"] = t
-        if rng.random() < 0.3:
-            spec["minLength"] = rng.randint(0, 5)
-        if rng.random() < 0.3:
-            spec["minimum"] = rng.randint(-3, 3)
-        if rng.random() < 0.25:
-            spec["enum"] = rng.sample(
-                ["a", "b", 1, 2.5, None, [1], {"z": 1}], k=3)
-        return spec
-
-    def rand_doc():
-        r = rng.random()
-        if r < 0.1:
-            return "oops {"
-        if r < 0.2:
-            return json.dumps(rng.choice([1, "s", [2], None, True]))
-        keys = rng.sample(["a", "b", "c", "d"], k=rng.randint(0, 4))
-        vals = ["a", "b", 1, 2.5, None, [1], {"z": 1}, True]
-        return json.dumps({k: rng.choice(vals) for k in keys})
-
-    docs = [rand_doc() for _ in range(40)]
+    docs, schemas = _auto_routing_cases()
     df = spark.createDataFrame(list(enumerate(docs)),
                                "id long, json string")
-    for si in range(12):
-        schema = {"type": "object",
-                  "properties": {k: rand_spec()
-                                 for k in rng.sample(["a", "b", "c"],
-                                                     k=rng.randint(1, 3))}}
-        if rng.random() < 0.5:
-            schema["required"] = rng.sample(["a", "b"], k=1)
-        if rng.random() < 0.4:
-            schema["additionalProperties"] = rng.choice([True, False])
+    for si, schema in enumerate(schemas):
         fast = {r["id"]: r["valid"] for r in
                 validate_json_auto(df, schema, "json",
                                    id_col="id").collect()}
@@ -426,14 +473,13 @@ def test_unsafe_property_names_route_to_document_path(spark):
     Regression for the silently-inverted verdicts: {"a.b": "x"} judged
     invalid and {"a": {"b": "x"}} judged valid by the old variant path.
     """
-    from json_schema_spark.validator.hybrid import (
-        columnar_plan, validate_json_auto, variant_plan)
+    from json_schema_spark.validator.hybrid import (validate_json_auto,
+                                                    variant_plan)
 
     schema = {"type": "object",
               "properties": {"a.b": {"type": "string"}},
               "required": ["a.b"]}
     assert variant_plan(schema) is None
-    assert columnar_plan(schema) is None
 
     df = spark.createDataFrame(
         [(1, '{"a.b": "x"}'),        # flat key literally named "a.b": VALID
@@ -448,7 +494,6 @@ def test_unsafe_property_names_route_to_document_path(spark):
     for bad in ("a[0]", "a*", "a`b", 'a"b', "", "a b"):
         s = {"type": "object", "properties": {bad: {"type": "string"}}}
         assert variant_plan(s) is None, bad
-        assert columnar_plan(s) is None, bad
 
     # plain names (incl. dash/underscore) still take the fast path
     ok = {"type": "object",

@@ -787,3 +787,39 @@ def test_streaming_near_novel_filter_batches_and_restart(spark, tmp_path):
         "doc_id long, text string")
     f2(b3, 2)
     assert emitted[2] == {6}
+
+
+def test_streaming_near_novel_filter_replay_after_index_write(spark,
+                                                              tmp_path):
+    """A batch re-run after its index write (a crash before Spark
+    commits it) must hand the sink the same rows: the replay probes
+    only the complete batches below its id, never its own buckets. An
+    index_dir in the old append-only layout is refused."""
+    from json_schema_spark.ops.streaming import StreamingNearNovelFilter
+
+    out: dict[int, list] = {}
+
+    def make(idx):
+        return StreamingNearNovelFilter(
+            idx, sink=lambda df, bid: out.__setitem__(
+                bid, sorted(r.doc_id for r in df.collect())))
+
+    def words(stem):
+        return " ".join(f"{stem}{i}" for i in range(30))
+
+    b0 = spark.createDataFrame([(0, words("alpha"))],
+                               "doc_id long, text string")
+    b1 = spark.createDataFrame([(1, words("beta")), (2, words("gamma"))],
+                               "doc_id long, text string")
+    idx = str(tmp_path / "lsh_index")
+    f = make(idx)
+    f(b0, 0)
+    f(b1, 1)
+    assert out == {0: [0], 1: [1, 2]}
+    make(idx)(b1, 1)  # restarted instance replays batch 1
+    assert out == {0: [0], 1: [1, 2]}
+
+    old = str(tmp_path / "old_index")
+    b0.write.parquet(old)
+    with pytest.raises(ValueError, match="older layout"):
+        make(old)

@@ -39,14 +39,17 @@ def test_cast_json_object(spark):
 
 
 def test_remove_additional_and_defaults(spark):
+    from json_schema_spark.constraints.evaluator import apply_defaults
+    from json_schema_spark.constraints.spec import ConstraintSet
     from json_schema_spark.constraints.transforms import (
-        apply_column_defaults, remove_additional_columns)
+        remove_additional_columns)
 
     df = spark.createDataFrame([(1, None, "x")],
                                "a long, b string, extra string")
     pruned = remove_additional_columns(df, ["a", "b"])
     assert pruned.columns == ["a", "b"]
-    defaulted = apply_column_defaults(pruned, {"b": "fallback"})
+    defaulted = apply_defaults(
+        pruned, ConstraintSet(columns={"b": {"default": "fallback"}}))
     assert defaulted.head()["b"] == "fallback"
 
 

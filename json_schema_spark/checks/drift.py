@@ -1,20 +1,24 @@
-"""Distribution-drift detection: KS / PSI per time partition vs a baseline
-snapshot (north_star: "distribution-drift detection (KS/PSI on ... quantile
-sketches per warc_ts partition vs a baseline snapshot)").
+"""Distribution-drift detection: KS / PSI / Jensen-Shannon per day vs the
+input's overall distribution or a pinned baseline snapshot (north_star:
+"KS/PSI ... per warc_ts partition vs a baseline snapshot").
 
-Mechanics: one pass computes a per-day mergeable sketch —
-percentile_approx quantiles for numeric signals, category frequencies for
-categoricals. The KS statistic is evaluated driver-side on the (tiny)
-per-day sketch rows: at 10^12 rows the sketches are still O(days ×
-quantiles) — bytes, not data — so the driver-side step is free and the
-heavy lifting stays in partial+final aggregation on executors.
+- Exact distributed operators, one plan per statistic: categorical drift
+  (psi_by_period, js_divergence_by_period, drift_vs_baseline) sums PSI
+  and JS terms over a days x categories grid (``_freq_drift``); numeric
+  drift (ks_by_period, ks_vs_baseline) takes the max ECDF gap over a
+  days x floor(v * quantize) buckets grid (``_ks``). Each operator only
+  supplies its reference distribution. Shuffles are O(grid), and the
+  values are exact, so an oracle engine reproduces them.
+- ``drift_report``: per-day mergeable sketches (percentile_approx
+  quantiles, category counts) in one pass, compared driver-side on the
+  tiny sketch rows.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_PROBS = [i / 20 for i in range(21)]  # 0.0, 0.05, ..., 1.0
@@ -38,14 +42,8 @@ def daily_numeric_sketch(df: DataFrame, value_col,
 
 def daily_category_freqs(df: DataFrame, cat_col: str,
                          ts_col: str = "warc_ts") -> DataFrame:
-    """(day, map<category, relative_freq>) per day."""
-    counts = (df
-              .select(F.to_date(F.col(ts_col)).alias("day"),
-                      F.coalesce(F.col(cat_col), F.lit("__null__"))
-                       .alias("cat"))
-              .groupBy("day", "cat")
-              .agg(F.count(F.lit(1)).alias("n")))
-    return (counts
+    """(day, map<category, count>, total) per day."""
+    return (_cat_counts(df, cat_col, ts_col)
             .groupBy("day")
             .agg(F.map_from_entries(
                      F.collect_list(F.struct("cat", "n"))).alias("counts"),
@@ -104,39 +102,59 @@ def js_divergence(base_freqs: dict[str, float],
     return total
 
 
+def _cat_counts(df: DataFrame, cat_col: str, ts_col: str) -> DataFrame:
+    """(day, cat, n): rows per day and category; NULL counts as
+    "__null__"."""
+    day = F.to_date(F.col(ts_col)).alias("day")
+    return (df.select(day, F.coalesce(F.col(cat_col), F.lit("__null__"))
+                      .alias("cat"))
+            .groupBy("day", "cat").agg(F.count(F.lit(1)).alias("n")))
+
+
+def _freq_drift(counts: DataFrame, ref: DataFrame,
+                eps: float = 1e-6) -> DataFrame:
+    """(day, psi, js_divergence) of each day's category frequencies p
+    against the reference distribution ``ref(cat, q)``.
+
+    Plan: a tiny day-totals agg, a broadcast days x ref-categories grid
+    left-joined to the counts (a category absent on a day has p = 0:
+    PSI clamps both sides to eps, JS needs no clamp), one per-day sum.
+    Every shuffle is O(days x categories)."""
+    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_total"))
+    p = (F.coalesce(F.col("n"), F.lit(0)).cast("double")
+         / F.col("day_total").cast("double"))
+    grid = (day_totals.crossJoin(F.broadcast(ref))
+            .join(counts, ["day", "cat"], "left")
+            .select("day", p.alias("p"), "q"))
+    p, q = F.col("p"), F.col("q")
+    p_c, q_c = F.greatest(p, F.lit(eps)), F.greatest(q, F.lit(eps))
+    m = (p + q) / 2
+    psi_term = (p_c - q_c) * F.log(p_c / q_c)
+    js_term = (F.when(p > 0, p * F.log(p / m)).otherwise(F.lit(0.0)) / 2
+               + F.when(q > 0, q * F.log(q / m)).otherwise(F.lit(0.0)) / 2)
+    return (grid.groupBy("day")
+            .agg(F.round(F.sum(psi_term), 6).alias("psi"),
+                 F.round(F.sum(js_term), 6).alias("js_divergence"))
+            .orderBy("day"))
+
+
+def _overall_freqs(counts: DataFrame) -> DataFrame:
+    """(cat, q): the all-days distribution, q = cat_total / grand_total."""
+    overall = counts.groupBy("cat").agg(F.sum("n").alias("cat_total"))
+    grand = counts.agg(F.sum("n").alias("grand_total"))
+    return overall.crossJoin(F.broadcast(grand)).select(
+        "cat", (F.col("cat_total").cast("double")
+                / F.col("grand_total").cast("double")).alias("q"))
+
+
 def psi_by_period(df: DataFrame, cat_col: str, ts_col: str = "ts",
                   eps: float = 1e-6) -> DataFrame:
     """Fully-distributed PSI per day of a categorical column vs the
-    overall (all-days) distribution: (day, psi, drift-ranked) — exact
-    counts, no sketches, so the result is engine-reproducible.
-
-    Plan shape: one groupBy(day, cat) count, a tiny day-totals agg, a
-    broadcast-sized overall distribution, cross of days x categories to
-    account for absent categories, final per-day sum. Every shuffle is
-    O(days x categories)."""
-    day = F.to_date(F.col(ts_col)).alias("day")
-    counts = (df.select(day, F.coalesce(F.col(cat_col), F.lit("__null__"))
-                        .alias("cat"))
-              .groupBy("day", "cat").agg(F.count(F.lit(1)).alias("n")))
-    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_total"))
-    overall = (counts.groupBy("cat").agg(F.sum("n").alias("cat_total")))
-    grand = counts.agg(F.sum("n").alias("grand_total"))
-
-    days_x_cats = (day_totals.crossJoin(F.broadcast(overall))
-                   .crossJoin(F.broadcast(grand)))
-    joined = (days_x_cats
-              .join(counts, ["day", "cat"], "left")
-              .withColumn("p", F.coalesce(F.col("n"), F.lit(0)).cast(
-                  "double") / F.col("day_total").cast("double"))
-              .withColumn("q", F.col("cat_total").cast("double")
-                          / F.col("grand_total").cast("double"))
-              .withColumn("p_c", F.greatest(F.col("p"), F.lit(eps)))
-              .withColumn("q_c", F.greatest(F.col("q"), F.lit(eps))))
-    term = (F.col("p_c") - F.col("q_c")) * F.log(F.col("p_c")
-                                                 / F.col("q_c"))
-    return (joined.groupBy("day")
-            .agg(F.round(F.sum(term), 6).alias("psi"))
-            .orderBy("day"))
+    overall (all-days) distribution: (day, psi) — exact counts, no
+    sketches, so the result is engine-reproducible."""
+    counts = _cat_counts(df, cat_col, ts_col)
+    return _freq_drift(counts, _overall_freqs(counts), eps) \
+        .select("day", "psi")
 
 
 def js_divergence_by_period(df: DataFrame, cat_col: str,
@@ -146,34 +164,10 @@ def js_divergence_by_period(df: DataFrame, cat_col: str,
     [0, ln 2] — unlike PSI it needs no epsilon clamping (0*ln 0 terms
     vanish), is symmetric, and never diverges on absent categories,
     which makes it the better alert threshold for long-tailed web
-    categories. Same exact distributed plan shape as psi_by_period:
-    every shuffle is O(days x categories)."""
-    day = F.to_date(F.col(ts_col)).alias("day")
-    counts = (df.select(day, F.coalesce(F.col(cat_col), F.lit("__null__"))
-                        .alias("cat"))
-              .groupBy("day", "cat").agg(F.count(F.lit(1)).alias("n")))
-    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_total"))
-    overall = counts.groupBy("cat").agg(F.sum("n").alias("cat_total"))
-    grand = counts.agg(F.sum("n").alias("grand_total"))
-
-    joined = (day_totals.crossJoin(F.broadcast(overall))
-              .crossJoin(F.broadcast(grand))
-              .join(counts, ["day", "cat"], "left")
-              .withColumn("p", F.coalesce(F.col("n"), F.lit(0)).cast(
-                  "double") / F.col("day_total").cast("double"))
-              .withColumn("q", F.col("cat_total").cast("double")
-                          / F.col("grand_total").cast("double"))
-              .withColumn("m", (F.col("p") + F.col("q")) / 2))
-    term = (
-        F.when(F.col("p") > 0,
-               F.col("p") * F.log(F.col("p") / F.col("m")))
-        .otherwise(F.lit(0.0)) / 2
-        + F.when(F.col("q") > 0,
-                 F.col("q") * F.log(F.col("q") / F.col("m")))
-        .otherwise(F.lit(0.0)) / 2)
-    return (joined.groupBy("day")
-            .agg(F.round(F.sum(term), 6).alias("js_divergence"))
-            .orderBy("day"))
+    categories. Same exact plan as psi_by_period."""
+    counts = _cat_counts(df, cat_col, ts_col)
+    return _freq_drift(counts, _overall_freqs(counts)) \
+        .select("day", "js_divergence")
 
 
 def drift_vs_baseline(df: DataFrame, cat_col: str,
@@ -188,42 +182,55 @@ def drift_vs_baseline(df: DataFrame, cat_col: str,
     pins at deploy time and what the streaming monitor replays per
     micro-batch). Returns (day, psi, js_divergence).
 
-    Plan: one groupBy(day, cat) count over the scan, a broadcast
-    days x categories grid (baseline categories UNION observed ones,
-    absent side at frequency 0 — PSI clamps to eps, JS needs no
-    clamp), one per-day sum. Every shuffle is O(days x categories)."""
-    spark = df.sparkSession
-    day = F.to_date(F.col(ts_col)).alias("day")
-    counts = (df.select(day, F.coalesce(F.col(cat_col), F.lit("__null__"))
-                        .alias("cat"))
-              .groupBy("day", "cat").agg(F.count(F.lit(1)).alias("n")))
-    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_total"))
-    base = spark.createDataFrame(
+    The reference categories are the baseline's UNION the observed
+    ones; a category on one side only has frequency 0 on the other."""
+    counts = _cat_counts(df, cat_col, ts_col)
+    base = df.sparkSession.createDataFrame(
         [(k, float(v)) for k, v in sorted(baseline_freqs.items())],
         "cat string, q double")
-    observed = counts.select("cat").distinct()
-    cats = (observed.join(base, "cat", "full_outer")
-            .select("cat", F.coalesce(F.col("q"), F.lit(0.0)).alias("q")))
+    ref = (counts.select("cat").distinct()
+           .join(base, "cat", "full_outer")
+           .select("cat", F.coalesce(F.col("q"), F.lit(0.0)).alias("q")))
+    return _freq_drift(counts, ref, eps)
 
-    grid = (day_totals.crossJoin(F.broadcast(cats))
-            .join(counts, ["day", "cat"], "left")
-            .withColumn("p", F.coalesce(F.col("n"), F.lit(0)).cast(
-                "double") / F.col("day_total").cast("double"))
-            .withColumn("m", (F.col("p") + F.col("q")) / 2))
-    psi_term = ((F.greatest(F.col("p"), F.lit(eps))
-                 - F.greatest(F.col("q"), F.lit(eps)))
-                * F.log(F.greatest(F.col("p"), F.lit(eps))
-                        / F.greatest(F.col("q"), F.lit(eps))))
-    js_term = (
-        F.when(F.col("p") > 0,
-               F.col("p") * F.log(F.col("p") / F.col("m")))
-        .otherwise(F.lit(0.0)) / 2
-        + F.when(F.col("q") > 0,
-                 F.col("q") * F.log(F.col("q") / F.col("m")))
-        .otherwise(F.lit(0.0)) / 2)
-    return (grid.groupBy("day")
-            .agg(F.round(F.sum(psi_term), 6).alias("psi"),
-                 F.round(F.sum(js_term), 6).alias("js_divergence"))
+
+def _bucket(value_col: str, quantize: float) -> Column:
+    """The KS value axis: bucket b = floor(value * quantize) — floor is
+    deterministic in every engine (round() half-mode is not)."""
+    return F.floor(F.col(value_col).cast("double") * F.lit(quantize)) \
+        .cast("bigint").alias("b")
+
+
+def _ks(df: DataFrame, value_col: str, ts_col: str, quantize: float,
+        ref) -> DataFrame:
+    """(day, ks): the max gap between each day's bucket ECDF and a
+    reference CDF. ``ref(counts)`` maps the (day, b, n) counts to
+    (b, w, w_total) rows; the reference CDF at b is
+    sum(w up to b) / w_total.
+
+    Plan: one groupBy(day, bucket) count over the scan, a broadcast
+    grid of days x reference buckets, two running sums over ONE
+    (day, b) window, one final per-day max. Every shuffle is
+    O(days x buckets), independent of row count."""
+    counts = (df.filter(F.col(value_col).isNotNull())
+              .select(F.to_date(F.col(ts_col)).alias("day"),
+                      _bucket(value_col, quantize))
+              .groupBy("day", "b").agg(F.count(F.lit(1)).alias("n")))
+    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_n"))
+    grid = (day_totals.crossJoin(F.broadcast(ref(counts)))
+            .join(counts, ["day", "b"], "left")
+            .withColumn("n", F.coalesce(F.col("n"), F.lit(0))))
+    w = Window.partitionBy("day").orderBy("b") \
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    def cdf(mass: str, total: str) -> Column:
+        return (F.sum(mass).over(w).cast("double")
+                / F.col(total).cast("double"))
+
+    gaps = grid.withColumn("gap", F.abs(cdf("n", "day_n")
+                                        - cdf("w", "w_total")))
+    return (gaps.groupBy("day")
+            .agg(F.round(F.max("gap"), 6).alias("ks"))
             .orderBy("day"))
 
 
@@ -234,45 +241,17 @@ def ks_by_period(df: DataFrame, value_col: str, ts_col: str = "ts",
 
     Exactness demands evaluating |F_day(x) - F_all(x)| at every jump
     point, so the value axis is first QUANTIZED to buckets of width
-    1/quantize via floor(value*quantize) — floor is deterministic in
-    every engine (round() half-mode is not), making this oracle-
-    reproducible. The grid after quantization is days x distinct
-    buckets; all shuffles are O(grid), independent of row count. At
-    web scale pick `quantize` so the bucket count stays ~1e4 —
-    the KS of the quantized distribution is then exact, with
-    discretization error bounded by the bucket mass.
+    1/quantize (``_bucket``), making this oracle-reproducible. The grid
+    after quantization is days x distinct buckets. At web scale pick
+    `quantize` so the bucket count stays ~1e4 — the KS of the quantized
+    distribution is then exact, with discretization error bounded by
+    the bucket mass."""
+    def overall(counts: DataFrame) -> DataFrame:
+        bucket_totals = counts.groupBy("b").agg(F.sum("n").alias("w"))
+        grand = counts.agg(F.sum("n").alias("w_total"))
+        return bucket_totals.crossJoin(F.broadcast(grand))
 
-    Plan: one groupBy(day, bucket) count over the scan, a broadcast
-    grid of days x buckets, two running-sum windows (cumulative ECDFs),
-    one final per-day max."""
-    from pyspark.sql import Window as W
-
-    day = F.to_date(F.col(ts_col)).alias("day")
-    b = F.floor(F.col(value_col).cast("double") * F.lit(quantize)) \
-        .cast("bigint").alias("b")
-    counts = (df.filter(F.col(value_col).isNotNull())
-              .select(day, b)
-              .groupBy("day", "b").agg(F.count(F.lit(1)).alias("n")))
-    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_n"))
-    bucket_totals = counts.groupBy("b").agg(F.sum("n").alias("all_n"))
-    grand = counts.agg(F.sum("n").alias("grand_n"))
-
-    grid = (day_totals.crossJoin(F.broadcast(bucket_totals))
-            .crossJoin(F.broadcast(grand))
-            .join(counts, ["day", "b"], "left")
-            .withColumn("n", F.coalesce(F.col("n"), F.lit(0))))
-    w_day = W.partitionBy("day").orderBy("b") \
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum_day = F.sum("n").over(w_day).cast("double") \
-        / F.col("day_n").cast("double")
-    w_all = W.partitionBy("day").orderBy("b") \
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum_all = F.sum("all_n").over(w_all).cast("double") \
-        / F.col("grand_n").cast("double")
-    gaps = grid.withColumn("gap", F.abs(cum_day - cum_all))
-    return (gaps.groupBy("day")
-            .agg(F.round(F.max("gap"), 6).alias("ks"))
-            .orderBy("day"))
+    return _ks(df, value_col, ts_col, quantize, overall)
 
 
 def numeric_baseline_snapshot(df: DataFrame, value_col: str,
@@ -282,8 +261,7 @@ def numeric_baseline_snapshot(df: DataFrame, value_col: str,
     deploy time. One groupBy over the scan; the collected map is
     O(buckets), not data."""
     rows = (df.filter(F.col(value_col).isNotNull())
-            .select(F.floor(F.col(value_col).cast("double")
-                            * F.lit(quantize)).cast("bigint").alias("b"))
+            .select(_bucket(value_col, quantize))
             .groupBy("b").agg(F.count(F.lit(1)).alias("n"))
             .collect())
     total = sum(r["n"] for r in rows) or 1
@@ -299,46 +277,22 @@ def ks_vs_baseline(df: DataFrame, value_col: str,
     completing the {per-period, vs-baseline} x {categorical, numeric}
     drift matrix): (day, ks). The baseline is a quantized-bucket
     frequency map as produced by numeric_baseline_snapshot — both
-    sides quantize with the same floor(value*quantize), so the
-    statistic is the exact KS of the two quantized distributions and
-    engine-reproducible (floor is deterministic; round half-modes are
-    not).
-
-    Plan: one groupBy(day, bucket) count over the scan, a broadcast
-    grid of days x (observed UNION baseline) buckets, two running-sum
-    windows (cumulative ECDF vs cumulative baseline CDF), one final
-    per-day max. Every shuffle is O(days x buckets), independent of
-    row count; buckets absent from either side carry zero mass on
-    that side, so support mismatch is measured, not an error."""
-    from pyspark.sql import Window as W
-
-    spark = df.sparkSession
-    day = F.to_date(F.col(ts_col)).alias("day")
-    b = F.floor(F.col(value_col).cast("double") * F.lit(quantize)) \
-        .cast("bigint").alias("b")
-    counts = (df.filter(F.col(value_col).isNotNull())
-              .select(day, b)
-              .groupBy("day", "b").agg(F.count(F.lit(1)).alias("n")))
-    day_totals = counts.groupBy("day").agg(F.sum("n").alias("day_n"))
-    base = spark.createDataFrame(
+    sides quantize with the same ``_bucket``, so the statistic is the
+    exact KS of the two quantized distributions. The reference buckets
+    are the observed UNION the baseline ones; a bucket absent from
+    either side carries zero mass there, so support mismatch is
+    measured, not an error."""
+    base = df.sparkSession.createDataFrame(
         [(int(k), float(v)) for k, v in sorted(baseline_freqs.items())],
-        "b bigint, q double")
-    buckets = (counts.select("b").distinct()
-               .join(base, "b", "full_outer")
-               .select("b", F.coalesce(F.col("q"), F.lit(0.0)).alias("q")))
+        "b bigint, w double")
 
-    grid = (day_totals.crossJoin(F.broadcast(buckets))
-            .join(counts, ["day", "b"], "left")
-            .withColumn("n", F.coalesce(F.col("n"), F.lit(0))))
-    w = W.partitionBy("day").orderBy("b") \
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum_day = F.sum("n").over(w).cast("double") \
-        / F.col("day_n").cast("double")
-    cum_base = F.sum("q").over(w)
-    gaps = grid.withColumn("gap", F.abs(cum_day - cum_base))
-    return (gaps.groupBy("day")
-            .agg(F.round(F.max("gap"), 6).alias("ks"))
-            .orderBy("day"))
+    def baseline(counts: DataFrame) -> DataFrame:
+        return (counts.select("b").distinct()
+                .join(base, "b", "full_outer")
+                .select("b", F.coalesce(F.col("w"), F.lit(0.0)).alias("w"),
+                        F.lit(1.0).alias("w_total")))
+
+    return _ks(df, value_col, ts_col, quantize, baseline)
 
 
 def drift_report(df: DataFrame,
@@ -437,14 +391,12 @@ def rate_anomalies(df: DataFrame, ts_col: str = "ts",
     rows only; z is the sentinel -1.0 for zero-variance-baseline
     flags (z is undefined there, and a NULL double round-trips
     differently across engines)."""
-    from pyspark.sql import Window as W
-
     counts = (df.filter(F.col(ts_col).isNotNull())
               .groupBy(
                   F.col(entity_col).alias("entity"),
                   F.date_trunc(bucket, F.col(ts_col)).alias("_b"))
               .agg(F.count(F.lit(1)).alias("n")))
-    w = (W.partitionBy("entity").orderBy("_b")
+    w = (Window.partitionBy("entity").orderBy("_b")
          .rowsBetween(-baseline_windows, -1))
     k = F.count("n").over(w)
     s = F.sum("n").over(w)

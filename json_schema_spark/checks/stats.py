@@ -84,16 +84,6 @@ def length_histogram(df: DataFrame, col: str,
             .orderBy("bucket_start"))
 
 
-def numeric_quantiles(df: DataFrame, col: str,
-                      probs: list[float] | None = None,
-                      accuracy: int = 10000) -> list[float]:
-    """Mergeable quantile sketch (Greenwald-Khanna via percentile_approx).
-    Driver-side list out — used by the drift detector."""
-    probs = probs or [i / 20 for i in range(21)]
-    row = df.agg(F.percentile_approx(col, probs, accuracy).alias("q")).head()
-    return list(row["q"]) if row and row["q"] is not None else []
-
-
 def time_rollup(df, value_col: str, ts_col: str = "ts",
                 granularities: tuple[str, ...] = ("day", "hour")):
     """Hypertable-style multi-granularity rollup in ONE pass: for each

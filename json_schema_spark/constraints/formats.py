@@ -250,7 +250,3 @@ def format_predicate(name: str, col: Column) -> Column:
     # format applies to strings only; NULL (or non-string handled upstream)
     # passes — null discipline: never let the predicate stay NULL
     return F.coalesce(col.isNull() | pred, F.lit(False)) | col.isNull()
-
-
-def known_formats() -> list[str]:
-    return sorted(_REGISTRY)

@@ -162,6 +162,27 @@ def _complete_versions(root: str, prefix: str) -> list[int]:
     return sorted(out)
 
 
+def _latest_version(root: str, prefix: str,
+                    below: int | None = None) -> int | None:
+    """The newest complete version under ``root`` (below ``below``)."""
+    return max((v for v in _complete_versions(root, prefix)
+                if below is None or v < below), default=None)
+
+
+def _prune_versions(root: str, prefix: str, below: int,
+                    keep: int | None) -> None:
+    """Delete the complete versions below ``below`` other than ``keep``
+    — the one a replay of batch ``below`` probes. Each version is a
+    full state copy, so at most two stay on disk."""
+    import os
+    import shutil
+
+    for v in _complete_versions(root, prefix):
+        if v < below and v != keep:
+            shutil.rmtree(os.path.join(root, f"{prefix}={v}"),
+                          ignore_errors=True)
+
+
 class ShardedNovelFilter:
     """Cross-micro-batch incremental dedup: a foreachBatch processor
     that emits each key at most once over the stream's lifetime. The
@@ -233,12 +254,7 @@ class ShardedNovelFilter:
         else:
             with open(marker, "w") as fh:
                 fh.write(scheme)
-        self.current_epoch = self._latest_epoch()
-
-    def _latest_epoch(self, below: int | None = None) -> int | None:
-        done = [e for e in _complete_versions(self.state_dir, "epoch")
-                if below is None or e < below]
-        return max(done, default=None)
+        self.current_epoch = _latest_version(state_dir, "epoch")
 
     def _epoch_path(self, epoch: int) -> str:
         import os
@@ -246,13 +262,11 @@ class ShardedNovelFilter:
         return os.path.join(self.state_dir, f"epoch={epoch}")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
         from json_schema_spark.textops.dedup import (
             bloom_probe_shards, build_bloom_shards, merge_bloom_shards)
 
         spark = batch_df.sparkSession
-        prior = self._latest_epoch(below=batch_id)
+        prior = _latest_version(self.state_dir, "epoch", below=batch_id)
         batch_df = batch_df.persist()
         try:
             if prior is not None:
@@ -277,12 +291,7 @@ class ShardedNovelFilter:
             merged.write.mode("overwrite").parquet(
                 self._epoch_path(batch_id))
             self.current_epoch = batch_id
-            # each epoch is a FULL filter copy (n_shards x
-            # bits_per_shard/8 bytes): keep the one a replay of this
-            # batch probes and drop the older ones
-            for e in _complete_versions(self.state_dir, "epoch"):
-                if e < batch_id and e != prior:
-                    shutil.rmtree(self._epoch_path(e), ignore_errors=True)
+            _prune_versions(self.state_dir, "epoch", batch_id, prior)
         finally:
             batch_df.unpersist()
 
@@ -292,20 +301,21 @@ class StreamingNearNovelFilter:
     MinHash-LSH analog of ShardedNovelFilter — "have we seen
     something LIKE this" instead of "this exact key". State is the
     persistable LSH bucket index (textops.dedup.build_minhash_index
-    rows) under ``index_dir``, one directory per batch: bucket rows are
-    immutable facts, so there is no merge — each batch writes the
-    buckets of its NOVEL rows only to ``batch=<batch_id>`` (keep-first:
-    near-dups of an indexed doc never enter the index, so state grows
-    with the distinct corpus, not the stream). Restart recovery is
-    automatic — the index on disk IS the state.
+    rows) under ``index_dir``, versioned by batch id the way
+    ShardedNovelFilter's epochs are. Keep-first: only NOVEL rows'
+    buckets enter the index (near-dups of an indexed doc never do), so
+    state grows with the distinct corpus, not the stream. Restart
+    recovery is automatic — the index on disk IS the state.
 
-    Per batch: probe against the complete batch directories BELOW
-    ``batch_id`` (candidates only — LSH recall applies: a near-dup that
-    shares no band bucket re-emits), hand rows with no candidate to
-    ``sink``, then overwrite ``batch=<batch_id>`` with their buckets.
-    Like ShardedNovelFilter's epochs this is replay-safe: a batch re-run
-    after its index write (crash before Spark's commit) never probes its
-    own buckets, so it hands the sink the same rows. Caveats: as with
+    Per batch: probe against the newest complete ``batch=<j>`` with j
+    BELOW ``batch_id`` (candidates only — LSH recall applies: a near-dup
+    that shares no band bucket re-emits), hand rows with no candidate to
+    ``sink``, overwrite ``batch=<batch_id>`` with that index plus their
+    buckets, and delete the older versions other than the one probed.
+    A batch's probe reads one index, however long the stream. This is
+    replay-safe: a batch re-run after its index write (crash before
+    Spark's commit) probes the same prior version, never its own
+    buckets, so it hands the sink the same rows. Caveats: as with
     ShardedNovelFilter, within-batch near-dups all pass (the probe sees
     only prior batches — near_dedup_corpus the batch first if that
     matters). Rows whose text yields no shingle (< k words) never index
@@ -343,18 +353,16 @@ class StreamingNearNovelFilter:
         from json_schema_spark.textops.dedup import (build_minhash_index,
                                                      novel_vs_index)
 
-        spark = batch_df.sparkSession
-        prior = [os.path.join(self.index_dir, f"batch={j}")
-                 for j in _complete_versions(self.index_dir, "batch")
-                 if j < batch_id]
-        if prior:
-            index = spark.read.parquet(*prior)
+        prior = _latest_version(self.index_dir, "batch", below=batch_id)
+        if prior is not None:
+            index = batch_df.sparkSession.read.parquet(
+                os.path.join(self.index_dir, f"batch={prior}"))
             novel = novel_vs_index(
                 batch_df, index, self.text_col, self.id_col,
                 k=self.k, num_hashes=self.num_hashes, bands=self.bands,
                 max_bucket_size=self.max_bucket_size)
         else:
-            novel = batch_df
+            index, novel = None, batch_df
         # two consumers (sink + the bucket write) — persist so the
         # probe anti-join doesn't run twice
         novel = novel.persist()
@@ -363,10 +371,12 @@ class StreamingNearNovelFilter:
                 self.sink(novel, batch_id)
             else:
                 self.novel_count += novel.count()
-            (build_minhash_index(novel, self.text_col, self.id_col,
-                                 self.k, self.num_hashes, self.bands)
-             .write.mode("overwrite")
-             .parquet(os.path.join(self.index_dir, f"batch={batch_id}")))
+            fresh = build_minhash_index(novel, self.text_col, self.id_col,
+                                        self.k, self.num_hashes, self.bands)
+            (fresh if index is None else index.unionByName(fresh)) \
+                .write.mode("overwrite") \
+                .parquet(os.path.join(self.index_dir, f"batch={batch_id}"))
+            _prune_versions(self.index_dir, "batch", batch_id, prior)
         finally:
             novel.unpersist()
 

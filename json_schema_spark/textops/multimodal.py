@@ -1724,18 +1724,6 @@ def near_dedup_media(df: DataFrame, blob_col: str,
     return df.join(losers, id_col, "left_anti")
 
 
-def with_media_metadata(df: DataFrame, blob_col: str,
-                        meta_col: str = "media_meta") -> DataFrame:
-    """Typed metadata struct computed JVM-side (no Python): media type is
-    left null here (magic sniffing happens in the batch extractor);
-    n_bytes/digest are pure expressions."""
-    blob = F.col(blob_col)
-    return df.withColumn(meta_col, F.struct(
-        F.lit(None).cast("string").alias("media_type"),
-        F.octet_length(blob).cast("long").alias("n_bytes"),
-        F.md5(blob).alias("digest")))
-
-
 def extract_media_features(df: DataFrame, blob_col: str,
                            id_col: str) -> DataFrame:
     """Arrow-batched feature extraction over binary blobs via mapInPandas:

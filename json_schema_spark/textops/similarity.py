@@ -1,18 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
-- ``cosine_topk``: exact brute-force top-k — the correctness baseline.
-  The dot products are pure zip_with/aggregate expressions (JVM-side,
-  codegen'd); ranking is a window over the (queries x corpus) cross
-  product. Right-sized for q x N up to ~10^8 pairs; beyond that use the
-  LSH path.
-- ``hyperplane_lsh_buckets`` / ``lsh_topk``: random-hyperplane LSH — each
-  vector gets a b-bit sign bucket from b fixed pseudo-random hyperplanes
-  (deterministically derived from a seed via md5, so oracles can
-  reproduce them). ANN search only compares vectors in the query's
-  bucket (optionally with multi-probe neighbors), turning the cross
-  product into a bucket-equi-join that shuffles on the bucket key and
-  scales linearly with corpus size.
+Five top-k searches, all returning (query_id, neighbor_id, rank,
+cosine_sim) and differing only in which (query, corpus) pairs they
+compare:
+- ``cosine_topk``: exact brute force over the broadcast (queries x
+  corpus) cross product — the correctness baseline, right-sized for
+  q x N up to ~10^8 pairs.
+- ``cosine_topk_quantized``: the same cross product on int-quantized
+  vectors (integer dots, one double ratio).
+- ``lsh_topk``: random-hyperplane LSH — each vector gets a b-bit sign
+  bucket from b pseudo-random hyperplanes (derived from a seed via md5,
+  so oracles can reproduce them), and queries compare only within their
+  bucket (optionally its hamming-1 neighbors). ``lsh_topk_multi`` ORs
+  several independent tables.
+- ``ivf_topk``: queries probe their ``nprobe`` nearest centroid cells.
+The bucketed paths turn the cross product into an equi-join that
+shuffles on the bucket/cell key and scales linearly with corpus size.
+Every search shares one side projection (``_side``), one pair cosine
+(``_pair_cosine``) and one rank tail (``_top_k``). The dot products are
+pure zip_with/aggregate expressions (JVM-side, codegen'd).
 
 The left fold in ``dot`` fixes the summation order, so an oracle engine
 evaluating the same fold gets bit-identical doubles.
@@ -40,6 +46,35 @@ def l2_norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, side: str,
+          *extra: Column) -> DataFrame:
+    """One side of an ANN pair join: (query_id, _qv, _qn, *extra) for
+    side "q", (neighbor_id, _cv, _cn, *extra) for side "c". Norms
+    materialize per ROW, not per pair: cosine() inline would re-fold
+    each vector's self-dot once per pair it appears in."""
+    name = "query_id" if side == "q" else "neighbor_id"
+    return df.select(F.col(id_col).alias(name),
+                     F.col(vec_col).alias(f"_{side}v"),
+                     l2_norm(F.col(vec_col)).alias(f"_{side}n"), *extra)
+
+
+def _pair_cosine() -> Column:
+    """Cosine of a joined (_qv, _qn) x (_cv, _cn) pair."""
+    return (dot(F.col("_qv"), F.col("_cv"))
+            / (F.col("_qn") * F.col("_cn")))
+
+
+def _top_k(sim: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine_sim): each query's k best
+    candidates by cosine_sim, ties to the lowest neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id"))
+    return (sim.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank",
+                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
 
 
 def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -81,25 +116,12 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
                 queries.select(F.col(query_id_col).alias(id_col),
                                F.col(vec_col)),
                 corpus, k=k, id_col=id_col, vec_col=vec_col)
-    q = queries.select(F.col(query_id_col).alias("query_id"),
-                       F.col(vec_col).alias("_qv"),
-                       l2_norm(F.col(vec_col)).alias("_qn"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("_cv"),
-                      l2_norm(F.col(vec_col)).alias("_cn"))
-    # norms materialize per ROW, not per pair: cosine() inline would
-    # re-fold each corpus vector's self-dot once per query
+    q = _side(queries, query_id_col, vec_col, "q")
+    c = _side(corpus, id_col, vec_col, "c")
     sim = (F.broadcast(q).crossJoin(c)
            .filter(F.col("query_id") != F.col("neighbor_id"))
-           .withColumn("cosine_sim",
-                       dot(F.col("_qv"), F.col("_cv"))
-                       / (F.col("_qn") * F.col("_cn"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+           .withColumn("cosine_sim", _pair_cosine()))
+    return _top_k(sim, k)
 
 
 def quantize_embeddings(df: DataFrame, id_col: str = "vec_id",
@@ -161,41 +183,30 @@ def cosine_topk_quantized(queries: DataFrame, corpus: DataFrame,
                 f"query side has {n_q} rows (> max_broadcast_queries="
                 f"{max_broadcast_queries}); use lsh_topk_multi or "
                 "raise the bound if genuinely broadcast-safe")
-    int_dot = F.lit(0).cast("bigint")
 
-    def qq(col: Column) -> Column:
+    def int_dot(a: Column, b: Column) -> Column:
         return F.aggregate(
-            F.zip_with(col, col, lambda a, b: (a * b).cast("bigint")),
+            F.zip_with(a, b, lambda x, y: (x * y).cast("bigint")),
             F.lit(0).cast("bigint"), lambda acc, x: acc + x)
 
     qs = (quantize_embeddings(queries, id_col, vec_col, bits)
           .select(F.col(id_col).alias("query_id"),
                   F.col("qvec").alias("_qa"))
-          .withColumn("_qqa", qq(F.col("_qa"))))
+          .withColumn("_qqa", int_dot(F.col("_qa"), F.col("_qa"))))
     cs = (quantize_embeddings(corpus, id_col, vec_col, bits)
           .select(F.col(id_col).alias("neighbor_id"),
                   F.col("qvec").alias("_qb"))
-          .withColumn("_qqb", qq(F.col("_qb"))))
-    dot_q = F.aggregate(
-        F.zip_with(F.col("_qa"), F.col("_qb"),
-                   lambda a, b: (a * b).cast("bigint")),
-        int_dot, lambda acc, x: acc + x)
+          .withColumn("_qqb", int_dot(F.col("_qb"), F.col("_qb"))))
     sim = (F.broadcast(qs).crossJoin(cs)
            .filter(F.col("query_id") != F.col("neighbor_id"))
            .withColumn(
                "cosine_sim",
                F.when((F.col("_qqa") > 0) & (F.col("_qqb") > 0),
-                      dot_q.cast("double")
+                      int_dot(F.col("_qa"), F.col("_qb")).cast("double")
                       / F.sqrt((F.col("_qqa") * F.col("_qqb"))
                                .cast("double")))
                .otherwise(F.lit(0.0))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6)
-                    .alias("cosine_sim")))
+    return _top_k(sim, k)
 
 
 def mean_pool_embeddings(df: DataFrame, group_col: str = "doc_id",
@@ -344,23 +355,11 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         dim = len(corpus.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_planes, seed)
     bucket = bucket_expr(F.col(vec_col), planes)
-    if probe:
-        q_buckets = F.array(
-            bucket, *[bucket.bitwiseXOR(F.lit(1 << p))
-                      for p in range(n_planes)])
-        q = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("_qv"),
-                           l2_norm(F.col(vec_col)).alias("_qn"),
-                           F.explode(q_buckets).alias("bucket"))
-    else:
-        q = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("_qv"),
-                           l2_norm(F.col(vec_col)).alias("_qn"),
-                           bucket.alias("bucket"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("_cv"),
-                      l2_norm(F.col(vec_col)).alias("_cn"),
-                      bucket_expr(F.col(vec_col), planes).alias("bucket"))
+    q_bucket = (F.explode(F.array(
+        bucket, *[bucket.bitwiseXOR(F.lit(1 << p))
+                  for p in range(n_planes)])) if probe else bucket)
+    q = _side(queries, id_col, vec_col, "q", q_bucket.alias("bucket"))
+    c = _side(corpus, id_col, vec_col, "c", bucket.alias("bucket"))
     sim = (q.join(c, "bucket")
            .filter(F.col("query_id") != F.col("neighbor_id"))
            .select("query_id", "neighbor_id", "_qv", "_cv",
@@ -369,15 +368,7 @@ def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
         # a neighbor reachable through several probed buckets must rank
         # once, not once per bucket
         sim = sim.dropDuplicates(["query_id", "neighbor_id"])
-    sim = sim.withColumn("cosine_sim",
-                         dot(F.col("_qv"), F.col("_cv"))
-                         / (F.col("_qn") * F.col("_cn")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+    return _top_k(sim.withColumn("cosine_sim", _pair_cosine()), k)
 
 
 def lsh_topk_multi(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -420,28 +411,16 @@ def lsh_topk_multi(queries: DataFrame, corpus: DataFrame, k: int = 5,
                      bucket_expr(vec, plane_sets[t]).alias("bucket"))
             for t in range(n_tables)])
 
-    q = (queries.select(F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("_qv"),
-                        l2_norm(F.col(vec_col)).alias("_qn"),
-                        F.inline(table_buckets(F.col(vec_col)))))
-    c = (corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("_cv"),
-                       l2_norm(F.col(vec_col)).alias("_cn"),
-                       F.inline(table_buckets(F.col(vec_col)))))
+    tables = F.inline(table_buckets(F.col(vec_col)))
+    q = _side(queries, id_col, vec_col, "q", tables)
+    c = _side(corpus, id_col, vec_col, "c", tables)
     sim = (q.join(c, ["tbl", "bucket"])
            .filter(F.col("query_id") != F.col("neighbor_id"))
            .select("query_id", "neighbor_id", "_qv", "_cv",
                    "_qn", "_cn")
            .dropDuplicates(["query_id", "neighbor_id"])
-           .withColumn("cosine_sim",
-                       dot(F.col("_qv"), F.col("_cv"))
-                       / (F.col("_qn") * F.col("_cn"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+           .withColumn("cosine_sim", _pair_cosine()))
+    return _top_k(sim, k)
 
 
 def ivf_seed_centroids(df: DataFrame, n_centroids: int = 16,
@@ -587,8 +566,9 @@ def _dist2(vec: Column, centroid: list[float]) -> Column:
     return F.aggregate(diff, F.lit(0.0), lambda a, x: a + x)
 
 
-def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """argmin over squared L2 distance via array_sort of (d, i) structs.
+def _by_distance(vec: Column, centroids: list[list[float]]) -> Column:
+    """Every centroid as a (d, i) struct — squared L2 distance, index —
+    sorted nearest first.
 
     NOT a min-tracking when-chain: that form nests each when inside the
     next's `otherwise`, so dist expressions get re-referenced (and
@@ -596,10 +576,14 @@ def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     grows with n_centroids. Here every distance is evaluated exactly
     once; ties break to the lowest centroid index (lexicographic struct
     sort), matching ORDER BY d, cid in oracle SQL."""
-    entries = F.array(*[
+    return F.array_sort(F.array(*[
         F.struct(_dist2(vec, cent).alias("d"), F.lit(i).alias("i"))
-        for i, cent in enumerate(centroids)])
-    return F.array_sort(entries)[0]["i"]
+        for i, cent in enumerate(centroids)]))
+
+
+def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
+    """argmin centroid index over squared L2 distance."""
+    return _by_distance(vec, centroids)[0]["i"]
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -613,43 +597,17 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
     exact)."""
     if centroids is None:
         centroids = ivf_centroids(corpus, n_centroids, id_col, vec_col)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("_cv"),
-                      l2_norm(F.col(vec_col)).alias("_cn"),
-                      _nearest_centroid(F.col(vec_col),
-                                        centroids).alias("cell"))
-
-    def probe_cells(vec: Column) -> Column:
-        # nprobe smallest-distance centroid ids, via array sort of
-        # (distance, id) structs
-        entries = F.array(*[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(vec, F.array(*[F.lit(x) for x in cent]),
-                               lambda a, b: (a.cast("double") - b)
-                               * (a.cast("double") - b)),
-                    F.lit(0.0), lambda a, x: a + x).alias("d"),
-                F.lit(i).alias("i"))
-            for i, cent in enumerate(centroids)])
-        return F.slice(F.transform(F.array_sort(entries),
-                                   lambda s: s["i"]), 1, nprobe)
-
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("_qv"),
-                       l2_norm(F.col(vec_col)).alias("_qn"),
-                       F.explode(probe_cells(F.col(vec_col)))
-                       .alias("cell"))
+    vec = F.col(vec_col)
+    probe_cells = F.slice(F.transform(_by_distance(vec, centroids),
+                                      lambda s: s["i"]), 1, nprobe)
+    q = _side(queries, id_col, vec_col, "q",
+              F.explode(probe_cells).alias("cell"))
+    c = _side(corpus, id_col, vec_col, "c",
+              _nearest_centroid(vec, centroids).alias("cell"))
     sim = (q.join(c, "cell")
            .filter(F.col("query_id") != F.col("neighbor_id"))
-           .withColumn("cosine_sim",
-                       dot(F.col("_qv"), F.col("_cv"))
-                       / (F.col("_qn") * F.col("_cn"))))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round(F.col("cosine_sim"), 6).alias("cosine_sim")))
+           .withColumn("cosine_sim", _pair_cosine()))
+    return _top_k(sim, k)
 
 
 def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95,

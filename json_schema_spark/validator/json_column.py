@@ -39,6 +39,22 @@ RESULT_TYPE = T.StructType([
 ])
 
 
+def _validate_doc(validator: DocumentValidator, compiled: CompiledSchema,
+                  raw: str | None) -> tuple[bool, str | None, str | None]:
+    """(valid, error, rewritten) for one JSON text. SQL NULL validates as
+    JSON null; malformed JSON is an invalid row, never a task failure."""
+    try:
+        data = None if raw is None else json.loads(raw)
+    except ValueError as exc:
+        return False, f"invalid JSON: {exc}", None
+    try:
+        return True, None, json.dumps(validator.validate(data, compiled))
+    except ValidationError as exc:
+        return False, str(exc), None
+    except SchemaError as exc:  # runtime schema errors (bad format)
+        return False, f"SCHEMA: {exc}", None
+
+
 def json_schema_udf(schema: Any, version: str = "7",
                     mode: int = 0,
                     url_cache: dict | None = None,
@@ -59,35 +75,9 @@ def json_schema_udf(schema: Any, version: str = "7",
     @F.pandas_udf(RESULT_TYPE)
     def _validate(batch: pd.Series) -> pd.DataFrame:
         validator = DocumentValidator(mode)
-        valids: list[bool] = []
-        errors: list[str | None] = []
-        rewrittens: list[str | None] = []
-        for raw in batch:
-            if raw is None:
-                data = None
-            else:
-                try:
-                    data = json.loads(raw)
-                except ValueError as exc:
-                    valids.append(False)
-                    errors.append(f"invalid JSON: {exc}")
-                    rewrittens.append(None)
-                    continue
-            try:
-                new_data = validator.validate(data, compiled)
-                valids.append(True)
-                errors.append(None)
-                rewrittens.append(json.dumps(new_data))
-            except ValidationError as exc:
-                valids.append(False)
-                errors.append(str(exc))
-                rewrittens.append(None)
-            except SchemaError as exc:  # runtime schema errors (bad format)
-                valids.append(False)
-                errors.append(f"SCHEMA: {exc}")
-                rewrittens.append(None)
         return pd.DataFrame(
-            {"valid": valids, "error": errors, "rewritten": rewrittens})
+            [_validate_doc(validator, compiled, raw) for raw in batch],
+            columns=RESULT_TYPE.fieldNames())
 
     return _validate
 
@@ -112,7 +102,7 @@ def pair_validation_udf(version_default: str = "7",
             MODE_APPLY_DEFAULTS, MODE_CAST, MODE_REMOVE_ADDITIONALS)
 
         cache: dict[tuple[str, str], Any] = {}
-        valids, errors, rewrittens = [], [], []
+        rows = []
         for schema_raw, data_raw, mode_raw in zip(schemas, datas, modes):
             mode = MODE_APPLY_DEFAULTS
             for m in (mode_raw or "").split(","):
@@ -129,26 +119,11 @@ def pair_validation_udf(version_default: str = "7",
                                               url_cache=url_cache)
                     cache[key] = compiled
             except (SchemaError, ValueError) as exc:
-                valids.append(False)
-                errors.append(f"SCHEMA: {exc}")
-                rewrittens.append(None)
+                rows.append((False, f"SCHEMA: {exc}", None))
                 continue
-            try:
-                data = json.loads(data_raw) if data_raw is not None else None
-                new_data = DocumentValidator(mode).validate(data, compiled)
-                valids.append(True)
-                errors.append(None)
-                rewrittens.append(json.dumps(new_data))
-            except ValidationError as exc:
-                valids.append(False)
-                errors.append(str(exc))
-                rewrittens.append(None)
-            except SchemaError as exc:
-                valids.append(False)
-                errors.append(f"SCHEMA: {exc}")
-                rewrittens.append(None)
-        return pd.DataFrame(
-            {"valid": valids, "error": errors, "rewritten": rewrittens})
+            rows.append(_validate_doc(DocumentValidator(mode), compiled,
+                                      data_raw))
+        return pd.DataFrame(rows, columns=RESULT_TYPE.fieldNames())
 
     return _validate
 

@@ -1,6 +1,9 @@
 """Local simulation of the driver's correctness gate: run each queries()
 entry and its oracle_sql() on the same parquet at sf0.01, compare row count,
-column names, and order-insensitive values."""
+column names, and order-insensitive values. Each result line ends with
+md5=<digest> of the query's raw Spark rows (sorted, uncanonicalised), so two
+checkouts' sweep logs diff to "value-identical" or not."""
+import hashlib
 import math
 import os
 import sys
@@ -49,11 +52,14 @@ def main():
         fn = qs[name]
         sdf = fn(spark, SF_DIR)
         scols = sorted(sdf.columns)
-        srows = sorted(
-            (tuple(canon(r[c]) for c in scols) for r in sdf.collect()),
-            key=row_key)
+        raw = sorted((tuple(r[c] for c in scols) for r in sdf.collect()),
+                     key=row_key)
+        md5 = hashlib.md5(repr(raw).encode()).hexdigest()
+        srows = sorted((tuple(canon(v) for v in row) for row in raw),
+                       key=row_key)
         if name not in oracles:
-            print(f"{name}: rows={len(srows)} (no oracle — rows-only)")
+            print(f"{name}: rows={len(srows)} (no oracle — rows-only) "
+                  f"md5={md5}")
             continue
         ddf = con.execute(oracles[name]).fetch_df()
         dcols = sorted(ddf.columns)
@@ -67,7 +73,8 @@ def main():
         status = "OK" if (ok_cols and ok_n and ok_vals) else "FAIL"
         if status == "FAIL":
             failures += 1
-        print(f"{name}: {status} rows={len(srows)}/{len(drows)} cols={ok_cols}")
+        print(f"{name}: {status} rows={len(srows)}/{len(drows)} "
+              f"cols={ok_cols} md5={md5}")
         if not ok_cols:
             print(f"  spark cols: {scols}\n  duckdb cols: {dcols}")
         if ok_cols and not ok_vals:

@@ -533,3 +533,31 @@ def test_auto_path_resolves_refs_from_seeded_cache(spark):
             for r in validate_json_auto(df, schema, "json",
                                         id_col="id").collect()}
     assert got2 == {1: True, 2: True, 3: True}
+
+
+def test_pair_validation_udf_malformed_rows_are_invalid_not_fatal(spark):
+    """Per-row schemas: a malformed data document is an invalid row
+    (``invalid JSON: ...``), a malformed schema a ``SCHEMA: ...`` row;
+    neither fails the job. The single-schema UDF words a malformed
+    document the same way."""
+    from json_schema_spark.validator.json_column import (
+        json_schema_udf, pair_validation_udf)
+
+    schema = '{"type": "object", "required": ["a"]}'
+    df = spark.createDataFrame(
+        [(1, schema, '{"a": 1}'), (2, schema, '{"b": 1}'),
+         (3, schema, '{oops'), (4, '{"type": ', '{"a": 1}')],
+        "id long, schema string, data string")
+    udf = pair_validation_udf("7")
+    got = {r["id"]: (r["v"]["valid"], r["v"]["error"])
+           for r in df.select("id", udf("schema", "data", F.lit(""))
+                              .alias("v")).collect()}
+    assert got[1] == (True, None)
+    assert got[2][0] is False and got[2][1]
+    assert not got[2][1].startswith(("invalid JSON", "SCHEMA"))
+    assert got[3][0] is False and got[3][1].startswith("invalid JSON: ")
+    assert got[4][0] is False and got[4][1].startswith("SCHEMA: ")
+
+    single = json_schema_udf(schema)
+    row = df.filter("id = 3").select(single("data").alias("v")).first()
+    assert (row["v"]["valid"], row["v"]["error"]) == (False, got[3][1])

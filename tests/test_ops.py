@@ -823,3 +823,35 @@ def test_streaming_near_novel_filter_replay_after_index_write(spark,
     b0.write.parquet(old)
     with pytest.raises(ValueError, match="older layout"):
         make(old)
+
+
+def test_streaming_near_novel_filter_keeps_two_index_versions(spark,
+                                                              tmp_path):
+    """Each batch probes one index — the newest complete version below
+    its id — and writes that index plus its novel buckets, so the
+    index_dir holds at most two versions however long the stream, while
+    near-dups of docs from ANY earlier batch are still filtered."""
+    from json_schema_spark.ops.streaming import StreamingNearNovelFilter
+
+    out: dict[int, list] = {}
+    idx = tmp_path / "lsh_index"
+    f = StreamingNearNovelFilter(
+        str(idx), sink=lambda df, bid: out.__setitem__(
+            bid, sorted(r.doc_id for r in df.collect())))
+
+    def words(stem, tail=""):
+        return " ".join(f"{stem}{i}" for i in range(30)) + tail
+
+    batches = [
+        [(0, words("alpha")), (1, words("beta"))],
+        [(2, words("alpha", " tail")), (3, words("gamma"))],
+        [(4, words("beta", " coda")), (5, words("delta"))],
+        [(6, words("gamma", " end")), (7, words("alpha", " more")),
+         (8, words("eps"))],
+    ]
+    for bid, rows in enumerate(batches):
+        f(spark.createDataFrame(rows, "doc_id long, text string"), bid)
+    assert out == {0: [0, 1], 1: [3], 2: [5], 3: [8]}
+    versions = sorted(p.name for p in idx.iterdir()
+                      if p.name.startswith("batch="))
+    assert versions == ["batch=2", "batch=3"]

@@ -204,6 +204,43 @@ def test_ks_vs_baseline_exact(spark):
     assert one_day.count() > 0  # fixture sanity
 
 
+def test_per_period_drift_equals_drift_vs_own_overall_baseline(spark):
+    """The per-period operators and the baseline operators compute one
+    statistic: with the input's own overall frequency map (computed in
+    Python) pinned as the baseline, drift_vs_baseline's psi and
+    js_divergence equal psi_by_period's and js_divergence_by_period's
+    exactly, and ks_vs_baseline tracks ks_by_period."""
+    from collections import Counter
+
+    from json_schema_spark.checks.drift import (
+        drift_vs_baseline, js_divergence_by_period, ks_by_period,
+        ks_vs_baseline, numeric_baseline_snapshot, psi_by_period)
+
+    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    cats = Counter(r["event_type"] if r["event_type"] is not None
+                   else "__null__"
+                   for r in ev.select("event_type").collect())
+    total = sum(cats.values())
+    overall = {c: n / total for c, n in cats.items()}
+
+    base = {str(r["day"]): (r["psi"], r["js_divergence"]) for r in
+            drift_vs_baseline(ev, "event_type", overall, "ts").collect()}
+    psi = {str(r["day"]): r["psi"]
+           for r in psi_by_period(ev, "event_type", "ts").collect()}
+    js = {str(r["day"]): r["js_divergence"] for r in
+          js_divergence_by_period(ev, "event_type", "ts").collect()}
+    assert len(base) > 1
+    assert base == {d: (psi[d], js[d]) for d in psi}
+
+    ks_base = {str(r["day"]): r["ks"] for r in ks_vs_baseline(
+        ev, "value", numeric_baseline_snapshot(ev, "value"),
+        "ts").collect()}
+    ks = {str(r["day"]): r["ks"]
+          for r in ks_by_period(ev, "value", "ts").collect()}
+    assert set(ks_base) == set(ks)
+    assert all(abs(ks_base[d] - ks[d]) <= 1e-6 for d in ks)
+
+
 def test_rate_anomalies_flags_spikes_with_cold_start_guard(spark):
     """A synthetic burst flags; steady entities and cold-start buckets
     (fewer than min_baseline trailing observations) never flag."""

@@ -11,17 +11,38 @@ are built after the ``_ok`` filter, for failing rows alone. Cost is one
 scan, no shuffle for the row-level checks, shuffles only for the
 dataset-level checks (uniqueness, referential) which are explicitly
 skew-managed.
+
+Plan cache. Every name-bound Column of that pass depends only on the
+ConstraintSet, the input schema and ``dataset_checks``, never on the
+DataFrame: the defaults, the compiled constraints (with the literal
+referential ones when ``dataset_checks``), the mask words and ``_ok``, the
+three observation aggregates and the violation array. Built from Python,
+they cost thousands of Py4J round trips, so ``validation_plan`` builds them
+once into a frozen ``ValidationPlan`` and keeps it in a module-level LRU of
+PLAN_CACHE_SIZE entries, keyed by ``(cset.content_hash(), schema.json(),
+dataset_checks)`` and the active SparkContext, so a stopped and restarted
+session never reuses Columns of the old one. ``register_format`` clears
+the cache, because a format's builder is baked into the predicates. A
+``validate()`` call then builds only the DataFrame-bound steps: the
+``withColumns``, a fresh Observation, the ``~_ok`` filter and explode, the
+dataset-level branches and their union. ``compile_constraints`` itself
+stays uncached.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+from collections import OrderedDict
 from dataclasses import dataclass
 from functools import reduce
 from operator import add, and_
 from typing import Any
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
 
 from json_schema_spark.constraints.compiler import (
@@ -34,6 +55,20 @@ OK_COL = "_ok"
 MASK_PREFIX = "_mask"
 # constraints per mask word: a long's bits below the sign bit
 MASK_BITS = 63
+# validation plans kept: one per (set, schema, dataset_checks) in use
+PLAN_CACHE_SIZE = 32
+
+
+def _default_columns(cset: ConstraintSet,
+                     schema: T.StructType) -> dict[str, Column]:
+    """Column name → ``coalesce(col, default)`` for each column of
+    ``schema`` whose spec has a default."""
+    return {
+        col_name: F.coalesce(
+            F.col(col_name),
+            F.lit(spec["default"]).cast(schema[col_name].dataType))
+        for col_name, spec in cset.columns.items()
+        if "default" in spec and col_name in schema.names}
 
 
 def apply_defaults(df: DataFrame, cset: ConstraintSet) -> DataFrame:
@@ -41,68 +76,135 @@ def apply_defaults(df: DataFrame, cset: ConstraintSet) -> DataFrame:
     default (Validator.php:96-105 substitutes and skips further checks; here
     the substituted value simply passes the checks it was designed to pass).
     """
-    repl = {}
-    for col_name, spec in cset.columns.items():
-        if "default" in spec and col_name in df.columns:
-            repl[col_name] = F.coalesce(
-                F.col(col_name),
-                F.lit(spec["default"]).cast(df.schema[col_name].dataType))
-    if not repl:
-        return df
-    return df.withColumns(repl)
+    repl = _default_columns(cset, df.schema)
+    return df.withColumns(repl) if repl else df
 
 
-def _mask_columns(compiled: list[CompiledConstraint]) -> list[str]:
-    """Names of the mask words annotate() adds for ``compiled``."""
+def _referential_constraints(cset: ConstraintSet,
+                             schema: T.StructType) -> list[CompiledConstraint]:
+    """Literal allow-list referential checks as fused row-level constraints
+    (same semantics as checks.referential.referential_violations: non-null
+    value outside the list fails)."""
+    out = []
+    for col_name, allowed in cset.referential.items():
+        if isinstance(allowed, DataFrame):
+            continue
+        if col_name not in schema.names:
+            # a typo'd column name must not make the check silently pass
+            # — same policy as `required` on a missing column
+            # (compiler.compile_constraints): an always-fail constraint
+            out.append(CompiledConstraint(
+                f"{col_name}.referential", col_name,
+                F.lit(False), F.lit(None).cast("string")))
+            continue
+        col = F.col(col_name)
+        pred = F.coalesce(col.isNull() | col.isin(list(allowed)), F.lit(False))
+        out.append(CompiledConstraint(
+            f"{col_name}.referential", col_name, pred, col.cast("string")))
+    return out
+
+
+@dataclass(frozen=True, eq=False)
+class ValidationPlan:
+    """Every name-bound Column of validate() for one (ConstraintSet,
+    input schema, dataset_checks), built once by ``validation_plan``."""
+
+    defaults: dict[str, Column]            # column → coalesce(col, default)
+    constraints: tuple[CompiledConstraint, ...]
+    # mask word name → bit ``i % MASK_BITS`` of word ``i // MASK_BITS`` set
+    # when the row fails constraint ``i``
+    words: dict[str, Column]
+    ok: Column                             # no bit set
+    violation_count: Column                # constraints the row fails
+    aggregates: dict[str, Column]          # observed name → aggregate
+    # one (constraint_id, observed_value) struct per constraint, in
+    # constraint order, null where the annotated row passes it
+    violation_array: Column
+
+    def annotate(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the mask words and ``_ok``."""
+        return df.withColumns(self.words).withColumn(OK_COL, self.ok)
+
+    def violation_rows(self, annotated: DataFrame,
+                       *cols: Column) -> DataFrame:
+        """One row per failed constraint of each failing annotated row, in
+        constraint order: ``cols``, then constraint_id and observed_value.
+        Passing rows are filtered out before any violation struct is
+        built."""
+        exploded = (annotated.filter(~F.col(OK_COL))
+                    .select(*cols, F.explode(self.violation_array)
+                            .alias("_v")))
+        keep = [c for c in exploded.columns if c != "_v"]
+        return exploded.filter(F.col("_v").isNotNull()).select(*keep, "_v.*")
+
+
+def _build_plan(cset: ConstraintSet, schema: T.StructType,
+                dataset_checks: bool) -> ValidationPlan:
+    compiled = compile_constraints(cset, schema)
+    if dataset_checks:
+        compiled += _referential_constraints(cset, schema)
     n_words = -(-len(compiled) // MASK_BITS)
-    return [f"{MASK_PREFIX}{w}" for w in range(n_words)]
-
-
-def annotate(df: DataFrame, compiled: list[CompiledConstraint]) -> DataFrame:
-    """``df`` plus one mask word per MASK_BITS constraints — bit
-    ``i % MASK_BITS`` of word ``i // MASK_BITS`` is set when the row fails
-    constraint ``i`` — and ``_ok`` (no bit set)."""
+    names = [f"{MASK_PREFIX}{w}" for w in range(n_words)]
     words = {}
-    for name, start in zip(_mask_columns(compiled),
-                           range(0, len(compiled), MASK_BITS)):
+    for name, start in zip(names, range(0, len(compiled), MASK_BITS)):
         bits = [F.when(~c.predicate, F.lit(1 << b)).otherwise(F.lit(0))
                 for b, c in enumerate(compiled[start:start + MASK_BITS])]
         words[name] = reduce(Column.bitwiseOR, bits).cast("long")
-    ok = reduce(and_, [F.col(w) == 0 for w in words]) if words else F.lit(True)
-    return df.withColumns(words).withColumn(OK_COL, ok)
-
-
-def _violation_count(compiled: list[CompiledConstraint]) -> Column:
-    """Number of constraints the annotated row fails."""
-    counts = [F.bit_count(F.col(w)) for w in _mask_columns(compiled)]
-    return reduce(add, counts, F.lit(0))
-
-
-def violation_array(compiled: list[CompiledConstraint]) -> Column:
-    """One (constraint_id, observed_value) struct per constraint, in
-    constraint order, null where the annotated row passes it."""
-    if not compiled:
-        return F.array().cast(
+    ok = reduce(and_, [F.col(w) == 0 for w in names]) if names \
+        else F.lit(True)
+    count = reduce(add, [F.bit_count(F.col(w)) for w in names], F.lit(0))
+    if compiled:
+        violations = F.array(*[
+            F.when(F.col(names[i // MASK_BITS])
+                   .bitwiseAND(F.lit(1 << (i % MASK_BITS))) != 0,
+                   F.struct(F.lit(c.constraint_id).alias("constraint_id"),
+                            c.observed.cast("string")
+                            .alias("observed_value")))
+            for i, c in enumerate(compiled)])
+    else:
+        violations = F.array().cast(
             "array<struct<constraint_id:string,observed_value:string>>")
-    words = _mask_columns(compiled)
-    return F.array(*[
-        F.when(F.col(words[i // MASK_BITS])
-               .bitwiseAND(F.lit(1 << (i % MASK_BITS))) != 0,
-               F.struct(F.lit(c.constraint_id).alias("constraint_id"),
-                        c.observed.cast("string").alias("observed_value")))
-        for i, c in enumerate(compiled)])
+    return ValidationPlan(
+        defaults=_default_columns(cset, schema),
+        constraints=tuple(compiled),
+        words=words,
+        ok=ok,
+        violation_count=count,
+        aggregates={
+            "rows_total": F.count(F.lit(1)),
+            "rows_failed": F.sum((~F.col(OK_COL)).cast("long")),
+            "violations_total": F.sum(count.cast("long"))},
+        violation_array=violations)
 
 
-def violation_rows(annotated: DataFrame, compiled: list[CompiledConstraint],
-                   *cols: Column) -> DataFrame:
-    """One row per failed constraint of each failing annotated row, in
-    constraint order: ``cols``, then constraint_id and observed_value.
-    Passing rows are filtered out before any violation struct is built."""
-    exploded = (annotated.filter(~F.col(OK_COL))
-                .select(*cols, F.explode(violation_array(compiled))
-                        .alias("_v")))
-    keep = [c for c in exploded.columns if c != "_v"]
-    return exploded.filter(F.col("_v").isNotNull()).select(*keep, "_v.*")
+_PLANS: OrderedDict[tuple, tuple[weakref.ref, ValidationPlan]] = OrderedDict()
+_PLANS_LOCK = threading.Lock()
+
+
+def clear_plan_cache() -> None:
+    """Drop every cached ValidationPlan."""
+    with _PLANS_LOCK:
+        _PLANS.clear()
+
+
+def validation_plan(cset: ConstraintSet, schema: T.StructType,
+                    dataset_checks: bool = True) -> ValidationPlan:
+    """The ValidationPlan of ``cset`` over ``schema``, from the LRU when
+    this SparkContext has built it before (see the module docstring)."""
+    sc = SparkContext._active_spark_context
+    key = (id(sc), cset.content_hash(), schema.json(), dataset_checks)
+    with _PLANS_LOCK:
+        hit = _PLANS.get(key)
+        if hit is not None and hit[0]() is sc:
+            _PLANS.move_to_end(key)
+            return hit[1]
+    plan = _build_plan(cset, schema, dataset_checks)
+    with _PLANS_LOCK:
+        _PLANS[key] = (weakref.ref(sc), plan)
+        _PLANS.move_to_end(key)
+        while len(_PLANS) > PLAN_CACHE_SIZE:
+            _PLANS.popitem(last=False)
+    return plan
 
 
 @dataclass
@@ -112,31 +214,37 @@ class ValidationResult:
     first action on ``annotated``)."""
 
     annotated: DataFrame            # input + mask words + _ok flag
-    constraints: list[CompiledConstraint]
+    plan: ValidationPlan
     cset: ConstraintSet
     id_col: str
     observation: Observation | None
     _dataset_violations: DataFrame | None  # unique/referential (shuffled path)
     _dataset_ids: list[str]
 
+    @property
+    def constraints(self) -> list[CompiledConstraint]:
+        """The row-level constraints, in mask-bit order."""
+        return list(self.plan.constraints)
+
     # -- outputs --------------------------------------------------------
     @property
     def constraint_ids(self) -> list[str]:
         """Every constraint id violations() can emit, row-level first."""
-        return [c.constraint_id for c in self.constraints] + self._dataset_ids
+        return [c.constraint_id for c in self.plan.constraints] \
+            + self._dataset_ids
 
     def violations(self) -> DataFrame:
         """(id, constraint_id, observed_value) — row-level violations plus
         dataset-level (uniqueness / referential) ones."""
-        row_level = violation_rows(
-            self.annotated, self.constraints,
+        row_level = self.plan.violation_rows(
+            self.annotated,
             F.col(self.id_col).cast("string").alias(self.id_col))
         if self._dataset_violations is not None:
             row_level = row_level.unionByName(self._dataset_violations)
         return row_level
 
     def valid_rows(self) -> DataFrame:
-        drop = set(_mask_columns(self.constraints)) | {OK_COL}
+        drop = set(self.plan.words) | {OK_COL}
         base = [c for c in self.annotated.columns if c not in drop]
         return self.annotated.filter(F.col(OK_COL)).select(*base)
 
@@ -158,8 +266,7 @@ class ValidationResult:
             key.alias("partition_key"),
             F.lit(1).alias("n_rows"),
             (~F.col(OK_COL)).cast("long").alias("n_failed_rows"),
-            _violation_count(self.constraints).cast("long")
-            .alias("n_violations"))
+            self.plan.violation_count.cast("long").alias("n_violations"))
         if self._dataset_violations is not None:
             counts = counts.unionByName(self._dataset_counts(key))
         return (counts.groupBy("partition_key")
@@ -235,30 +342,6 @@ def _dataset_checks(df: DataFrame, cset: ConstraintSet,
     return reduce(DataFrame.unionByName, parts), ids
 
 
-def _referential_constraints(df: DataFrame,
-                             cset: ConstraintSet) -> list[CompiledConstraint]:
-    """Literal allow-list referential checks as fused row-level constraints
-    (same semantics as checks.referential.referential_violations: non-null
-    value outside the list fails)."""
-    out = []
-    for col_name, allowed in cset.referential.items():
-        if isinstance(allowed, DataFrame):
-            continue
-        if col_name not in df.columns:
-            # a typo'd column name must not make the check silently pass
-            # — same policy as `required` on a missing column
-            # (compiler.compile_constraints): an always-fail constraint
-            out.append(CompiledConstraint(
-                f"{col_name}.referential", col_name,
-                F.lit(False), F.lit(None).cast("string")))
-            continue
-        col = F.col(col_name)
-        pred = F.coalesce(col.isNull() | col.isin(list(allowed)), F.lit(False))
-        out.append(CompiledConstraint(
-            f"{col_name}.referential", col_name, pred, col.cast("string")))
-    return out
-
-
 def validate(
     df: DataFrame,
     cset: ConstraintSet,
@@ -266,33 +349,26 @@ def validate(
     dataset_checks: bool = True,
     observe: bool = True,
 ) -> ValidationResult:
-    """Apply the schema defaults, compile the ConstraintSet against
-    ``df``'s schema and build the annotated DataFrame. Pure
-    transformation — no action is triggered."""
-    df = apply_defaults(df, cset)
-
-    compiled = compile_constraints(cset, df.schema)
-    if dataset_checks:
-        compiled = compiled + _referential_constraints(df, cset)
-
-    annotated = annotate(df, compiled)
+    """Apply the schema defaults and annotate ``df`` with the validation
+    plan of ``cset`` over ``df``'s schema (compiled on first use, then
+    cached). Pure transformation — no action is triggered."""
+    plan = validation_plan(cset, df.schema, dataset_checks)
+    if plan.defaults:
+        df = df.withColumns(plan.defaults)
+    annotated = plan.annotate(df)
 
     obs = None
     if observe:
         obs = Observation("jsv_metrics")
         annotated = annotated.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_total"),
-            F.sum((~F.col(OK_COL)).cast("long")).alias("rows_failed"),
-            F.sum(_violation_count(compiled).cast("long"))
-             .alias("violations_total"))
+            obs, *[agg.alias(name) for name, agg in plan.aggregates.items()])
 
     ds_viol, ds_ids = (_dataset_checks(df, cset, id_col) if dataset_checks
                        else (None, []))
 
     return ValidationResult(
         annotated=annotated,
-        constraints=compiled,
+        plan=plan,
         cset=cset,
         id_col=id_col,
         observation=obs,

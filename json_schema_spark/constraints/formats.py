@@ -234,11 +234,15 @@ def register_format(name: str, builder: Callable[[Column], Column]) -> None:
     """Public registry API — mirrors Validator::registerFormat
     (/root/reference/src/Validator.php:68-71, examples/register-custom-format.php:20-23).
 
-    ``builder`` maps a string Column to a boolean Column.
+    ``builder`` maps a string Column to a boolean Column. Cached
+    validation plans are dropped: their predicates hold the old builder's.
     """
+    from json_schema_spark.constraints.evaluator import clear_plan_cache
+
     if not callable(builder):
         raise SchemaError(f"format builder for {name!r} must be callable")
     _REGISTRY[name] = builder
+    clear_plan_cache()
 
 
 def format_predicate(name: str, col: Column) -> Column:

@@ -32,6 +32,8 @@ import hashlib
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.sql import DataFrame
+
 from json_schema_spark.errors import SchemaError
 
 # keywords the column compiler understands (superset validated here; the
@@ -48,6 +50,23 @@ _SCALAR_KEYWORDS = {
     "allOf", "anyOf", "oneOf", "not", "if", "then", "else",
     "dependencies",
 }
+
+
+def _allow_list_key(allowed: Any) -> Any:
+    """JSON-able canonical form of a referential allow-list: ``"<df>"``
+    for a DataFrame, else its values sorted — by (type name, repr) when
+    Python cannot order them (None or mixed types)."""
+    if isinstance(allowed, DataFrame):
+        return "<df>"
+    try:
+        return sorted(allowed)
+    except TypeError:
+        pass
+    try:
+        return sorted(allowed, key=lambda v: (type(v).__name__, repr(v)))
+    except TypeError:  # not iterable
+        return repr(allowed)
+
 
 _VALID_TYPES = {"string", "number", "integer", "array", "object", "boolean",
                 "null", "binary", "timestamp", "date"}
@@ -154,14 +173,15 @@ class ConstraintSet:
     def content_hash(self) -> str:
         """Stable hash of the spec — recorded in checkpoint lineage
         manifests (north_rule: per-partition lineage incl. constraint-set
-        hash)."""
+        hash) and part of the evaluator's plan-cache key, so it never
+        raises on a set the constructor accepts."""
         payload = json.dumps(
             {
                 "columns": self.columns,
                 "unique": [list(u) if isinstance(u, (list, tuple)) else [u]
                            for u in self.unique],
                 "referential": {
-                    k: (sorted(v) if isinstance(v, list) else "<df>")
+                    k: _allow_list_key(v)
                     for k, v in self.referential.items()
                 },
             },
@@ -169,13 +189,6 @@ class ConstraintSet:
             default=str,
         )
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-    def compile(self, schema):
-        """Compile to [(constraint_id, predicate, observed)] against a Spark
-        StructType. See compiler.compile_constraints."""
-        from json_schema_spark.constraints.compiler import compile_constraints
-
-        return compile_constraints(self, schema)
 
     @classmethod
     def from_json_schema(cls, schema: dict[str, Any] | str,

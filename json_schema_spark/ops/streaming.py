@@ -22,13 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from json_schema_spark.constraints.compiler import compile_constraints
-from json_schema_spark.constraints.evaluator import (
-    OK_COL,
-    annotate,
-    violation_array,
-    violation_rows,
-)
+from json_schema_spark.constraints.evaluator import OK_COL, validation_plan
 from json_schema_spark.constraints.spec import ConstraintSet
 
 
@@ -52,10 +46,10 @@ def stream_violations(stream_df: DataFrame, cset: ConstraintSet,
             raise ValueError(
                 f"multiple timestamp columns {ts_cols}; pass ts_col=")
         ts = F.col(ts_cols[0]) if ts_cols else F.current_timestamp()
-    compiled = compile_constraints(cset, stream_df.schema)
-    return (violation_rows(annotate(stream_df, compiled), compiled,
-                           F.col(id_col).cast("string").alias(id_col),
-                           ts.alias("event_ts"))
+    plan = validation_plan(cset, stream_df.schema, dataset_checks=False)
+    return (plan.violation_rows(plan.annotate(stream_df),
+                                F.col(id_col).cast("string").alias(id_col),
+                                ts.alias("event_ts"))
             .select(id_col, "constraint_id", "observed_value", "event_ts"))
 
 
@@ -67,10 +61,10 @@ def violation_counts(stream_df: DataFrame, cset: ConstraintSet,
     passing rows) with late-data tolerance: watermark bounds state,
     tumbling windows aggregate. Output mode `append` emits a window once
     the watermark passes it."""
-    compiled = compile_constraints(cset, stream_df.schema)
-    ann = annotate(stream_df, compiled).withWatermark(ts_col, watermark)
+    plan = validation_plan(cset, stream_df.schema, dataset_checks=False)
+    ann = plan.annotate(stream_df).withWatermark(ts_col, watermark)
     ids = (F.when(F.col(OK_COL), F.array(F.lit("__ok__")))
-           .otherwise(violation_array(compiled)["constraint_id"]))
+           .otherwise(plan.violation_array["constraint_id"]))
     return (ann
             .select(F.col(ts_col), F.explode(ids).alias("constraint_id"))
             .filter(F.col("constraint_id").isNotNull())
@@ -96,7 +90,8 @@ def host_violation_monitor(stream_df: DataFrame, cset: ConstraintSet,
     from pyspark.sql.types import (
         LongType, StringType, StructField, StructType)
 
-    ann = annotate(stream_df, compile_constraints(cset, stream_df.schema))
+    ann = validation_plan(cset, stream_df.schema,
+                          dataset_checks=False).annotate(stream_df)
     hosted = ann.select(
         F.regexp_extract(F.col(url_col), r"^[a-z][a-z0-9+.\-]*://([^/]*)",
                          1).alias("host"),

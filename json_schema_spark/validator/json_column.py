@@ -115,6 +115,8 @@ def pair_validation_udf(version_default: str = "7",
             try:
                 compiled = cache.get(key)
                 if compiled is None:
+                    if schema_raw is None:
+                        raise SchemaError("schema is NULL")
                     compiled = compile_schema(json.loads(schema_raw), version,
                                               url_cache=url_cache)
                     cache[key] = compiled

@@ -1,7 +1,7 @@
 """The evaluator's bitmask annotation and the outputs derived from it:
 violation rows in constraint order, observed metrics and per-partition
-verdicts, pinned to hand-computed values; and url uniqueness without the
-join back."""
+verdicts, pinned to hand-computed values; url uniqueness without the
+join back; and the validation-plan cache and the set hash it keys on."""
 
 from collections import Counter
 
@@ -123,3 +123,191 @@ def test_id_uniqueness_reports_every_duplicate_row(spark):
                            ("u2", "host.d.unique", "x|d"): 1,
                            ("u3", "host.d.unique", "y|d"): 1,
                            ("u4", "host.d.unique", "y|d"): 1})
+
+
+def _counting_compiler(monkeypatch):
+    """Record each compile_constraints call the evaluator makes; starts
+    from an empty plan cache."""
+    from json_schema_spark.constraints import evaluator
+
+    calls = []
+    real = evaluator.compile_constraints
+
+    def counted(cset, schema):
+        calls.append(cset.name)
+        return real(cset, schema)
+
+    monkeypatch.setattr(evaluator, "compile_constraints", counted)
+    evaluator.clear_plan_cache()
+    return calls
+
+
+def test_second_validate_compiles_nothing(spark, monkeypatch):
+    """The plan is keyed by content, schema and dataset_checks: an equal
+    set (another object) over the same schema reuses it; a changed set,
+    schema or dataset_checks compiles again."""
+    calls = _counting_compiler(monkeypatch)
+    df = spark.createDataFrame([("a", 1), ("b", -1)], "id string, n long")
+    first = validate(df, ConstraintSet(columns={"n": {"minimum": 0}},
+                                       name="once"), id_col="id")
+    second = validate(df, ConstraintSet(columns={"n": {"minimum": 0}},
+                                        name="again"), id_col="id")
+    assert calls == ["once"]
+    assert _rows(first.violations()) == _rows(second.violations()) \
+        == [("b", "n.minimum", "-1")]
+    assert second.metrics() == {"rows_total": 2, "rows_failed": 1,
+                                "violations_total": 1}
+
+    validate(df, ConstraintSet(columns={"n": {"minimum": 1}}), id_col="id")
+    validate(df.withColumn("x", F.lit(1)), first.cset, id_col="id")
+    validate(df, first.cset, id_col="id", dataset_checks=False)
+    assert len(calls) == 4
+
+
+def test_register_format_invalidates_cached_plan(spark):
+    """Re-registering a format drops the plans built with its old
+    builder: the verdicts follow the new one."""
+    from json_schema_spark import register_format
+
+    df = spark.createDataFrame([("a", "xx"), ("b", "yyy")],
+                               "id string, s string")
+    cset = ConstraintSet(columns={"s": {"format": "test-length"}})
+    register_format("test-length", lambda c: F.length(c) == 2)
+    assert _rows(validate(df, cset, id_col="id").violations()) \
+        == [("b", "s.format", "yyy")]
+    register_format("test-length", lambda c: F.length(c) == 3)
+    assert _rows(validate(df, cset, id_col="id").violations()) \
+        == [("a", "s.format", "xx")]
+
+
+def test_plan_cache_is_bounded(spark, monkeypatch):
+    """The LRU never holds more than PLAN_CACHE_SIZE plans, and a plan
+    used since the oldest was built survives the eviction."""
+    from pyspark.sql import types as T
+
+    from json_schema_spark.constraints import evaluator
+
+    calls = _counting_compiler(monkeypatch)
+    schema = T.StructType([T.StructField("n", T.LongType())])
+
+    def plan(i):
+        return evaluator.validation_plan(
+            ConstraintSet(columns={"n": {"minimum": i}}, name=str(i)),
+            schema)
+
+    for i in range(evaluator.PLAN_CACHE_SIZE + 1):
+        plan(i)
+        assert len(evaluator._PLANS) <= evaluator.PLAN_CACHE_SIZE
+        if i == 1:
+            plan(0)  # touched: now newer than plan 1
+    assert len(evaluator._PLANS) == evaluator.PLAN_CACHE_SIZE
+    n_built = len(calls)
+    plan(0)
+    plan(evaluator.PLAN_CACHE_SIZE)
+    assert len(calls) == n_built
+    plan(1)
+    assert calls[-1] == "1"
+
+
+def test_plan_cache_under_concurrent_lookups(spark, monkeypatch):
+    """Eight threads (twice the cores) look up and evict 40 plans at a
+    short switch interval: no lookup fails, each gets the plan of its own
+    set, and the LRU stays within its bound. Plans are stubbed, so the
+    threads spend their time in the cache, not in Py4J."""
+    import sys
+    import threading
+
+    from pyspark.sql import types as T
+
+    from json_schema_spark.constraints import evaluator
+
+    monkeypatch.setattr(evaluator, "_build_plan",
+                        lambda cset, schema, dataset_checks:
+                        cset.columns["n"]["minimum"])
+    evaluator.clear_plan_cache()
+    schema = T.StructType([T.StructField("n", T.LongType())])
+    sets = [ConstraintSet(columns={"n": {"minimum": i}}) for i in range(40)]
+    errors, bad = [], []
+
+    def work(t):
+        try:
+            for j in range(2000):
+                i = (7 * t + j) % 40
+                if evaluator.validation_plan(sets[i], schema) != i:
+                    bad.append(i)
+                with evaluator._PLANS_LOCK:  # between two updates
+                    if len(evaluator._PLANS) > evaluator.PLAN_CACHE_SIZE:
+                        bad.append("size")
+        except Exception as exc:  # reported by the assert below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,))
+                   for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+        evaluator.clear_plan_cache()
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and bad == []
+
+
+def test_warm_flagship_build_round_trips(spark, monkeypatch):
+    """Building validate_webtext(df).violations() from a cached plan
+    takes at most 500 Py4J round trips (about 3,100 when every call
+    rebuilt every Column). py4j's deferred releases of earlier objects
+    (memory commands) are not part of the build and are not counted."""
+    import py4j.clientserver as cs
+
+    from json_schema_spark.flagship import validate_webtext
+    from json_schema_spark.sources.webtext import generate_webtext
+
+    df = generate_webtext(spark, 200)
+    validate_webtext(df).violations()
+    sent = []
+    real = cs.ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+    validate_webtext(df).violations()
+    monkeypatch.undo()
+    n = sum(not c.startswith("m\n") for c in sent)
+    assert 0 < n <= 500
+
+
+def test_content_hash_keeps_list_hashes():
+    """A set whose allow-lists Python can sort hashes as it always has,
+    so checkpoint manifests written before stay valid."""
+    from json_schema_spark.flagship import webtext_constraints
+
+    assert webtext_constraints().content_hash() == "e2839f4ed4862808"
+
+
+def test_none_allow_list_hashes_and_validates(spark):
+    """content_hash is total: an allow-list with None or mixed types
+    hashes, independent of order. validate() on it gives the violation
+    rows it gave before the plan cache keyed on that hash."""
+    with_none = ConstraintSet(referential={"lang": ["en", None]})
+    assert with_none.content_hash() \
+        == ConstraintSet(referential={"lang": [None, "en"]}).content_hash()
+    mixed = ConstraintSet(referential={"lang": ["en", 1]}).content_hash()
+    assert mixed == ConstraintSet(
+        referential={"lang": [1, "en"]}).content_hash()
+    assert mixed != with_none.content_hash()
+    # a tuple allow-list hashes by its values, like the equal list
+    assert ConstraintSet(referential={"lang": ("en", "de")}).content_hash() \
+        == ConstraintSet(referential={"lang": ["de", "en"]}).content_hash()
+
+    df = spark.createDataFrame(
+        [("a", "en"), ("b", None), ("c", "de"), ("d", "xx")],
+        "id string, lang string")
+    assert sorted(_rows(validate(df, with_none, id_col="id").violations())) \
+        == [("c", "lang.referential", "de"), ("d", "lang.referential", "xx")]

@@ -561,3 +561,19 @@ def test_pair_validation_udf_malformed_rows_are_invalid_not_fatal(spark):
     single = json_schema_udf(schema)
     row = df.filter("id = 3").select(single("data").alias("v")).first()
     assert (row["v"]["valid"], row["v"]["error"]) == (False, got[3][1])
+
+
+def test_pair_validation_udf_null_schema_is_a_schema_row():
+    """A row whose schema is SQL NULL is a ``SCHEMA: ...`` row, not a
+    failed job; the next row's schema still compiles."""
+    import pandas as pd
+
+    from json_schema_spark.validator.json_column import pair_validation_udf
+
+    out = pair_validation_udf("7").func(
+        pd.Series([None, "{}"]), pd.Series(["{}", "{}"]),
+        pd.Series(["", ""]))
+    assert out["valid"].tolist() == [False, True]
+    assert out["error"][0].startswith("SCHEMA: ")
+    assert out["error"][1] is None
+    assert out["rewritten"][0] is None

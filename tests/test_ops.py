@@ -231,6 +231,53 @@ def test_checkpoint_verdict_counts_dataset_level_rows(spark, tmp_path):
         ("u1", "url.unique", "u1"), ("u1", "url.unique", "u1")]
 
 
+THREE_DAYS = [("u1", "d1", 5), ("u2", "d1", -1), ("u2", "d1", 3),
+              ("u3", "d2", -2), ("bad", "d2", 1),
+              ("u4", "d3", None), ("u5", "d3", 7)]
+
+
+def test_run_validation_compiles_once(spark, tmp_path, monkeypatch):
+    """Three days under one schema compile the set once, and each day's
+    manifest keeps the counts it had when every day compiled anew."""
+    from json_schema_spark import ConstraintSet
+    from json_schema_spark.constraints import evaluator
+    from json_schema_spark.ops.checkpoint import run_validation
+
+    compiled = []
+    real = evaluator.compile_constraints
+    monkeypatch.setattr(evaluator, "compile_constraints",
+                        lambda cset, schema: compiled.append(cset.name)
+                        or real(cset, schema))
+    evaluator.clear_plan_cache()
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(THREE_DAYS, "url string, day string, v long") \
+        .write.partitionBy("day").parquet(src)
+    cset = ConstraintSet(
+        name="three_days", unique=["url"],
+        columns={"url": {"pattern": "^u"},
+                 "v": {"minimum": 0, "required": True}})
+    stats = run_validation(spark, spark.read.parquet(src), cset,
+                           str(tmp_path / "out"), partition_col="day")
+    assert stats.processed == ["d1", "d2", "d3"]
+    assert compiled == ["three_days"]
+
+    def counts(pattern, minimum, required, unique):
+        return {"url.pattern": pattern, "v.minimum": minimum,
+                "v.required": required, "url.unique": unique}
+
+    got = {p: m["metrics"] for p, m in stats.manifests.items()}
+    assert got == {
+        "d1": {"rows_total": 3, "rows_failed": 1, "violations_total": 3,
+               "violations_by_constraint": counts(0, 1, 0, 2)},
+        "d2": {"rows_total": 2, "rows_failed": 2, "violations_total": 2,
+               "violations_by_constraint": counts(1, 1, 0, 0)},
+        "d3": {"rows_total": 2, "rows_failed": 1, "violations_total": 1,
+               "violations_by_constraint": counts(0, 0, 1, 0)}}
+    assert {m["constraint_hash"] for m in stats.manifests.values()} \
+        == {cset.content_hash()}
+
+
 def test_variant_fast_path_works_on_streams(spark, tmp_path):
     """validate_json_variant is a pure projection, so it must compose
     with Structured Streaming unchanged (stateless, append-safe)."""

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from json_schema_spark.constraints.compiler import matching_scalars
+
 
 def referential_violations(df: DataFrame, col: str, allowed,
                            id_col: str = "url") -> DataFrame:
@@ -26,8 +28,9 @@ def referential_violations(df: DataFrame, col: str, allowed,
                .join(F.broadcast(dim), on=col, how="left_anti"))
     else:
         # literal list → pure predicate, no join at all (even cheaper)
+        values = matching_scalars(allowed, df.schema[col].dataType)
         bad = (df.select(id_col, col)
-               .filter(F.col(col).isNotNull() & ~F.col(col).isin(list(allowed))))
+               .filter(F.col(col).isNotNull() & ~F.col(col).isin(values)))
     return bad.select(
         F.col(id_col).cast("string").alias(id_col),
         F.lit(constraint_id).alias("constraint_id"),

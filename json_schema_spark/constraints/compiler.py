@@ -73,6 +73,32 @@ def _is_numeric(dtype: T.DataType) -> bool:
     return _json_type(dtype) in ("integer", "number")
 
 
+def _value_json_type(value: Any) -> str:
+    if isinstance(value, bool):
+        return "boolean"
+    if isinstance(value, (int, float)):
+        return "number"
+    if isinstance(value, str):
+        return "string"
+    return "null" if value is None else "composite"
+
+
+def matching_scalars(values, dtype: T.DataType) -> list:
+    """The non-null scalars of ``values`` that a value of a ``dtype``
+    column can equal: of the column's JSON type, integer and number
+    unified (phpsem.deep_equal). The others never match, and in an
+    ``isin`` they would make Spark cast the column to their type, which
+    fails the job under ANSI mode. Columns of no JSON type (date,
+    timestamp, binary) keep every non-null scalar."""
+    jt = _json_type(dtype)
+    if jt in ("array", "object"):
+        return []
+    scalar_types = ("number", "string", "boolean")
+    want = "number" if jt == "integer" else jt
+    keep = (want,) if want in scalar_types else scalar_types
+    return [v for v in values if _value_json_type(v) in keep]
+
+
 def _observed(col: Column, dtype: T.DataType) -> Column:
     """Render the offending value as a string for the violations sink."""
     if isinstance(dtype, T.BinaryType):
@@ -89,6 +115,29 @@ def _never_null(pred: Column) -> Column:
 def _pass_on_null(col: Column, pred: Column) -> Column:
     """JSON-Schema keywords ignore missing/null values (except required/type)."""
     return _never_null(col.isNull() | pred)
+
+
+def length_keyword(kw: str, col: Column, n: int) -> Column:
+    """``length(col) >= n`` for minLength, ``length(col) <= n`` for
+    maxLength, on a string column (NULL on NULL), decided by the byte
+    length wherever it can be.
+
+    ``length`` walks every byte to count code points, while
+    ``octet_length`` reads the stored size. Spark's count spends 1 to 4
+    bytes per code point, even on invalid UTF-8, so
+    ``chars <= bytes <= 4 * chars``: the bytes alone decide unless they
+    lie between n and 4n, and only those strings are counted.
+    """
+    nbytes = F.octet_length(col)
+    # the count sits in the CASE's else-branch, never in an And/Or: codegen's
+    # subexpression elimination treats both children of And/Or as always
+    # evaluated, and with minLength and maxLength on one column it would
+    # hoist length(col) and count every row
+    if kw == "minLength":
+        return (F.when(nbytes >= 4 * n, True).when(nbytes < n, False)
+                .otherwise(F.length(col) >= n))
+    return (F.when(nbytes <= n, True).when(nbytes > 4 * n, False)
+            .otherwise(F.length(col) <= n))
 
 
 # ---------------------------------------------------------------------------
@@ -191,20 +240,16 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
         if isinstance(arg, (dict, list)):
             return _pass_on_null(col, F.to_json(col) == F.lit(
                 __import__("json").dumps(arg, separators=(",", ":"))))
-        if arg is None:
+        if not matching_scalars([arg], dtype):
             return _never_null(col.isNull())
         return _pass_on_null(col, col == F.lit(arg))
 
     if kw == "enum":
-        scalars = [v for v in arg if not isinstance(v, (dict, list))]
+        scalars = matching_scalars(arg, dtype)
         composites = [v for v in arg if isinstance(v, (dict, list))]
         preds = []
         if scalars:
-            non_null = [v for v in scalars if v is not None]
-            if non_null:
-                preds.append(col.isin(non_null))
-            if any(v is None for v in scalars):
-                preds.append(col.isNull())
+            preds.append(col.isin(scalars))
         if composites and jt in ("array", "object"):
             import json as _json
             canon = [_json.dumps(v, separators=(",", ":")) for v in composites]
@@ -218,10 +263,8 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
               "contentEncoding", "contentMediaType"):
         if jt != "string":
             return None
-        if kw == "minLength":
-            return _pass_on_null(col, F.length(col) >= int(arg))
-        if kw == "maxLength":
-            return _pass_on_null(col, F.length(col) <= int(arg))
+        if kw in ("minLength", "maxLength"):
+            return _pass_on_null(col, length_keyword(kw, col, int(arg)))
         if kw == "pattern":
             # rlike = partial match, same as preg_match (Validator.php:636)
             return _pass_on_null(col, col.rlike(arg))

@@ -7,7 +7,7 @@ constraints it fails (one ``long`` per MASK_BITS constraints) and an
 ``_ok`` flag; the violations / verdict outputs are derived views of that
 annotated DataFrame. The mask is CASE WHEN and bitwise OR only, so the
 projection stays inside whole-stage codegen, and the per-violation structs
-are built after the ``_ok`` filter, for failing rows alone. Cost is one
+are built under ``when(~_ok)``, for failing rows alone. Cost is one
 scan, no shuffle for the row-level checks, shuffles only for the
 dataset-level checks (uniqueness, referential) which are explicitly
 skew-managed.
@@ -24,7 +24,7 @@ dataset_checks)`` and the active SparkContext, so a stopped and restarted
 session never reuses Columns of the old one. ``register_format`` clears
 the cache, because a format's builder is baked into the predicates. A
 ``validate()`` call then builds only the DataFrame-bound steps: the
-``withColumns``, a fresh Observation, the ``~_ok`` filter and explode, the
+``withColumns``, a fresh Observation, the ``inline`` of the violations, the
 dataset-level branches and their union. ``compile_constraints`` itself
 stays uncached.
 """
@@ -48,6 +48,7 @@ from pyspark.sql.observation import Observation
 from json_schema_spark.constraints.compiler import (
     CompiledConstraint,
     compile_constraints,
+    matching_scalars,
 )
 from json_schema_spark.constraints.spec import ConstraintSet
 
@@ -98,7 +99,8 @@ def _referential_constraints(cset: ConstraintSet,
                 F.lit(False), F.lit(None).cast("string")))
             continue
         col = F.col(col_name)
-        pred = F.coalesce(col.isNull() | col.isin(list(allowed)), F.lit(False))
+        values = matching_scalars(allowed, schema[col_name].dataType)
+        pred = F.coalesce(col.isNull() | col.isin(values), F.lit(False))
         out.append(CompiledConstraint(
             f"{col_name}.referential", col_name, pred, col.cast("string")))
     return out
@@ -129,13 +131,16 @@ class ValidationPlan:
                        *cols: Column) -> DataFrame:
         """One row per failed constraint of each failing annotated row, in
         constraint order: ``cols``, then constraint_id and observed_value.
-        Passing rows are filtered out before any violation struct is
-        built."""
-        exploded = (annotated.filter(~F.col(OK_COL))
-                    .select(*cols, F.explode(self.violation_array)
-                            .alias("_v")))
-        keep = [c for c in exploded.columns if c != "_v"]
-        return exploded.filter(F.col("_v").isNotNull()).select(*keep, "_v.*")
+        No violation struct is built for a passing row.
+
+        The ``~_ok`` test sits inside the projection, not in a Filter:
+        with no observation between them, the optimizer would push that
+        Filter into the mask's projection and evaluate every predicate
+        twice."""
+        return (annotated
+                .select(*cols, F.inline(F.when(~F.col(OK_COL),
+                                               self.violation_array)))
+                .filter(F.col("constraint_id").isNotNull()))
 
 
 def _build_plan(cset: ConstraintSet, schema: T.StructType,

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from json_schema_spark.constraints.compiler import length_keyword
+
 # Property / required names are interpolated literally into variant_get
 # JSON paths ("$.{name}" — '.' navigates into nesting, '[' is an index
 # accessor and a hard error, '*' is a wildcard). Names outside this
@@ -172,10 +174,8 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
         elif kw == "const":
             if not isinstance(arg, (dict, list)):
                 preds.append(never_null(~present | member_match([arg])))
-        elif kw == "minLength":
-            preds.append(gated(is_string, F.length(sval) >= int(arg)))
-        elif kw == "maxLength":
-            preds.append(gated(is_string, F.length(sval) <= int(arg)))
+        elif kw in ("minLength", "maxLength"):
+            preds.append(gated(is_string, length_keyword(kw, sval, int(arg))))
         elif kw == "pattern":
             preds.append(gated(is_string, sval.rlike(arg)))
         elif kw == "format":

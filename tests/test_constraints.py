@@ -4,6 +4,7 @@ Mirrors the reference's per-keyword runtime checks (SURVEY.md §2.2-2.7)
 re-expressed over Spark columns; each test pins the violation set."""
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from json_schema_spark import ConstraintSet, SchemaError, validate
@@ -53,6 +54,120 @@ def test_enum_and_const(spark):
     got = _violated(spark, rows, "id string, s string",
                     {"s": {"const": "en"}})
     assert got == {("b", "s.const")}
+
+
+def test_mixed_type_lists_match_by_json_type(spark):
+    """A listed value of another JSON type than the column's never
+    matches (integer and number unify), and does not make Spark cast
+    the column to its type: under ANSI mode that failed the job."""
+    rows = [("a", "en", 1), ("b", "1", 2), ("c", None, None)]
+    schema = "id string, lang string, n long"
+    got = _violated(spark, rows, schema, {
+        "lang": {"enum": ["en", 1]},
+        "n": {"enum": [1.0, "2", True], "const": "1"}})
+    assert got == {("b", "lang.enum"), ("b", "n.enum"),
+                   ("a", "n.const"), ("b", "n.const")}
+    df = spark.createDataFrame(rows, schema)
+    res = validate(df, ConstraintSet(referential={"lang": ["en", 1],
+                                                  "n": [2.0, "1"]}),
+                   id_col="id")
+    assert {(r["id"], r["constraint_id"])
+            for r in res.violations().collect()} \
+        == {("b", "lang.referential"), ("a", "n.referential")}
+
+
+# every n is a bound; the strings sit at byte lengths n-1, n, 4n-1, 4n
+# and 4n+1 of it, where the byte length alone stops deciding
+LENGTH_BOUNDS = (0, 1, 2, 3, 7)
+# cast(binary as string) keeps these bytes: Spark counts each lead byte
+# as one char of 1 to 4 bytes, whatever follows it
+INVALID_UTF8 = (b"\xf0", b"\xf0a", b"\xf0\x9f\x98", b"\xff" * 4,
+                b"\xc3" * 3, b"\xe2\x82" * 3, b"a\x80\x80\x80",
+                b"\xf8\x88\x80\x80\x80", b"\xf0" * 7 + b"a", b"\xed\xa0\x80")
+
+
+def _length_cases() -> list[str]:
+    out = set()
+    for n in LENGTH_BOUNDS:
+        for nbytes in {n - 1, n, 4 * n - 1, 4 * n, 4 * n + 1} - {-1}:
+            for c in ("a", "é", "€", "😀"):
+                w = len(c.encode())
+                out.add(c * (nbytes // w) + "a" * (nbytes % w))
+                out.add("a" * (nbytes % w) + c * (nbytes // w))
+    return sorted(out)
+
+
+def test_length_bound_equals_char_count(spark):
+    """minLength/maxLength decide by byte length where it can; on every
+    char width, boundary, invalid UTF-8 and null the verdict equals
+    ``length(s) >= n`` / ``<= n``, on the compiled and the VARIANT path,
+    and the document validator's on valid strings."""
+    import json
+    from functools import reduce
+    from operator import or_
+
+    from json_schema_spark.constraints.compiler import length_keyword
+    from json_schema_spark.validator.document import (
+        DocumentValidator, ValidationError, compile_schema)
+    from json_schema_spark.validator.hybrid import validate_json_variant
+
+    valid = _length_cases()
+    raw = [s.encode() for s in valid] + list(INVALID_UTF8) + [None]
+    df = spark.createDataFrame(
+        [(str(i), b) for i, b in enumerate(raw)], "id string, b binary"
+    ).select("id", F.col("b").cast("string").alias("s")).cache()
+    s = F.col("s")
+
+    # the helper itself, and that the cases reach all three CASE branches
+    mismatch = reduce(or_, [
+        ~length_keyword(kw, s, n).eqNullSafe(
+            F.length(s) >= n if kw == "minLength" else F.length(s) <= n)
+        for n in LENGTH_BOUNDS for kw in ("minLength", "maxLength")])
+    assert df.filter(mismatch).collect() == []
+    counted = F.octet_length(s).between(2, 4 * 2)
+    assert df.filter(counted & (F.length(s) >= 2)).count() > 0
+    assert df.filter(counted & (F.length(s) < 2)).count() > 0
+    lengths = {r["id"]: (r["k"], r["nbytes"]) for r in df.select(
+        "id", F.length(s).alias("k"),
+        F.octet_length(s).alias("nbytes")).collect()}
+    invalid = [lengths[str(len(valid) + j)] for j in range(len(INVALID_UTF8))]
+    assert [nbytes for _, nbytes in invalid] == [len(b) for b in INVALID_UTF8]
+    assert any(k < nbytes for k, nbytes in invalid)
+
+    # the compiled path, minLength and maxLength on one column
+    cset = ConstraintSet(columns={
+        f"s{n}": {"minLength": n, "maxLength": n} for n in LENGTH_BOUNDS})
+    wide = df.select("id", *[s.alias(f"s{n}") for n in LENGTH_BOUNDS])
+    got = {(r["id"], r["constraint_id"]) for r in validate(
+        wide, cset, id_col="id", observe=False).violations().collect()}
+    want = {(i, f"s{n}.{kw}")
+            for i, (k, _) in lengths.items() if k is not None
+            for n in LENGTH_BOUNDS for kw in ("minLength", "maxLength")
+            if (k < n if kw == "minLength" else k > n)}
+    assert got == want
+
+    # the VARIANT path against the document validator
+    docs = spark.createDataFrame(
+        [(i, json.dumps({"s": v}, ensure_ascii=False))
+         for i, v in enumerate(valid)], "id long, json string")
+    schemas = {(kw, n): {"type": "object", "properties": {"s": {kw: n}}}
+               for n in LENGTH_BOUNDS for kw in ("minLength", "maxLength")}
+    fast = {(r["kw"], r["n"], r["id"]): r["valid"] for r in reduce(
+        DataFrame.unionByName,
+        [validate_json_variant(docs, schema, "json", id_col="id")
+         .select(F.lit(kw).alias("kw"), F.lit(n).alias("n"), "id", "valid")
+         for (kw, n), schema in schemas.items()]).collect()}
+    for (kw, n), schema in schemas.items():
+        compiled = compile_schema(schema)
+        for i, v in enumerate(valid):
+            try:
+                DocumentValidator().validate({"s": v}, compiled)
+                slow = True
+            except ValidationError:
+                slow = False
+            exact = len(v) >= n if kw == "minLength" else len(v) <= n
+            assert fast[kw, n, i] == slow == exact, (kw, n, v)
+    df.unpersist()
 
 
 # ---- numeric keywords -----------------------------------------------------

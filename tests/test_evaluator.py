@@ -311,3 +311,17 @@ def test_none_allow_list_hashes_and_validates(spark):
         "id string, lang string")
     assert sorted(_rows(validate(df, with_none, id_col="id").violations())) \
         == [("c", "lang.referential", "de"), ("d", "lang.referential", "xx")]
+
+
+def test_violations_evaluate_each_predicate_once(spark):
+    """With or without the observation, the optimized plan of
+    violations() holds each row-level predicate once: a Filter on
+    ``~_ok`` pushed into the mask projection would repeat every one."""
+    df = spark.createDataFrame([("a", "xyz")], "id string, s string")
+    cset = ConstraintSet(columns={"s": {"pattern": "^q+z$"}})
+    for observe in (True, False):
+        res = validate(df, cset, id_col="id", observe=observe)
+        plan = res.violations()._jdf.queryExecution() \
+            .optimizedPlan().toString()
+        assert plan.count("^q+z$") == 1, (observe, plan)
+        assert _rows(res.violations()) == [("a", "s.pattern", "xyz")]

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from json_schema_spark.constraints.formats import format_predicate
 from json_schema_spark.errors import SchemaError
+from json_schema_spark.validator.phpsem import php_type
 
 BASE64_RX = r"^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
 
@@ -73,30 +74,32 @@ def _is_numeric(dtype: T.DataType) -> bool:
     return _json_type(dtype) in ("integer", "number")
 
 
-def _value_json_type(value: Any) -> str:
-    if isinstance(value, bool):
-        return "boolean"
-    if isinstance(value, (int, float)):
-        return "number"
-    if isinstance(value, str):
-        return "string"
-    return "null" if value is None else "composite"
+# the scalar names of php_type (a listed value) and _json_type (a column)
+# as JSON types, integer and number unified (phpsem.deep_equal). A value
+# php_type calls "unknown" (date, Decimal, bytes, ...) and a column of no
+# JSON scalar type (date, timestamp, binary) have no known type.
+_SCALAR_TYPE = {"integer": "number", "double": "number", "number": "number",
+                "string": "string", "boolean": "boolean", "unknown": None}
 
 
 def matching_scalars(values, dtype: T.DataType) -> list:
     """The non-null scalars of ``values`` that a value of a ``dtype``
-    column can equal: of the column's JSON type, integer and number
-    unified (phpsem.deep_equal). The others never match, and in an
-    ``isin`` they would make Spark cast the column to their type, which
-    fails the job under ANSI mode. Columns of no JSON type (date,
-    timestamp, binary) keep every non-null scalar."""
+    column can equal. A value is dropped only when both its JSON type and
+    the column's are known and differ: it never matches, and in an
+    ``isin`` it would make Spark cast the column to its type, which fails
+    the job under ANSI mode. Every other scalar is kept as given."""
     jt = _json_type(dtype)
     if jt in ("array", "object"):
         return []
-    scalar_types = ("number", "string", "boolean")
-    want = "number" if jt == "integer" else jt
-    keep = (want,) if want in scalar_types else scalar_types
-    return [v for v in values if _value_json_type(v) in keep]
+    want = _SCALAR_TYPE.get(jt)
+    out = []
+    for v in values:
+        t = php_type(v)
+        if t not in _SCALAR_TYPE:
+            continue  # NULL, array, object
+        if want is None or _SCALAR_TYPE[t] in (None, want):
+            out.append(v)
+    return out
 
 
 def _observed(col: Column, dtype: T.DataType) -> Column:

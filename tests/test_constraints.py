@@ -76,6 +76,34 @@ def test_mixed_type_lists_match_by_json_type(spark):
         == {("b", "lang.referential"), ("a", "n.referential")}
 
 
+def test_lists_of_non_json_values_match_on_their_columns(spark):
+    """Dates, datetimes and Decimals have no JSON type: listed on a
+    date, timestamp or decimal column they are compared as given."""
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    t1, t2 = datetime(2024, 1, 1, 12), datetime(2024, 1, 2, 12)
+    rows = [("a", d1, t1, Decimal("1.50")), ("b", d2, t2, Decimal("2.00")),
+            ("c", None, None, None)]
+    schema = "id string, day date, ts timestamp, amt decimal(10,2)"
+    got = _violated(spark, rows, schema, {
+        "day": {"enum": [d1], "const": d1},
+        "ts": {"enum": [t1], "const": t2},
+        "amt": {"enum": [Decimal("1.5"), 7], "const": Decimal("2")}})
+    assert got == {("b", "day.enum"), ("b", "day.const"), ("b", "ts.enum"),
+                   ("a", "ts.const"), ("b", "amt.enum"), ("a", "amt.const")}
+    df = spark.createDataFrame(rows, schema)
+    res = validate(df, ConstraintSet(referential={"day": [d1],
+                                                  "ts": [t2, None],
+                                                  "amt": [Decimal("2")]}),
+                   id_col="id")
+    assert {(r["id"], r["constraint_id"])
+            for r in res.violations().collect()} \
+        == {("b", "day.referential"), ("a", "ts.referential"),
+            ("a", "amt.referential")}
+
+
 # every n is a bound; the strings sit at byte lengths n-1, n, 4n-1, 4n
 # and 4n+1 of it, where the byte length alone stops deciding
 LENGTH_BOUNDS = (0, 1, 2, 3, 7)

@@ -32,6 +32,9 @@ def test_referential_list_and_df(spark):
         [("a", "en"), ("b", "xx"), ("c", None)], "url string, lang string")
     got = referential_violations(df, "lang", ["en", "de"], id_col="url").collect()
     assert [(r["url"], r["observed_value"]) for r in got] == [("b", "xx")]
+    # a listed None matches no value: "xx" is flagged, as validate() does
+    got = referential_violations(df, "lang", ["en", None], id_col="url").collect()
+    assert [(r["url"], r["observed_value"]) for r in got] == [("b", "xx")]
     dim = spark.createDataFrame([("en",), ("de",)], "lang string")
     got = referential_violations(df, "lang", dim, id_col="url").collect()
     assert [(r["url"], r["observed_value"]) for r in got] == [("b", "xx")]

@@ -35,15 +35,17 @@ def uniqueness_violations(df: DataFrame, key_cols: list[str],
     constraint_id = ".".join(key_cols) + ".unique"
     if key_cols == [id_col]:
         # the key is the reported id, so each duplicated key's rows are n
-        # copies of the key: repeat it instead of joining back to df
+        # copies of the key: repeat it instead of joining back to df. One
+        # chain of three operators, each one analyzer pass on the driver.
         key = F.col(id_col)
-        dups = duplicate_keys(df.filter(key.isNotNull()), key_cols)
-        rows = dups.select(F.explode(F.array_repeat(
-            key, F.col("dup_count").cast("int"))).alias(id_col))
-        return rows.select(
-            key.cast("string").alias(id_col),
-            F.lit(constraint_id).alias("constraint_id"),
-            key.cast("string").alias("observed_value"))
+        key_str = key.cast("string")
+        n = F.col("dup_count")
+        return (df.groupBy(key).agg(F.count(F.lit(1)).alias("dup_count"))
+                .filter(key.isNotNull() & (n > 1))
+                .select(F.explode(F.array_repeat(key_str, n.cast("int")))
+                        .alias(id_col),
+                        F.lit(constraint_id).alias("constraint_id"),
+                        key_str.alias("observed_value")))
     dups = duplicate_keys(df, key_cols)
     # join back so every duplicated row is reported (the inner join drops
     # null keys; a shuffle join that AQE can split on skew)

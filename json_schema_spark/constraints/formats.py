@@ -92,21 +92,36 @@ RX_REL_JSON_POINTER = r"^(0|[1-9][0-9]*)((?:/[^/#]+)*)(#?)$"
 # refined below in _uri()
 RX_URI_SCHEME = r"^[A-Za-z][A-Za-z0-9+.\-]*:"
 
-# Plain http(s) urls that _uri_exact() accepts, by one possessive regex: a
-# hostname authority of at most 63 characters (so no label can exceed 63),
-# an optional port, then path / query / fragment characters of
+# Plain http(s) urls that _uri_exact() accepts, by one regex: a hostname
+# authority of at most 63 characters (so no label can exceed 63), an
+# optional port, then path / query / fragment characters of
 # RX_PATH_CHARS's class with well-formed %XX escapes. Userinfo, IP
 # literals and line terminators (\z, not $) fall through to the exact
 # check. tests/test_formats_uri.py checks that it accepts nothing the
-# exact check rejects.
-_PCHAR = r"A-Za-z0-9\-._~!$&'()*+,;=:@"
-_LABEL = r"[A-Za-z0-9]++(?:-++[A-Za-z0-9]++)*+"
+# exact check rejects, and exactly what its all-possessive,
+# range-class form accepts.
+#
+# It runs on every url, so it is written for the JDK 17 regex compiler:
+# - ASCII classes: \p{Alnum}, \w and \p{XDigit}. Spark's RLike compiles
+#   with flags 0, never UNICODE_CHARACTER_CLASS, so they match ASCII only,
+#   each by one table lookup where [A-Za-z0-9] is a chain of range tests.
+# - Greedy single-class runs (X+) inside possessive groups (*+, ?+):
+#   Pattern compiles X+ on a class to the tight CharPropertyGreedy loop
+#   but X++ to the generic Curly node. No run is followed by a character
+#   of its class except as the next iteration of its own possessive
+#   group, so it accepts what the X++ form accepts, and no backtracking
+#   crosses a label or a segment.
+# rlike alone over the benchmark's 300k urls (4 vCPU, median of 13
+# shuffled reps): 276 ms with range classes and possessive runs, 203 ms
+# with both rules, against 99 ms to scan the column.
+_PCHAR = r"\w\-.~!$&'()*+,;=:@"
+_LABEL = r"\p{Alnum}+(?:-+\p{Alnum}+)*+"
 RX_URI_FAST = (
     r"^https?://(?=[^/?#]{1,63}+(?:[/?#]|\z))"
-    rf"{_LABEL}(?:\.{_LABEL})*+(?::[0-9]++)?+"
-    rf"(?:/(?:[{_PCHAR}/]++|%[0-9A-Fa-f]{{2}})*+)?+"
-    rf"(?:\?(?:[{_PCHAR}/?]++|%[0-9A-Fa-f]{{2}})*+)?+"
-    rf"(?:#(?:[{_PCHAR}/]++|%[0-9A-Fa-f]{{2}})*+)?+\z"
+    rf"{_LABEL}(?:\.{_LABEL})*+(?::[0-9]+)?+"
+    rf"(?:/(?:[{_PCHAR}/]+|%\p{{XDigit}}{{2}})*+)?+"
+    rf"(?:\?(?:[{_PCHAR}/?]+|%\p{{XDigit}}{{2}})*+)?+"
+    rf"(?:#(?:[{_PCHAR}/]+|%\p{{XDigit}}{{2}})*+)?+\z"
 )
 
 

@@ -3,7 +3,10 @@
 _uri() is CASE WHEN fast THEN true ELSE exact, so it equals the exact check
 on every string exactly when the fast regex accepts nothing the exact check
 rejects. Both are evaluated by Spark's (Java) regex engine, as in the
-engine."""
+engine. RX_URI_FAST is tuned for the JVM's regex compiler; REFERENCE_FAST
+below is its plain form, and the two must accept the same language."""
+
+import time
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -16,6 +19,18 @@ from json_schema_spark.constraints.formats import (
 )
 
 LABEL_63 = "a" + "b" * 61 + "c"
+
+# The plain form of RX_URI_FAST's language, kept as its reference: every
+# run possessive, every class spelled out as ASCII ranges.
+_REF_PCHAR = r"A-Za-z0-9\-._~!$&'()*+,;=:@"
+_REF_LABEL = r"[A-Za-z0-9]++(?:-++[A-Za-z0-9]++)*+"
+REFERENCE_FAST = (
+    r"^https?://(?=[^/?#]{1,63}+(?:[/?#]|\z))"
+    rf"{_REF_LABEL}(?:\.{_REF_LABEL})*+(?::[0-9]++)?+"
+    rf"(?:/(?:[{_REF_PCHAR}/]++|%[0-9A-Fa-f]{{2}})*+)?+"
+    rf"(?:\?(?:[{_REF_PCHAR}/?]++|%[0-9A-Fa-f]{{2}})*+)?+"
+    rf"(?:#(?:[{_REF_PCHAR}/]++|%[0-9A-Fa-f]{{2}})*+)?+\z"
+)
 
 EDGE_CASES = [
     # label and authority lengths around the 63-character bounds
@@ -83,8 +98,11 @@ def test_fast_uri_edge_cases(spark):
                        "http://a.example/%zz", "http://a.example/p#f?g"}
 
 
-_ALNUM = "abcXYZ019"
-# labels of 58-66 characters straddle the 63-character bounds
+# letters and digits outside ASCII: Spark's rlike compiles without
+# UNICODE_CHARACTER_CLASS, so \p{Alnum} and \w must not match them
+_ALNUM = "abcXYZ019" + "\u00e9\u0661\u212a\uff21"
+# labels of 58-66 characters straddle the 63-character bounds; '_' is a
+# word character but no label character
 _label = st.one_of(st.text(_ALNUM + "-_", max_size=20),
                    st.integers(58, 66).map(lambda n: "a" + "b" * (n - 1)))
 _host = st.one_of(
@@ -114,3 +132,42 @@ _url = st.builds(
 @given(st.lists(_url, min_size=50, max_size=150))
 def test_fast_uri_accepts_nothing_exact_rejects(spark, urls):
     assert _unsound(_verdicts(spark, urls)) == []
+
+
+def _changed(spark, urls):
+    """urls on which rlike gives RX_URI_FAST and REFERENCE_FAST different
+    verdicts."""
+    df = spark.createDataFrame([(u,) for u in urls], "u string")
+    u = F.col("u")
+    return [r["u"] for r in df.filter(
+        u.rlike(RX_URI_FAST) != u.rlike(REFERENCE_FAST)).collect()]
+
+
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.data_too_large])
+@given(st.lists(_url, min_size=50, max_size=150))
+def test_fast_uri_language_unchanged(spark, urls):
+    assert _changed(spark, EDGE_CASES + urls) == []
+
+
+# long runs that a backtracking regex could retry at every split
+ADVERSARIAL = [
+    "http://" + "a" * 20_000 + "/",                  # one 20k-char label
+    "http://" + "a-" * 5_000 + ".example/",          # label ends in '-'
+    "http://a.example/" + "%4" * 5_000,              # truncated escapes
+    "http://" + ".".join(["a" * 60] * 300) + "-/",   # 300 labels, last bad
+]
+
+
+def test_fast_uri_rejects_adversarial_inputs_in_bounded_time(spark):
+    df = spark.createDataFrame([(u,) for u in ADVERSARIAL], "u string")
+    u = F.col("u")
+    start = time.perf_counter()
+    rows = df.select(u.rlike(RX_URI_FAST).alias("fast"),
+                     F.coalesce(_uri(u), F.lit(False)).alias("uri")).collect()
+    elapsed = time.perf_counter() - start
+    assert [tuple(r) for r in rows] == [(False, False)] * len(ADVERSARIAL)
+    # catastrophic backtracking takes minutes; this batch takes well
+    # under a second
+    assert elapsed < 10, elapsed

@@ -78,6 +78,28 @@ def test_webtext_validation_pure_codegen(spark):
     assert _projects_outside_codegen(final) == []
 
 
+def test_webtext_row_stage_methods_fit_jit_limit(spark):
+    """HotSpot does not JIT-compile a method over 8,000 bytecode bytes
+    (DontCompileHugeMethods); Spark's hugeMethodLimit (65,535) lets such a
+    method run anyway, interpreted. The row-level validation stages over
+    cached rows, as the benchmark runs them, must stay under the limit."""
+    from json_schema_spark.constraints.evaluator import validate
+    from json_schema_spark.flagship import webtext_constraints
+    from json_schema_spark.sources.webtext import generate_webtext
+
+    df = generate_webtext(spark, 1000).cache()
+    df.count()
+    out = validate(df, webtext_constraints(),
+                   dataset_checks=False).violations()
+    stages = spark._jvm.org.apache.spark.sql.execution.debug.package \
+        .codegenStringSeq(out._jdf.queryExecution().executedPlan())
+    sizes = [stages.apply(i)._3().maxMethodCodeSize()
+             for i in range(stages.size())]
+    df.unpersist()
+    # a stage that failed to compile reports -1
+    assert sizes and 0 < min(sizes) and max(sizes) < 8000, sizes
+
+
 def test_referential_dim_join_broadcasts(spark, docs):
     from json_schema_spark.checks.referential import referential_violations
 

@@ -2375,7 +2375,26 @@ def _sql_kw_formats() -> str:
     from json_schema_spark.constraints import formats as FX
 
     def rx(pattern: str) -> str:
-        return pattern.replace("'", "''")
+        # RE2 has no possessive quantifiers. Drop the '+' that makes one
+        # possessive (outside character classes): the formats' possessive
+        # groups accept what their greedy forms accept
+        # (tests/test_formats_uri.py), and RE2 never backtracks anyway.
+        out: list[str] = []
+        in_class = False
+        i = 0
+        while i < len(pattern):
+            tok = pattern[i:i + 2] if pattern[i] == "\\" else pattern[i]
+            if tok in ("\\p", "\\P") and pattern[i + 2:i + 3] == "{":
+                tok = pattern[i:pattern.index("}", i) + 1]  # \p{Alnum}
+            i += len(tok)
+            if in_class:
+                in_class = tok != "]"
+            elif tok == "[":
+                in_class = True
+            elif tok == "+" and out and out[-1] in ("*", "+", "?", "}"):
+                continue
+            out.append(tok)
+        return "".join(out).replace("'", "''")
 
     probes = """
   SELECT doc_id,

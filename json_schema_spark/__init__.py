@@ -18,17 +18,13 @@ Design rules (see SURVEY.md):
   mergeable aggregations sharing one scan where profitable.
 """
 
-from json_schema_spark.constraints.spec import (
-    ConstraintSet,
-    column_constraints,
-)
+from json_schema_spark.constraints.spec import ConstraintSet
 from json_schema_spark.constraints.evaluator import ValidationResult, validate
 from json_schema_spark.constraints.formats import register_format
 from json_schema_spark.errors import SchemaError, ValidationError
 
 __all__ = [
     "ConstraintSet",
-    "column_constraints",
     "ValidationResult",
     "validate",
     "register_format",

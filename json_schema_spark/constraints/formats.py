@@ -45,9 +45,13 @@ RX_DATE = r"^([0-9]+)-(0[1-9]|1[012])-(0[1-9]|[12][0-9]|3[01])$"
 
 # hostname labels (1-63 chars, alnum edges), case-insensitive
 # (Check.php:175) — linear form, no nested quantifier ambiguity, so the
-# JVM regex engine can't blow up on adversarial hyphenated input
+# JVM regex engine can't blow up on adversarial hyphenated input. The
+# label group is possessive: Java matches a greedy repeated group by one
+# recursion per iteration, and the StackOverflowError it throws on a few
+# thousand labels is fatal to Spark's JVM. Each iteration ends at the
+# only '.' it can reach, so giving one back never helps the match.
 RX_HOSTNAME = (
-    r"^(?i)(?:[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?\.)*"
+    r"^(?i)(?:[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?\.)*+"
     r"[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?$"
 )
 
@@ -79,8 +83,12 @@ RX_EMAIL = (
     r"([A-Za-z0-9]|[A-Za-z0-9][A-Za-z0-9\-]*[A-Za-z0-9])$"
 )
 
-# uri path / fragment char classes (Check.php:468,482)
-RX_PATH_CHARS = r"^(?i)(?:(%[0-9a-f]{2})|[a-z0-9/:@\-._~!$&'()*+,;=])*$"
+# uri path / fragment char classes (Check.php:468,482). Keep it as greedy
+# class runs inside a possessive group: Java's regex engine recurses once
+# per repetition of a group, and a group repeated once per character
+# overflows the stack on a path of a few thousand characters, an error
+# that exits Spark's JVM.
+RX_PATH_CHARS = r"^(?i)(?:[a-z0-9/:@\-._~!$&'()*+,;=]+|%[0-9a-f]{2})*+$"
 
 # json-pointer: '' or sequence of /segments with ~0 ~1 escapes only
 # (Check.php:406-414)

@@ -210,8 +210,3 @@ class ConstraintSet:
                 spec["required"] = True
             columns[col] = spec
         return cls(columns=columns, name=name)
-
-
-def column_constraints(**columns: dict[str, Any]) -> ConstraintSet:
-    """Convenience constructor: column_constraints(url={...}, text={...})."""
-    return ConstraintSet(columns=columns)

@@ -2,25 +2,28 @@
 applied to an unbounded stream.
 
 The row-level constraint projection is stateless, so it transfers to
-streams unchanged (same Catalyst expressions, same codegen). Stateful
-additions:
+streams unchanged (same Catalyst expressions, same codegen):
+- streaming violation feed (`stream_violations`) for an append sink,
 - windowed violation counts per constraint with a watermark for late
   events (`violation_counts`) — tumbling event-time windows,
-- streaming violation feed (`stream_violations`) for an append sink.
+- per-host running violation state (`host_violation_monitor`) and
+  watermarked sessionization (`stream_sessions`).
 
 Dataset-level checks (uniqueness, drift) are micro-batch-global, not
 stream-global — for stream-global uniqueness use `dropDuplicates` with a
 watermark upstream, or reconcile in the batch layer.
 
-Checkpointing is Spark's own streaming checkpoint (offset + state store);
-pass `checkpoint_dir` to every sink for exactly-once file output.
+Checkpointing is Spark's own streaming checkpoint (offset + state store):
+set `checkpointLocation` on the caller's `writeStream` for exactly-once
+file output. The foreachBatch novelty filters (`ShardedNovelFilter`,
+`StreamingNearNovelFilter`) keep batch-versioned state on disk and are
+replay-safe; `StreamingDriftMonitor` folds counts in driver memory.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from json_schema_spark.constraints.evaluator import OK_COL, validation_plan
 from json_schema_spark.constraints.spec import ConstraintSet
@@ -121,24 +124,6 @@ def host_violation_monitor(stream_df: DataFrame, cset: ConstraintSet,
             .applyInPandasWithState(update, out_type, state_type,
                                     "update",
                                     GroupStateTimeout.NoTimeout))
-
-
-def start_violation_sink(stream_df: DataFrame, cset: ConstraintSet,
-                         output_path: str, checkpoint_dir: str,
-                         id_col: str = "url",
-                         trigger_once: bool = True) -> StreamingQuery:
-    """Write the violation feed to parquet with exactly-once semantics
-    (streaming checkpoint). `trigger_once` drains available data and
-    stops — the batch-style backfill pattern."""
-    feed = stream_violations(stream_df, cset, id_col=id_col)
-    writer = (feed.writeStream
-              .format("parquet")
-              .option("path", output_path)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _complete_versions(root: str, prefix: str) -> list[int]:
@@ -437,105 +422,6 @@ class StreamingDriftMonitor:
                 "js_divergence": round(
                     js_divergence(freqs, self.baseline), 6),
             })
-        return out
-
-
-class StreamingRateMonitor:
-    """Event-rate spike monitoring on the live ingest path: a
-    foreachBatch processor keeping CUMULATIVE per-(entity, bucket)
-    counts across micro-batches; report() replays the exact integer
-    z-score formula of checks.drift.rate_anomalies (same trailing
-    window, same zero-variance sentinel, Decimal HALF_UP rounding to
-    match Spark's round()), so once the stream has drained the report
-    equals the batch operator over the same rows — parity-tested.
-
-    Scale: counting runs as a per-batch Spark aggregation on
-    executors; the driver folds and holds only the O(entities x
-    buckets) grid. That grid is bounded by monitored-entity count x
-    time range — scope the stream to the entities under watch (or
-    shard monitors by entity hash) when the population is large; the
-    rate math itself is O(grid)."""
-
-    def __init__(self, entity_col: str = "user_id",
-                 ts_col: str = "ts", bucket: str = "hour",
-                 baseline_windows: int = 24, z_threshold: float = 3.0,
-                 min_baseline: int = 6, sink=None):
-        self.entity_col = entity_col
-        self.ts_col = ts_col
-        self.bucket = bucket
-        self.baseline_windows = baseline_windows
-        self.z_threshold = z_threshold
-        self.min_baseline = min_baseline
-        self.sink = sink
-        self.counts: dict = {}  # (entity, bucket_dt) -> n
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        rows = (batch_df
-                .filter(F.col(self.ts_col).isNotNull())
-                .select(F.col(self.entity_col).alias("e"),
-                        F.date_trunc(self.bucket,
-                                     F.col(self.ts_col)).alias("b"))
-                .groupBy("e", "b").agg(F.count(F.lit(1)).alias("n"))
-                .collect())
-        for r in rows:
-            key = (r["e"], r["b"])
-            self.counts[key] = self.counts.get(key, 0) + r["n"]
-        if self.sink is not None:
-            self.sink(self.report(), batch_id)
-
-    @staticmethod
-    def _round6(x: float) -> float:
-        # Spark's round() is HALF_UP on the double's SHORTEST
-        # decimal repr (BigDecimal.valueOf -> Double.toString), not on
-        # the exact binary expansion; Python's repr() produces the
-        # same shortest round-trip digits, so quantize that. Plain
-        # round() (banker's) or Decimal(x) (exact binary) both
-        # diverge on boundary values.
-        from decimal import ROUND_HALF_UP, Decimal
-
-        return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
-                                               rounding=ROUND_HALF_UP))
-
-    def report(self) -> list[dict]:
-        """Flagged (entity, bucket, n, baseline_mean, z) rows — the
-        same rows batch rate_anomalies returns for the drained data."""
-        import math
-
-        by_entity: dict = {}
-        for (e, b), n in self.counts.items():
-            by_entity.setdefault(e, []).append((b, n))
-        out = []
-        for e in by_entity:
-            series = sorted(by_entity[e])
-            for i, (b, n) in enumerate(series):
-                frame = series[max(0, i - self.baseline_windows):i]
-                k = len(frame)
-                # k < 2 also never flags in the batch operator (its
-                # variance is NULL there) — keep exact parity even
-                # when min_baseline is 1
-                if k < max(2, self.min_baseline):
-                    continue
-                s = sum(x for _, x in frame)
-                ss = sum(x * x for _, x in frame)
-                mean = s / k
-                num = k * ss - s * s
-                if num > 0:
-                    z = (n - mean) / math.sqrt(num / (k * (k - 1)))
-                    if z >= self.z_threshold:
-                        out.append({"entity": e,
-                                    "bucket": b.strftime(
-                                        "%Y-%m-%d %H:%M:%S"),
-                                    "n": n,
-                                    "baseline_mean": self._round6(mean),
-                                    "z": self._round6(z)})
-                elif num == 0 and n > mean:
-                    out.append({"entity": e,
-                                "bucket": b.strftime(
-                                    "%Y-%m-%d %H:%M:%S"),
-                                "n": n,
-                                "baseline_mean": self._round6(mean),
-                                "z": -1.0})
-        out.sort(key=lambda r: (str(r["entity"]), r["bucket"]))
         return out
 
 

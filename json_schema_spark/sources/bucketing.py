@@ -1,50 +1,24 @@
-"""Shuffle-control utilities: bucketed co-located joins and salted joins
-for skew (north_rule: "partitioning / shuffle / skew handled explicitly").
+"""Salted skew joins (north_rule: "partitioning / shuffle / skew handled
+explicitly").
 
-Two complementary tools:
-- BUCKETING removes the shuffle entirely for repeated equi-joins on a
-  stable key (fact-to-fact url joins, snapshot diffs): both sides are
-  written `bucketBy(n, key).sortBy(key)`, so the join compiles to a
-  zipped bucket scan — no Exchange in the plan. The write cost is paid
-  once; every subsequent join is shuffle-free.
-- SALTED JOIN spreads one hot key over ``salt`` sub-keys when the right
-  side is small enough to replicate per salt but too big to broadcast —
-  the classic web-corpus case: a dimension keyed by host where a few
-  hosts own 10% of traffic. (For aggregation skew see
-  checks/uniqueness.py's two-phase form; AQE skew-join handles the
-  in-between cases automatically.)
+SALTED JOIN spreads one hot key over ``salt`` sub-keys when the right
+side is small enough to replicate per salt but too big to broadcast —
+the classic web-corpus case: a dimension keyed by host where a few
+hosts own 10% of traffic. (For aggregation skew see
+checks/uniqueness.py's two-phase form; AQE skew-join handles the
+in-between cases automatically.)
+
+Repeated equi-joins on a stable key (fact-to-fact url joins, snapshot
+diffs) need no helper: write both sides with Spark's own
+``bucketBy(n, key).sortBy(key).saveAsTable`` and the join compiles to a
+zipped bucket scan with no Exchange (tests/test_bucketing.py asserts
+this for ``textops.dedup.snapshot_diff``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
-                   n_buckets: int = 32,
-                   sort_cols: list[str] | None = None,
-                   fmt: str = "parquet") -> None:
-    """Persist as a bucketed (+sorted) managed table. Joins between
-    tables bucketed the same way on the join key skip the exchange."""
-    sort_cols = sort_cols or bucket_cols
-    (df.write.format(fmt)
-       .bucketBy(n_buckets, *bucket_cols)
-       .sortBy(*sort_cols)
-       .mode("overwrite")
-       .saveAsTable(table))
-
-
-def co_located_join(spark: SparkSession, left_table: str,
-                    right_table: str, on: list[str],
-                    how: str = "inner") -> DataFrame:
-    """Join two identically-bucketed tables on their bucket key."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
-def plan_has_shuffle(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "Exchange hashpartitioning" in plan
 
 
 def salted_join(left: DataFrame, right: DataFrame, on: str,

@@ -51,35 +51,6 @@ def normalized_digest(col: Column) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "))
 
 
-def word_shingles(col: Column, k: int = 3) -> Column:
-    """Overlapping word k-grams as strings; fewer than k words -> empty."""
-    words = tokens(col)
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, k)))
-    return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
-
-
-def minhash_signature(shingles: Column,
-                      num_hashes: int = DEFAULT_NUM_HASHES) -> Column:
-    """Array of ``num_hashes`` minhash values (md5-hex strings) —
-    the LEGACY static-expression family (md5(i || ':' || shingle),
-    lexicographic min over fixed-width hex == numeric min), kept for
-    array-column pipelines. NOT bucket-compatible with
-    minhash_signature_table, which uses the cheaper affine family
-    (MINHASH_FAMILY): band hashes from the two never collide, so
-    don't mix their outputs across one candidate join or index. Also
-    O(num_hashes x len) per row (no CSE inside lambda bodies) — the
-    table form is the scale path on both counts.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingles,
-                        lambda s: F.md5(F.concat(i.cast("string"),
-                                                 F.lit(":"), s)))))
-
-
 def lsh_band_hashes(signature: Column, bands: int = DEFAULT_BANDS,
                     num_hashes: int = DEFAULT_NUM_HASHES) -> Column:
     """Split the signature into ``bands`` contiguous bands of
@@ -89,12 +60,8 @@ def lsh_band_hashes(signature: Column, bands: int = DEFAULT_BANDS,
 
     def band(b: Column) -> Column:
         start = (b * rows_per_band + 1).cast("int")
-        # cast entries to string: table-form signatures are bigint
-        # (affine family) — plain digits, identical to DuckDB
-        # array_to_string; for the legacy md5-hex string family the
-        # cast is the identity, so both array types band correctly
-        # (but never MIX families across one join — see
-        # minhash_signature)
+        # cast entries to string: signatures are bigint (affine
+        # family) — plain digits, identical to DuckDB array_to_string
         return F.md5(F.concat_ws(
             "|", F.transform(F.slice(signature, start, rows_per_band),
                              lambda v: v.cast("string"))))
@@ -147,31 +114,15 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     return counts.join(examples, "digest")
 
 
-def shingle_projection(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", k: int = 3) -> DataFrame:
-    """(id, shingle array) with the words array materialized FIRST:
-    "_w" is a bound attribute referenced by size() and the lambda, so
-    CollapseProject keeps it and each slice is O(k). Building
-    word_shingles(text) in one expression re-runs the split per
-    shingle element (no CSE inside lambda bodies — O(words^2)/doc)."""
-    sh = F.transform(
-        F.sequence(F.lit(1), F.size("_w") - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_w"), i, k)))
-    return (df.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("_id"),
-                    tokens(F.col(text_col)).alias("_w"))
-            .filter(F.size("_w") >= k)
-            .select("_id", sh.alias("_shingles")))
-
-
 def shingle_rows(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", k: int = 3) -> DataFrame:
     """(id, shingle) rows, word-at-a-time: split once per document,
     posexplode words, assemble k-grams with window lead() per doc.
 
-    Same output as exploding `word_shingles`, but the array form's
-    transform(slice(words,...)) re-evaluates the split per shingle
-    element (no CSE inside lambdas — O(len^2) character work per row).
+    Overlapping word k-grams; a document with fewer than k words yields
+    no rows. An array form, transform(slice(split(text),...)),
+    re-evaluates the split per shingle element (no CSE inside lambdas —
+    O(len^2) character work per row).
     The window is a per-document local sort, no cross-doc shuffle skew."""
     from pyspark.sql import Window as W
 
@@ -203,12 +154,11 @@ def minhash_signature_table(df: DataFrame, text_col: str = "text",
     and constants as corpus_overlap (minhash_affine_params), so the
     SQL oracles replay it from one spec.
 
-    The pure-expression form (minhash_signature over a shingle array)
-    additionally re-evaluates the whole shingle expression per hash
-    function — Catalyst does no CSE inside lambda bodies. Exploding
-    materializes each shingle exactly once; the min-aggs are
-    partial+final (map-side combine), so the shuffle carries at most
-    one signature row per doc per task."""
+    A pure-expression form over a shingle array would re-evaluate the
+    whole shingle expression per hash function — Catalyst does no CSE
+    inside lambda bodies. Exploding materializes each shingle exactly
+    once; the min-aggs are partial+final (map-side combine), so the
+    shuffle carries at most one signature row per doc per task."""
     rows = shingle_rows(df, text_col, id_col, k)
     x = (F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10)
          .cast("bigint") % MINHASH_PRIME)
@@ -632,14 +582,15 @@ def corpus_overlap(df: DataFrame, group_col: str = "lang",
     1/sqrt(num_hashes) estimator noise."""
     x = (F.conv(F.substring(F.md5(F.col("_s")), 1, 15), 16, 10)
          .cast("bigint") % MINHASH_PRIME)
-    # deliberately NOT shingle_projection + explode: when the explode
-    # reads a projected _shingles ATTRIBUTE, InferFiltersFromGenerate
-    # pushes a size(_shingles) > 0 filter below the project and
-    # inlines the whole transform — split re-evaluated per shingle
-    # element inside the filter copy (the O(words^2) trap, plan-gated
-    # in tests/test_plans.py). Keeping the transform directly inside
-    # the explode dodges the rule; the words array still materializes
-    # one projection earlier so the lambda slices a bound attribute.
+    # deliberately NOT a projected shingle array + explode: when the
+    # explode reads a projected _shingles ATTRIBUTE,
+    # InferFiltersFromGenerate pushes a size(_shingles) > 0 filter
+    # below the project and inlines the whole transform — split
+    # re-evaluated per shingle element inside the filter copy (the
+    # O(words^2) trap, plan-gated in tests/test_plans.py). Keeping the
+    # transform directly inside the explode dodges the rule; the words
+    # array still materializes one projection earlier so the lambda
+    # slices a bound attribute.
     # fan_out: the k-word concat+md5 expansion is hash-heavy enough to
     # beat the guard's raw-text exchange (2.4s -> 1.6s at sf0.1 from a
     # one-split scan; see plan.fan_out for the measured trade-off).

@@ -6,11 +6,11 @@ tested — schema, batch iteration (mapInPandas over Arrow record batches),
 partition-friendly feature extraction — and so is the common-format codec
 work: pure-stdlib pixel decode for PNG / GIF (incl. animated, with
 graphic-control compositing) / baseline JPEG / uncompressed BMP, PCM WAV
-sample decode, deterministic block-mean resize, and per-frame sampling of
-animated GIFs. Only the exotic layouts (progressive JPEG, 16-bit PNG,
-compressed audio, real video containers) stay behind clearly-marked
-stubs that raise NotImplementedError unless the optional libraries
-(PIL / soundfile / PyAV) are importable.
+sample decode, and per-frame sampling of animated GIFs
+(`sample_frames_table`). Only the exotic layouts (progressive JPEG,
+16-bit PNG, compressed audio) stay behind clearly-marked stubs that
+raise NotImplementedError unless the optional libraries (PIL /
+soundfile) are importable; other video containers yield no frames.
 
 Scale notes: feature extraction is mapInPandas (no shuffle, no driver
 data); batch size is governed by spark.sql.execution.arrow.
@@ -209,72 +209,6 @@ def decode_image(blob: bytes) -> Any:
     return img.width, img.height, img.mode
 
 
-def resize_image(blob: bytes, width: int, height: int) -> bytes:
-    """Re-encode an image at (width, height). With PIL installed the
-    resize is color- and container-preserving; without it the
-    pure-stdlib fallback is REAL for every format the stdlib decoders
-    read (PNG/GIF/baseline JPEG/BMP) — decode to grayscale,
-    deterministic integer block-mean downsample (nearest-neighbor
-    upsample), re-encode as grayscale PNG — and exotic layouts keep
-    the stub policy (NotImplementedError). The Spark-side plumbing
-    for batch resize is extract_media_features-style mapInPandas with
-    this function applied per blob inside the batch loop."""
-    # PIL first when installed — it preserves color channels and the
-    # original container; the stdlib path is the no-dependency
-    # fallback and is grayscale-PNG by construction. ANY PIL failure
-    # (not just ImportError — think a pillow build without libjpeg)
-    # falls through to the stdlib decoders, which handled these blobs
-    # before PIL entered the picture.
-    try:
-        import io
-
-        from PIL import Image  # type: ignore
-
-        img = Image.open(io.BytesIO(blob))
-        fmt = img.format or "PNG"  # .format is None AFTER resize()
-        img = img.resize((width, height))
-        buf = io.BytesIO()
-        img.save(buf, format=fmt)
-        return buf.getvalue()
-    except Exception:
-        pass
-    decoded = (decode_png_gray(blob) or decode_gif_gray(blob)
-               or decode_jpeg_gray(blob) or decode_bmp_gray(blob))
-    if decoded is not None:
-        _w, _h, rows = decoded
-        return encode_png_gray(_downsample_gray(rows, width, height))
-    raise NotImplementedError(
-        "resizing this image layout requires a working PIL; install "
-        "pillow on executors (grayscale PNG/GIF/baseline-JPEG/BMP "
-        "resize works without it)")
-
-
-def sample_video_frames(blob: bytes, every_n: int = 30) -> list[bytes]:
-    """Every n-th frame of a video blob, each re-encoded as a
-    grayscale PNG. REAL for animated GIF (the one motion container the
-    pure-stdlib decoders read): frames are composited with full
-    graphic-control semantics (transparency, disposal) before
-    sampling, so frame k is the true on-screen canvas, not a partial
-    sub-rectangle. Real video codecs (mp4/webm/mkv) require PyAV or
-    OpenCV — STUB, neither is vendored here. The Spark-side shape is
-    sample_frames_table: mapInPandas yielding one row per sampled
-    frame ((id, frame_idx, frame_png)), with
-    spark.sql.execution.arrow.maxRecordsPerBatch lowered so the
-    exploded frame rows stay within Arrow batch budgets."""
-    frames = decode_gif_frames(blob)
-    if frames is not None:
-        return [encode_png_gray(rows) for _w, _h, rows
-                in frames[::max(every_n, 1)]]
-    try:
-        import av  # type: ignore  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "frame sampling for this container requires PyAV (or "
-            "OpenCV); install one on executors (animated GIF works "
-            "without it)") from exc
-    raise NotImplementedError("frame extraction not implemented")
-
-
 def sample_frames_table(df: DataFrame, blob_col: str,
                         id_col: str = "doc_id", every_n: int = 30,
                         dedup_consecutive: bool = False) -> DataFrame:
@@ -329,27 +263,6 @@ def sample_frames_table(df: DataFrame, blob_col: str,
     return (df.select(F.col(id_col), F.col(blob_col))
             .mapInPandas(extract, schema)
             .withColumnRenamed("id", id_col))
-
-
-def encode_bmp_gray(pixels: list[list[int]]) -> bytes:
-    """Encode an 8-bit grayscale grid as an uncompressed 8-bpp BMP
-    (BITMAPINFOHEADER + 256-gray palette, bottom-up rows, 4-byte row
-    padding) — pure stdlib, public layout."""
-    import struct
-
-    h = len(pixels)
-    w = len(pixels[0]) if h else 0
-    stride = (w + 3) & ~3
-    palette = b"".join(bytes([i, i, i, 0]) for i in range(256))
-    raster = b"".join(
-        bytes(pixels[y]) + b"\x00" * (stride - w)
-        for y in range(h - 1, -1, -1))  # bottom-up
-    offset = 14 + 40 + len(palette)
-    header = (b"BM" + struct.pack("<IHHI", offset + len(raster), 0, 0,
-                                  offset)
-              + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 0,
-                            len(raster), 2835, 2835, 256, 0))
-    return header + palette + raster
 
 
 def decode_bmp_gray(blob: bytes | None) -> \

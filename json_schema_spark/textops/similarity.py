@@ -44,16 +44,13 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def _side(df: DataFrame, id_col: str, vec_col: str, side: str,
           *extra: Column) -> DataFrame:
     """One side of an ANN pair join: (query_id, _qv, _qn, *extra) for
     side "q", (neighbor_id, _cv, _cn, *extra) for side "c". Norms
-    materialize per ROW, not per pair: cosine() inline would re-fold
-    each vector's self-dot once per pair it appears in."""
+    materialize per ROW, not per pair: dot(a, b) / (l2_norm(a) *
+    l2_norm(b)) inline would re-fold each vector's self-dot once per
+    pair it appears in."""
     name = "query_id" if side == "q" else "neighbor_id"
     return df.select(F.col(id_col).alias(name),
                      F.col(vec_col).alias(f"_{side}v"),
@@ -314,18 +311,6 @@ def bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
                .otherwise(F.lit(0).cast("bigint"))
         acc = acc + bit
     return acc
-
-
-def hyperplane_lsh_buckets(df: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           n_planes: int = 8, dim: int | None = None,
-                           seed: str = "jss-lsh") -> DataFrame:
-    """(id, bucket) for every vector — one expression-only projection."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = hyperplanes(dim, n_planes, seed)
-    return df.select(F.col(id_col),
-                     bucket_expr(F.col(vec_col), planes).alias("bucket"))
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -645,27 +630,6 @@ def embedding_near_duplicates(df: DataFrame, threshold: float = 0.95,
             .distinct())
 
 
-def ann_recall(approx: DataFrame, exact: DataFrame) -> DataFrame:
-    """recall@k of an approximate ANN result against the exact result:
-    (query_id, n_exact, n_hit, recall). Both inputs are
-    (query_id, neighbor_id, ...) as produced by cosine_topk / lsh_topk /
-    ivf_topk. One inner join on (query_id, neighbor_id) + two tiny
-    aggregations — result cardinality is the query count, so this is a
-    cheap evaluation harness to tune n_planes / nprobe against."""
-    a = approx.select("query_id", "neighbor_id")
-    e = exact.select("query_id", "neighbor_id")
-    hits = (e.join(a, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n_hit")))
-    totals = e.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    return (totals.join(hits, "query_id", "left")
-            .withColumn("n_hit", F.coalesce(F.col("n_hit"), F.lit(0)))
-            .withColumn("recall",
-                        F.round(F.col("n_hit").cast("double")
-                                / F.col("n_exact").cast("double"), 6))
-            .select("query_id", "n_exact", "n_hit", "recall"))
-
-
 def semantic_dedup(df: DataFrame, centroids: list[list[float]] | None = None,
                    n_clusters: int = 8, threshold: float = 0.95,
                    id_col: str = "vec_id", vec_col: str = "embedding",
@@ -718,7 +682,7 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]] | None = None,
     # centroid norms are driver-known constants (same left-fold sum
     # as the engine's aggregate, so the doubles are identical); with
     # _n materialized, centroid_sim is one dot + one divide per row
-    # instead of cosine()'s three folds
+    # instead of three folds (the dot and both norms)
     import math as _math
 
     cnorms = F.array(*[

@@ -121,18 +121,6 @@ def _intern_document(root: Any, ids: dict[str, Any],
     walk(root, base)
 
 
-def collect_ids(root: Any,
-                id_keys: tuple[str, ...] = ("$id",)) -> dict[str, Any]:
-    """Pre-pass: register every object node with a string id anchor
-    under its (here: raw == absolutized, no enclosing base) value and
-    REMOVE the key (Ref.php:122-131 stores the node and unsets the
-    property). Mutates ``root``; resolve_refs calls this on its own
-    deep copy."""
-    ids: dict[str, Any] = {}
-    _intern_document(root, ids, {}, {}, {}, "", id_keys)
-    return ids
-
-
 def fetch_remote_schema(url: str, cache: dict[str, Any] | None = None,
                         timeout: float = REMOTE_TIMEOUT_SECONDS) -> Any:
     """Driver-side remote schema fetch with URL cache

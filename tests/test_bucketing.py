@@ -2,34 +2,7 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
-    # managed-table warehouse for bucketed writes
-    return spark
-
-
-def test_bucketed_join_has_no_shuffle(spark):
-    from json_schema_spark.sources.bucketing import (
-        co_located_join, plan_has_shuffle, write_bucketed)
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    left = ev.select("event_id", "user_id", "value")
-    right = ev.select("event_id", "event_type")
-    write_bucketed(left, "b_left", ["event_id"], 8)
-    write_bucketed(right, "b_right", ["event_id"], 8)
-    try:
-        joined = co_located_join(spark, "b_left", "b_right", ["event_id"])
-        assert not plan_has_shuffle(joined), \
-            "bucketed equi-join must not exchange"
-        # and it's still correct
-        assert joined.count() == ev.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_left")
-        spark.sql("DROP TABLE IF EXISTS b_right")
+from tests.harness import plan_has_shuffle
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -74,8 +47,6 @@ def test_snapshot_diff_on_bucketed_snapshots_has_no_shuffle(spark):
     """snapshot_diff's scale claim: writing both snapshots bucketed on
     the id makes the full-outer join co-located — zero exchange — and
     the delta itself is unchanged."""
-    from json_schema_spark.sources.bucketing import (plan_has_shuffle,
-                                                     write_bucketed)
     from json_schema_spark.textops.dedup import snapshot_diff
 
     old = spark.createDataFrame(
@@ -86,8 +57,9 @@ def test_snapshot_diff_on_bucketed_snapshots_has_no_shuffle(spark):
              for r in snapshot_diff(old, new).collect()}
     assert plain == {(2, "changed"), (3, "removed"), (4, "added")}
 
-    write_bucketed(old, "b_snap_old", ["doc_id"], 4)
-    write_bucketed(new, "b_snap_new", ["doc_id"], 4)
+    for df, table in ((old, "b_snap_old"), (new, "b_snap_new")):
+        (df.write.format("parquet").bucketBy(4, "doc_id").sortBy("doc_id")
+         .mode("overwrite").saveAsTable(table))
     try:
         out = snapshot_diff(spark.table("b_snap_old"),
                             spark.table("b_snap_new"))

@@ -18,13 +18,13 @@ from json_schema_spark.textops.multimodal import (
     decode_gif_frames,
     decode_png_gray,
     decode_wav_pcm,
-    encode_bmp_gray,
     encode_gif_gray,
     encode_gif_gray_frames,
     encode_png_gray,
     encode_wav_pcm,
     image_dhash,
 )
+from tests.harness import encode_bmp_gray
 
 SETTINGS = settings(max_examples=40, deadline=None, derandomize=True)
 

@@ -127,3 +127,16 @@ def test_oracle_sql_is_static_text():
 def test_queries_are_callables():
     for name, fn in entry.queries().items():
         assert callable(fn), name
+
+
+def test_kw_formats_oracle_compiles_in_duckdb():
+    """The format oracle replays the engine's Java regexes in DuckDB's RE2,
+    which rejects possessive quantifiers: every pattern must reach RE2 in a
+    form it compiles."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents AS SELECT range AS doc_id "
+                "FROM range(20)")
+    rows = con.execute(entry.oracle_sql()["kw_formats"]).fetchall()
+    assert rows  # the probes include invalid values of every format

@@ -4,19 +4,28 @@ _uri() is CASE WHEN fast THEN true ELSE exact, so it equals the exact check
 on every string exactly when the fast regex accepts nothing the exact check
 rejects. Both are evaluated by Spark's (Java) regex engine, as in the
 engine. RX_URI_FAST is tuned for the JVM's regex compiler; REFERENCE_FAST
-below is its plain form, and the two must accept the same language."""
+below is its plain form, and the two must accept the same language.
+
+The exact check's RX_PATH_CHARS and RX_HOSTNAME are written so that Java's
+regex engine does not recurse per character or per label: one long url
+must not overflow the stack and take Spark's JVM down with it."""
 
 import time
+from datetime import datetime
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from json_schema_spark.constraints.formats import (
+    RX_HOSTNAME,
+    RX_PATH_CHARS,
     RX_URI_FAST,
     _uri,
     _uri_exact,
 )
+from json_schema_spark.flagship import validate_webtext
+from json_schema_spark.sources.webtext import WEBTEXT_SCHEMA
 
 LABEL_63 = "a" + "b" * 61 + "c"
 
@@ -171,3 +180,61 @@ def test_fast_uri_rejects_adversarial_inputs_in_bounded_time(spark):
     # catastrophic backtracking takes minutes; this batch takes well
     # under a second
     assert elapsed < 10, elapsed
+
+
+# RX_PATH_CHARS and RX_HOSTNAME as they were before their repeated groups
+# became possessive. Java recursed once per repetition of those groups and
+# overflowed the stack on ~2,500 path characters or ~4,400 host characters,
+# so they are compared only on short inputs.
+REFERENCE_PATH_CHARS = \
+    r"^(?i)(?:(%[0-9a-f]{2})|[a-z0-9/:@\-._~!$&'()*+,;=])*$"
+REFERENCE_HOSTNAME = (
+    r"^(?i)(?:[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?\.)*"
+    r"[a-z0-9](?:[a-z0-9\-]{0,61}[a-z0-9])?$"
+)
+
+PATH_HOST_EDGE_CASES = [
+    "", "a", "/", "%4F", "%4f", "%4", "%zz", "a%", "%%41", "/a/%41b/c%",
+    "a b", "a\n", "a\n\n", "\na", "a#b", "a?b", "[a]", "\u00e9", "AZ/az",
+    "a.b", "a.b.", ".a", "a..b", "-a", "a-", "a-b", "a--b.c", "a_b",
+    LABEL_63, LABEL_63 + "d", f"{LABEL_63}.{LABEL_63}", f"x.{LABEL_63}d",
+    f"{LABEL_63}d.x",
+    "a.b\n", "a.b\r\n", "1.2.3.4", "[::1]",
+    ".".join(["ab-c"] * 200), ".".join(["ab-c"] * 200) + "-",
+    "/%41" * 200, "/%41" * 200 + "%4",
+]
+
+
+def _regex_changed(spark, strings):
+    """strings on which rlike gives a regex and its reference different
+    verdicts."""
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    s = F.col("s")
+    return [r["s"] for r in df.filter(
+        (s.rlike(RX_PATH_CHARS) != s.rlike(REFERENCE_PATH_CHARS))
+        | (s.rlike(RX_HOSTNAME) != s.rlike(REFERENCE_HOSTNAME))).collect()]
+
+
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.data_too_large])
+@given(st.lists(st.one_of(_host, _piece,
+                          st.tuples(_host, st.sampled_from(
+                              ["\n", " ", "-", "."])).map("".join)),
+                min_size=50, max_size=150))
+def test_path_and_hostname_regexes_language_unchanged(spark, strings):
+    assert _regex_changed(spark, PATH_HOST_EDGE_CASES + strings) == []
+
+
+def test_validate_webtext_verdict_on_long_url(spark):
+    """A 70-character host puts these urls past RX_URI_FAST and into the
+    exact check; before its regexes were possessive, each row threw a
+    StackOverflowError that exits Spark's JVM."""
+    host = "a" * 30 + "." + "b" * 39
+    urls = [f"http://{host}/" + "p" * 99_999,           # 100,000-char path
+            f"http://{host}/" + "%41" * 20_000,         # 20,000 escapes
+            "http://" + "a." * 5_000 + "example/"]      # 5,001 labels
+    ts = datetime(2024, 1, 1)
+    df = spark.createDataFrame([(u, ts, None, "some text", "en")
+                                for u in urls], WEBTEXT_SCHEMA)
+    assert validate_webtext(df).violations().collect() == []

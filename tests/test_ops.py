@@ -72,19 +72,27 @@ def test_run_validation_and_resume(spark, webtext_dir, tmp_path):
 
 
 def test_streaming_violations(spark, webtext_dir, tmp_path):
-    from json_schema_spark.ops.streaming import start_violation_sink
+    from json_schema_spark.ops.streaming import stream_violations
+
+    out = str(tmp_path / "stream_out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain(stream):
+        # parquet sink + streaming checkpoint: exactly-once file output
+        q = (stream_violations(stream, webtext_constraints(), id_col="url")
+             .writeStream.format("parquet")
+             .option("path", out)
+             .option("checkpointLocation", ckpt)
+             .outputMode("append")
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
 
     stream = (spark.readStream
               .schema(spark.read.parquet(webtext_dir).schema)
               .option("maxFilesPerTrigger", "64")
               .parquet(webtext_dir))
     assert stream.isStreaming
-
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    q = start_violation_sink(stream, webtext_constraints(), out, ckpt,
-                             trigger_once=True)
-    q.awaitTermination(120)
+    drain(stream)
 
     got = spark.read.parquet(out)
     assert set(got.columns) == {"url", "constraint_id", "observed_value",
@@ -93,12 +101,9 @@ def test_streaming_violations(spark, webtext_dir, tmp_path):
     assert n1 > 0
 
     # exactly-once: re-running the drained stream adds nothing
-    q2 = start_violation_sink(
-        (spark.readStream
-         .schema(spark.read.parquet(webtext_dir).schema)
-         .parquet(webtext_dir)),
-        webtext_constraints(), out, ckpt, trigger_once=True)
-    q2.awaitTermination(120)
+    drain(spark.readStream
+          .schema(spark.read.parquet(webtext_dir).schema)
+          .parquet(webtext_dir))
     assert spark.read.parquet(out).count() == n1
 
     # streaming and batch agree on row-level verdicts
@@ -762,34 +767,6 @@ def test_write_curated_layout_controls(spark, tmp_path):
             ._jdf.queryExecution().executedPlan().toString())
     assert "PartitionFilters" in plan and "lang" in \
         plan.split("PartitionFilters:")[1].splitlines()[0]
-
-
-def test_streaming_rate_monitor_matches_batch_operator(spark, tmp_path):
-    """Drain the sf0.01 events through foreachBatch in several
-    micro-batches: the cumulative monitor's report must equal batch
-    rate_anomalies on the same rows, row for row (same integer
-    z-formula, same sentinel, same rounding)."""
-    from json_schema_spark.checks.drift import rate_anomalies
-    from json_schema_spark.ops.streaming import StreamingRateMonitor
-
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet") \
-        .select("user_id", "ts")
-    batch = {(r.entity, r.bucket, r.n, r.baseline_mean, r.z)
-             for r in rate_anomalies(ev, z_threshold=2.0,
-                                     min_baseline=6).collect()}
-
-    src = str(tmp_path / "ev_src")
-    ev.repartition(5).write.parquet(src)  # several input files
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 2).parquet(src))
-    monitor = StreamingRateMonitor(z_threshold=2.0, min_baseline=6)
-    q = (stream.writeStream.foreachBatch(monitor)
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = {(r["entity"], r["bucket"], r["n"], r["baseline_mean"],
-            r["z"]) for r in monitor.report()}
-    assert got == batch
 
 
 def test_streaming_near_novel_filter_batches_and_restart(spark, tmp_path):

@@ -8,17 +8,6 @@ import json
 import pytest
 
 
-def test_collect_ids_registers_and_strips():
-    from json_schema_spark.validator.refs import collect_ids
-
-    schema = {"definitions": {"pos": {"$id": "#positive", "type": "number",
-                                      "exclusiveMinimum": 0}}}
-    ids = collect_ids(schema)
-    assert "#positive" in ids
-    assert "$id" not in schema["definitions"]["pos"]  # Ref.php:130 unset
-    assert ids["#positive"]["type"] == "number"
-
-
 def test_id_anchor_ref_resolves():
     from json_schema_spark.validator.refs import resolve_refs
 
@@ -29,7 +18,11 @@ def test_id_anchor_ref_resolves():
     }
     out = resolve_refs(schema)
     assert out["properties"]["x"] is out["definitions"]["pos"]
+    assert out["properties"]["x"]["type"] == "number"
     assert out["properties"]["x"]["exclusiveMinimum"] == 0
+    assert "$id" not in out["definitions"]["pos"]  # Ref.php:130 unset
+    # resolution works on a copy: the caller's schema keeps its $id
+    assert schema["definitions"]["pos"]["$id"] == "#positive"
 
 
 def test_id_anchor_validates_documents():

@@ -7,6 +7,8 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from tests.harness import ann_recall, encode_bmp_gray
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -143,19 +145,21 @@ def test_cosine_topk_overflow_routes_to_lsh_multi(emb):
 
 
 def test_lsh_buckets_deterministic(emb):
-    from json_schema_spark.textops.similarity import (
-        hyperplane_lsh_buckets, hyperplanes)
+    from json_schema_spark.textops.similarity import bucket_expr, hyperplanes
 
     p1 = hyperplanes(64, 4, "seed-x")
     p2 = hyperplanes(64, 4, "seed-x")
     assert p1 == p2  # derivable from the seed alone
-    b1 = {r["vec_id"]: r["bucket"]
-          for r in hyperplane_lsh_buckets(emb.limit(50), n_planes=4,
-                                          dim=64).collect()}
-    b2 = {r["vec_id"]: r["bucket"]
-          for r in hyperplane_lsh_buckets(emb.limit(50), n_planes=4,
-                                          dim=64).collect()}
-    assert b1 == b2
+
+    def buckets(planes):
+        return {r["vec_id"]: r["bucket"]
+                for r in emb.limit(50).select(
+                    "vec_id",
+                    bucket_expr(F.col("embedding"), planes).alias("bucket"))
+                .collect()}
+
+    b1 = buckets(p1)
+    assert b1 == buckets(p2)
     assert all(0 <= b < 16 for b in b1.values())
 
 
@@ -399,8 +403,7 @@ def test_quality_filter_gates(spark):
 
 
 def test_ann_recall_harness(emb):
-    from json_schema_spark.textops.similarity import (ann_recall,
-                                                      cosine_topk,
+    from json_schema_spark.textops.similarity import (cosine_topk,
                                                       ivf_topk, lsh_topk)
 
     q = emb.filter(F.col("vec_id") < 5)
@@ -666,8 +669,7 @@ def test_lsh_multiprobe_improves_recall(emb, spark):
     deliberately over-sharded n_planes (many near-singleton buckets)
     recall@k must rise vs single-bucket probing, measured with the
     ann_recall harness against exact cosine_topk ground truth."""
-    from json_schema_spark.textops.similarity import (ann_recall,
-                                                      cosine_topk,
+    from json_schema_spark.textops.similarity import (cosine_topk,
                                                       lsh_topk)
 
     queries = emb.filter(F.col("vec_id") < 20)
@@ -855,30 +857,11 @@ def test_pack_sequences_budget_semantics(spark):
         == {(r["doc_id"], r["pack_id"]) for r in out2}
 
 
-def test_multimodal_stub_policy():
-    """Codec-dependent steps stay behind clearly-marked stubs when the
-    optional libraries are absent (they are not vendored here)."""
-    from json_schema_spark.textops.multimodal import (resize_image,
-                                                      sample_video_frames)
-
-    try:
-        import PIL  # noqa: F401
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        with pytest.raises(NotImplementedError):
-            resize_image(b"\x89PNG", 8, 8)
-    with pytest.raises(NotImplementedError):
-        sample_video_frames(b"\x00\x00\x00\x20ftypmp42")
-
-
 def test_ivf_recall_rises_with_nprobe(emb, spark):
     """The ann_recall harness must show IVF recall@k increasing with
     nprobe and reaching 1.0 at nprobe == n_centroids (exhaustive probe
     == exact search)."""
-    from json_schema_spark.textops.similarity import (ann_recall,
-                                                      cosine_topk,
+    from json_schema_spark.textops.similarity import (cosine_topk,
                                                       ivf_centroids,
                                                       ivf_topk)
 
@@ -1180,8 +1163,8 @@ def test_lsh_multi_table_recall_dominates_single_table(emb):
     monotone in n_tables — the property that lets multi-table LSH keep
     buckets small (high n_planes) without the single-table recall
     collapse."""
-    from json_schema_spark.textops.similarity import (
-        ann_recall, cosine_topk, lsh_topk_multi)
+    from json_schema_spark.textops.similarity import (cosine_topk,
+                                                      lsh_topk_multi)
 
     from pyspark.sql import functions as F
 
@@ -1217,8 +1200,7 @@ def test_ivf_kmeanspp_seeding_beats_ordered_seeds_on_clustered_ids(spark):
     from pyspark.sql import functions as F
 
     from json_schema_spark.textops.similarity import (
-        _nearest_centroid, ann_recall, cosine_topk, ivf_seed_centroids,
-        ivf_topk)
+        _nearest_centroid, cosine_topk, ivf_seed_centroids, ivf_topk)
 
     # 4 well-separated clusters in dim 8, ids CLUSTER-MAJOR: ids 0-199
     # are cluster 0, 200-399 cluster 1, ... (deterministic jitter from
@@ -1526,7 +1508,7 @@ def test_bmp_codec_roundtrip_and_dhash():
     import struct
 
     from json_schema_spark.textops.multimodal import (
-        decode_bmp_gray, encode_bmp_gray, encode_png_gray, image_dhash,
+        decode_bmp_gray, encode_png_gray, image_dhash,
         parse_image_dimensions, sniff_media_type)
 
     grid = [[(x * 13 + y * 31) % 251 for x in range(9)] for y in range(8)]
@@ -1615,42 +1597,6 @@ def test_animated_gif_composition_semantics():
                                  [100, 100, 100, 100]])
     # max_frames caps the walk
     assert len(decode_gif_frames(blob3, max_frames=2)) == 2
-
-
-def test_sample_video_frames_real_for_gif():
-    """sample_video_frames is REAL for animated GIF: every n-th
-    composited frame comes back as a decodable grayscale PNG; other
-    containers keep the PyAV-gated stub policy."""
-    from json_schema_spark.textops.multimodal import (
-        decode_png_gray, encode_gif_gray_frames, sample_video_frames)
-
-    frames = [[[(k * 40 + x + y) % 251 for x in range(6)]
-               for y in range(4)] for k in range(7)]
-    blob = encode_gif_gray_frames(frames)
-    sampled = sample_video_frames(blob, every_n=3)
-    assert len(sampled) == 3  # frames 0, 3, 6
-    for k, png in zip((0, 3, 6), sampled):
-        assert decode_png_gray(png) == (6, 4, frames[k])
-    assert len(sample_video_frames(blob, every_n=1)) == 7
-
-
-def test_resize_image_real_for_stdlib_formats():
-    """resize_image decodes PNG/GIF/BMP/JPEG via the stdlib paths and
-    block-mean downsamples deterministically; undecodable layouts keep
-    the PIL-gated stub policy."""
-    from json_schema_spark.textops.multimodal import (
-        _downsample_gray, decode_png_gray, encode_bmp_gray,
-        encode_gif_gray, encode_png_gray, resize_image)
-
-    grid = [[(x * 11 + y * 17) % 256 for x in range(16)]
-            for y in range(12)]
-    want = _downsample_gray(grid, 4, 3)
-    for blob in (encode_png_gray(grid), encode_gif_gray(grid),
-                 encode_bmp_gray(grid)):
-        assert decode_png_gray(resize_image(blob, 4, 3)) == (4, 3, want)
-    # identity resize round-trips exactly
-    assert decode_png_gray(resize_image(encode_png_gray(grid), 16, 12)) \
-        == (16, 12, grid)
 
 
 def test_sample_frames_table(spark):

@@ -12,8 +12,9 @@ Design rules (see SURVEY.md):
   codegen does the work. No per-row Python in the hot path.
 - pandas UDFs (Arrow-batched) only where SQL can't express the check
   (IDN/IRI formats, PCRE-only regexes, arbitrary nested JSON documents).
-- All predicates are null-disciplined: a NULL verdict is coerced to False
-  (the reference throws ValidationException; we emit a violation row).
+- A NULL verdict counts as a failure, applied once where a verdict becomes
+  a mask bit (the reference throws ValidationException; we emit a
+  violation row). Only a negated or counted sub-verdict is coalesced.
 - Table-level checks (uniqueness, referential, stats, drift) are separate
   mergeable aggregations sharing one scan where profitable.
 """

@@ -5,10 +5,12 @@ Each (column, keyword) pair compiles to a named boolean predicate
 Everything stays JVM-side (whole-stage codegen) except the pandas-UDF
 formats — per the design invariant (SURVEY.md §7): no per-row Python.
 
-Null discipline (SQL three-valued logic vs the reference's exceptions):
-every emitted predicate is wrapped so it can never evaluate to NULL —
-`coalesce(pred, False)` — mirroring the reference's hard verdicts
-(/root/reference/src/Validator.php throws on failure; we emit a violation).
+Null discipline (SQL three-valued logic vs the reference's exceptions): a
+NULL verdict counts as a failure, as the reference's hard verdicts do (its
+Validator.php throws; we emit a violation). The evaluator applies the rule
+once, at the mask bit: And/Or, CASE WHEN, forall and exists never turn a
+NULL leaf into a pass. Only a negated (``not``) or counted (``oneOf``)
+sub-verdict is coalesced to False where it is built.
 
 JSON-Schema applicability rule: a keyword constrains only values of its
 applicable type (e.g. minLength only strings — Validator.php:580-596 is
@@ -31,7 +33,7 @@ from pyspark.sql import types as T
 
 from json_schema_spark.constraints.formats import format_predicate
 from json_schema_spark.errors import SchemaError
-from json_schema_spark.validator.phpsem import php_type
+from json_schema_spark.validator.phpsem import php_int_cast, php_type
 
 BASE64_RX = r"^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
 
@@ -40,7 +42,7 @@ BASE64_RX = r"^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
 class CompiledConstraint:
     constraint_id: str  # e.g. "text.minLength"
     column: str         # source column name
-    predicate: Column   # boolean, never NULL; True = pass
+    predicate: Column   # boolean; True = pass, NULL counts as a failure
     observed: Column    # string rendering of the offending value
 
 
@@ -112,12 +114,13 @@ def _observed(col: Column, dtype: T.DataType) -> Column:
 
 
 def _never_null(pred: Column) -> Column:
+    """NULL → False, for a verdict that is negated or counted."""
     return F.coalesce(pred, F.lit(False))
 
 
 def _pass_on_null(col: Column, pred: Column) -> Column:
     """JSON-Schema keywords ignore missing/null values (except required/type)."""
-    return _never_null(col.isNull() | pred)
+    return col.isNull() | pred
 
 
 def length_keyword(kw: str, col: Column, n: int) -> Column:
@@ -143,6 +146,22 @@ def length_keyword(kw: str, col: Column, n: int) -> Column:
             .otherwise(F.length(col) <= n))
 
 
+def multiple_of(col: Column, m: float) -> Column:
+    """``col`` is a multiple of a non-zero ``m`` (NULL on NULL). Decimal
+    rescaling mirrors the reference's power-of-10 trick (Validator.php:
+    736-747), so 0.0075 % 0.0001 verdicts identically. A value that
+    Decimal(38, 12) cannot hold (1e30, NaN), where a cast fails the job
+    under ANSI mode, runs the trick itself in doubles, as
+    ``phpsem.multiple_of_ok`` does: ``n - m * trunc(n / m) == 0``."""
+    dec = T.DecimalType(38, 12)
+    rem = F.try_mod(col.try_cast(dec), F.lit(m).try_cast(dec))
+    scale = max(10, 10 ** len(str(php_int_cast(1 / m))))
+    n, ms = col.cast("double") * scale, float(m) * scale
+    q = n / ms
+    return F.when(rem.isNotNull(), rem == 0) \
+        .otherwise(n - ms * (q - q % 1) == 0)
+
+
 # ---------------------------------------------------------------------------
 # Per-keyword predicate builders. Each returns Column|None
 # (None = statically inapplicable to this Spark type → no constraint).
@@ -152,7 +171,6 @@ def _type_pred(col: Column, dtype: T.DataType, arg: Any) -> Column | None:
     types = [arg] if isinstance(arg, str) else list(arg)
     types = [t.lower() for t in types]
     jt = _json_type(dtype)
-    null_ok = "null" in types
 
     if jt in ("number", "integer"):
         # numeric unification (Check.php:23-41, Validator.php:205-216):
@@ -167,9 +185,9 @@ def _type_pred(col: Column, dtype: T.DataType, arg: Any) -> Column | None:
     else:
         value_ok = F.lit(jt in types)
 
-    if null_ok:
-        return _never_null(col.isNull() | value_ok)
-    return _never_null(col.isNotNull() & value_ok)
+    if "null" in types:
+        return col.isNull() | value_ok
+    return col.isNotNull() & value_ok
 
 
 def _additional_items_pred(col: Column, dtype: T.DataType,
@@ -214,7 +232,7 @@ def _canonicalize_spec(spec: dict[str, Any]) -> dict[str, Any]:
 def _spec_predicate(col: Column, dtype: T.DataType,
                     spec: dict[str, Any], path: str) -> Column:
     """AND of every keyword predicate in a (sub-)spec — used standalone by
-    combinators; always null-disciplined."""
+    combinators; NULL counts as a failure, as at the top level."""
     spec = _canonicalize_spec(spec)
     preds = []
     for kw, arg in spec.items():
@@ -226,7 +244,7 @@ def _spec_predicate(col: Column, dtype: T.DataType,
         preds.append(ai)
     if not preds:
         return F.lit(True)
-    return _never_null(reduce(and_, preds))
+    return reduce(and_, preds)
 
 
 def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
@@ -234,7 +252,7 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
     jt = _json_type(dtype)
 
     if kw == "required":
-        return _never_null(col.isNotNull()) if arg else None
+        return col.isNotNull() if arg else None
 
     if kw == "type":
         return _type_pred(col, dtype, arg)
@@ -244,7 +262,7 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
             return _pass_on_null(col, F.to_json(col) == F.lit(
                 __import__("json").dumps(arg, separators=(",", ":"))))
         if not matching_scalars([arg], dtype):
-            return _never_null(col.isNull())
+            return col.isNull()
         return _pass_on_null(col, col == F.lit(arg))
 
     if kw == "enum":
@@ -258,7 +276,7 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
             canon = [_json.dumps(v, separators=(",", ":")) for v in composites]
             preds.append(F.to_json(col).isin(canon))
         if not preds:
-            return _never_null(col.isNull())
+            return col.isNull()
         return _pass_on_null(col, reduce(or_, preds))
 
     # ---- string keywords (Validator.php:580-713) ----
@@ -301,17 +319,10 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
                 return None  # 0 always passes (Validator.php:731-733)
             if jt == "integer" and float(arg).is_integer():
                 return _pass_on_null(col, F.pmod(col, F.lit(int(arg))) == 0)
-            # float remainder via decimal rescaling — mirrors the
-            # power-of-10 multiplier trick (Validator.php:736-747) so
-            # 0.0075 % 0.0001 style cases verdict identically
-            dec = T.DecimalType(38, 12)
-            c = col.cast(dec)
-            m = F.lit(arg).cast(dec)
-            return _pass_on_null(col, (c % m) == F.lit(0).cast(dec))
+            return _pass_on_null(col, multiple_of(col, arg))
 
     # ---- array keywords (Validator.php:1226-1410) ----
-    if kw in ("items", "contains", "minItems", "maxItems", "uniqueItems",
-              "additionalItems"):
+    if kw in ("items", "contains", "minItems", "maxItems", "uniqueItems"):
         if jt != "array":
             return None
         elem_t = dtype.elementType
@@ -342,11 +353,6 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
                 col,
                 F.exists(col, lambda e: _spec_predicate(
                     e, elem_t, arg, f"{path}/contains")))
-        if kw == "additionalItems":
-            # standalone (no sibling tuple-form items) it constrains
-            # nothing; the tuple-items interplay is compiled by
-            # _additional_items_pred from the spec level
-            return None
 
     # ---- object keywords on struct/map columns (Validator.php:909-1183) ----
     if kw in ("properties", "requiredProperties", "minProperties",
@@ -360,27 +366,25 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
 
     # ---- combinators (Validator.php:280-572) ----
     if kw == "allOf":
-        return _never_null(reduce(and_, [
+        return reduce(and_, [
             _spec_predicate(col, dtype, sub, f"{path}/allOf[{i}]")
-            for i, sub in enumerate(arg)]))
+            for i, sub in enumerate(arg)])
     if kw == "anyOf":
-        return _never_null(reduce(or_, [
+        return reduce(or_, [
             _spec_predicate(col, dtype, sub, f"{path}/anyOf[{i}]")
-            for i, sub in enumerate(arg)]))
+            for i, sub in enumerate(arg)])
     if kw == "oneOf":
-        flags = [
-            _spec_predicate(col, dtype, sub, f"{path}/oneOf[{i}]").cast("int")
+        flags = [_never_null(_spec_predicate(
+            col, dtype, sub, f"{path}/oneOf[{i}]")).cast("int")
             for i, sub in enumerate(arg)]
-        return _never_null(reduce(Column.__add__, flags) == 1)
+        return reduce(Column.__add__, flags) == 1
     if kw == "not":
-        return _never_null(~_spec_predicate(col, dtype, arg, f"{path}/not"))
-    if kw == "if":
-        return None  # folded below with then/else
-    if kw in ("then", "else"):
+        return ~_never_null(_spec_predicate(col, dtype, arg, f"{path}/not"))
+    # handled at the set level, or (additionalItems: only beside
+    # tuple-form items) by _additional_items_pred
+    if kw in ("if", "then", "else", "default", "dependencies",
+              "additionalItems"):
         return None
-
-    if kw in ("default", "dependencies"):
-        return None  # handled at the set level / as rewrites
 
     raise SchemaError(f"keyword {kw!r} not applicable to {dtype.simpleString()}",
                       path)
@@ -516,11 +520,9 @@ def compile_constraints(cset, schema: T.StructType) -> list[CompiledConstraint]:
                       if "else" in spec else F.lit(True))
             out.append(CompiledConstraint(
                 f"{col_name}.if", col_name,
-                _never_null(F.when(if_p, then_p).otherwise(else_p)), obs))
+                F.when(if_p, then_p).otherwise(else_p), obs))
 
         for kw, arg in spec.items():
-            if kw in ("if", "then", "else", "default", "dependencies"):
-                continue
             pred = _keyword_predicate(kw, col, dtype, arg, f"#{col_name}")
             if pred is None:
                 continue
@@ -548,7 +550,6 @@ def compile_constraints(cset, schema: T.StructType) -> list[CompiledConstraint]:
                     for d, sub in dep.items()])
             out.append(CompiledConstraint(
                 f"{col_name}.dependencies", col_name,
-                _never_null(F.when(col.isNotNull(), dep_pred)
-                            .otherwise(F.lit(True))), obs))
+                _pass_on_null(col, dep_pred), obs))
 
     return out

@@ -100,9 +100,9 @@ def _referential_constraints(cset: ConstraintSet,
             continue
         col = F.col(col_name)
         values = matching_scalars(allowed, schema[col_name].dataType)
-        pred = F.coalesce(col.isNull() | col.isin(values), F.lit(False))
         out.append(CompiledConstraint(
-            f"{col_name}.referential", col_name, pred, col.cast("string")))
+            f"{col_name}.referential", col_name,
+            col.isNull() | col.isin(values), col.cast("string")))
     return out
 
 
@@ -152,7 +152,8 @@ def _build_plan(cset: ConstraintSet, schema: T.StructType,
     names = [f"{MASK_PREFIX}{w}" for w in range(n_words)]
     words = {}
     for name, start in zip(names, range(0, len(compiled), MASK_BITS)):
-        bits = [F.when(~c.predicate, F.lit(1 << b)).otherwise(F.lit(0))
+        # a NULL verdict sets the bit (compiler.py's null discipline)
+        bits = [F.when(c.predicate, F.lit(0)).otherwise(F.lit(1 << b))
                 for b, c in enumerate(compiled[start:start + MASK_BITS])]
         words[name] = reduce(Column.bitwiseOR, bits).cast("long")
     ok = reduce(and_, [F.col(w) == 0 for w in names]) if names \

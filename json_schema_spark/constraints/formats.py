@@ -76,11 +76,12 @@ RX_IPV6 = (
 )
 
 # Pragmatic email (close to PHP FILTER_VALIDATE_EMAIL for common cases;
-# exact-parity path is the pandas fallback)
+# exact-parity path is the pandas fallback). Domain labels sit in
+# possessive groups for the reason RX_PATH_CHARS below gives.
 RX_EMAIL = (
     r"^[A-Za-z0-9.!#$%&'*+\/=?^_`{|}~\-]+@"
-    r"(([a-zA-Z0-9]|[a-zA-Z0-9][a-zA-Z0-9\-]*[a-zA-Z0-9])\.)+"
-    r"([A-Za-z0-9]|[A-Za-z0-9][A-Za-z0-9\-]*[A-Za-z0-9])$"
+    r"(?:[A-Za-z0-9]+(?:-+[A-Za-z0-9]+)*+\.)++"
+    r"[A-Za-z0-9]+(?:-+[A-Za-z0-9]+)*+$"
 )
 
 # uri path / fragment char classes (Check.php:468,482). Keep it as greedy
@@ -92,9 +93,9 @@ RX_PATH_CHARS = r"^(?i)(?:[a-z0-9/:@\-._~!$&'()*+,;=]+|%[0-9a-f]{2})*+$"
 
 # json-pointer: '' or sequence of /segments with ~0 ~1 escapes only
 # (Check.php:406-414)
-RX_JSON_POINTER = r"^(?:/[^/#]*)*$"
+RX_JSON_POINTER = r"^(?:/[^/#]*)*+$"
 RX_TILDE_BAD = r"~([^01]|$)"  # a '~' not followed by 0/1
-RX_REL_JSON_POINTER = r"^(0|[1-9][0-9]*)((?:/[^/#]+)*)(#?)$"
+RX_REL_JSON_POINTER = r"^(0|[1-9][0-9]*)((?:/[^/#]+)*+)(#?)$"
 
 # Simple absolute-URI shape: scheme ':' + allowed chars; host/path validity
 # refined below in _uri()
@@ -134,7 +135,7 @@ RX_URI_FAST = (
 
 
 def _not_tilde_broken(col: Column) -> Column:
-    return ~F.coalesce(col.rlike(RX_TILDE_BAD), F.lit(False))
+    return ~col.rlike(RX_TILDE_BAD)
 
 
 def _rx(pattern: str) -> Callable[[Column], Column]:
@@ -183,10 +184,10 @@ def _uri_exact(col: Column) -> Column:
     host_ok = (host == "") | _hostname(host)
     path_ok = (path == "") | path.rlike(RX_PATH_CHARS)
     frag_ok = (frag == "") | frag.rlike(RX_PATH_CHARS)
-    hier_ok = is_hier & F.coalesce(host_ok & path_ok & frag_ok, F.lit(False))
+    hier_ok = is_hier & host_ok & path_ok & frag_ok
     # opaque form (mailto:, urn:): restrict to URI char classes
     opaque = F.regexp_replace(col, RX_URI_SCHEME, "")
-    opaque_ok = (~is_hier) & F.coalesce(opaque.rlike(RX_PATH_CHARS), F.lit(False))
+    opaque_ok = (~is_hier) & opaque.rlike(RX_PATH_CHARS)
     return has_scheme & (hier_ok | opaque_ok)
 
 
@@ -273,7 +274,6 @@ def format_predicate(name: str, col: Column) -> Column:
     schema error (Validator.php:252-258 throws SchemaException)."""
     if name not in _REGISTRY:
         raise SchemaError(f"unknown format {name!r}")
-    pred = _REGISTRY[name](col)
-    # format applies to strings only; NULL (or non-string handled upstream)
-    # passes — null discipline: never let the predicate stay NULL
-    return F.coalesce(col.isNull() | pred, F.lit(False)) | col.isNull()
+    # format applies to strings only; NULL passes, and a NULL verdict on a
+    # value counts as a failure (compiler.py's null discipline)
+    return col.isNull() | _REGISTRY[name](col)

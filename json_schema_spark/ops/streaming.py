@@ -377,7 +377,8 @@ class StreamingDriftMonitor:
     tiny" contract as the batch drift layer — a web corpus has a few
     hundred langs/categories and a bounded day range). ``sink``
     receives (report_rows, batch_id) after each batch for alert
-    routing.
+    routing. Replay-safe: a batch id not above the last one folded (a
+    redelivery; ids increase) is not counted again.
     """
 
     def __init__(self, baseline_freqs: dict[str, float],
@@ -389,18 +390,21 @@ class StreamingDriftMonitor:
         self.eps = eps
         self.sink = sink
         self.counts: dict = {}  # (day, cat) -> n
+        self.last_batch_id = -1  # the last batch folded into counts
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        rows = (batch_df
-                .select(F.to_date(F.col(self.ts_col)).alias("day"),
-                        F.coalesce(F.col(self.cat_col),
-                                   F.lit("__null__")).alias("cat"))
-                .groupBy("day", "cat")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect())
-        for r in rows:
-            key = (r["day"], r["cat"])
-            self.counts[key] = self.counts.get(key, 0) + r["n"]
+        if batch_id > self.last_batch_id:
+            rows = (batch_df
+                    .select(F.to_date(F.col(self.ts_col)).alias("day"),
+                            F.coalesce(F.col(self.cat_col),
+                                       F.lit("__null__")).alias("cat"))
+                    .groupBy("day", "cat")
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .collect())
+            for r in rows:
+                key = (r["day"], r["cat"])
+                self.counts[key] = self.counts.get(key, 0) + r["n"]
+            self.last_batch_id = batch_id
         if self.sink is not None:
             self.sink(self.report(), batch_id)
 

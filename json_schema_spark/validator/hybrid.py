@@ -22,9 +22,8 @@ from operator import and_, or_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from json_schema_spark.constraints.compiler import length_keyword
+from json_schema_spark.constraints.compiler import length_keyword, multiple_of
 
 # Property / required names are interpolated literally into variant_get
 # JSON paths ("$.{name}" — '.' navigates into nesting, '[' is an index
@@ -102,7 +101,7 @@ def variant_plan(schema: dict) -> dict | None:
 
 
 def _variant_prop_pred(v: Column, spec: dict) -> Column:
-    """Pass-predicate for one property sub-variant. Never NULL.
+    """Pass-predicate for one property sub-variant; NULL fails at ``valid``.
 
     Applicability mirrors the document path: absent property (NULL
     variant) passes everything except `required` (handled by the
@@ -119,11 +118,8 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
     dval = F.try_variant_get(v, "$", "double")
     bval = F.try_variant_get(v, "$", "boolean")
 
-    def never_null(c: Column) -> Column:
-        return F.coalesce(c, F.lit(False))
-
     def gated(applies: Column, pred: Column) -> Column:
-        return never_null(~never_null(present & applies) | pred)
+        return ~F.coalesce(present & applies, F.lit(False)) | pred
 
     def type_ok(types: list[str]) -> Column:
         opts = []
@@ -166,14 +162,14 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
     for kw, arg in spec.items():
         if kw == "type":
             types = [arg] if isinstance(arg, str) else list(arg)
-            preds.append(never_null(~present | type_ok(types)))
+            preds.append(~present | type_ok(types))
         elif kw == "enum":
             scalars = [x for x in arg
                        if not isinstance(x, (dict, list))]
-            preds.append(never_null(~present | member_match(scalars)))
+            preds.append(~present | member_match(scalars))
         elif kw == "const":
             if not isinstance(arg, (dict, list)):
-                preds.append(never_null(~present | member_match([arg])))
+                preds.append(~present | member_match([arg]))
         elif kw in ("minLength", "maxLength"):
             preds.append(gated(is_string, length_keyword(kw, sval, int(arg))))
         elif kw == "pattern":
@@ -185,8 +181,8 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
             # non-strings — so a present non-string FAILS, absent passes
             from json_schema_spark.constraints.formats import (
                 format_predicate)
-            preds.append(never_null(
-                ~present | (is_string & format_predicate(arg, sval))))
+            preds.append(
+                ~present | (is_string & format_predicate(arg, sval)))
         elif kw == "minimum":
             preds.append(gated(is_num, dval >= F.lit(arg)))
         elif kw == "maximum":
@@ -198,14 +194,10 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
         elif kw == "multipleOf":
             if arg == 0:
                 continue
-            dec = T.DecimalType(38, 12)
-            preds.append(gated(
-                is_num,
-                (dval.cast(dec) % F.lit(arg).cast(dec))
-                == F.lit(0).cast(dec)))
+            preds.append(gated(is_num, multiple_of(dval, arg)))
     if not preds:
         return F.lit(True)
-    return never_null(reduce(and_, preds))
+    return reduce(and_, preds)
 
 
 def validate_json_variant(df: DataFrame, schema: dict,
@@ -243,14 +235,15 @@ def validate_json_variant(df: DataFrame, schema: dict,
         keys_ok = F.forall(
             F.json_object_keys(col),
             lambda k: k.isin(declared) if declared else F.lit(False))
-        field_ok = field_ok & F.coalesce(keys_ok, F.lit(False))
+        field_ok = field_ok & keys_ok
 
     if plan["root_must_be_object"]:
-        ok = parse_ok & F.coalesce(is_obj, F.lit(False)) & field_ok
+        ok = parse_ok & is_obj & field_ok
     else:
         # object keywords are ignored for non-object roots
-        ok = parse_ok & F.coalesce(
-            F.when(is_obj, field_ok).otherwise(F.lit(True)), F.lit(False))
+        ok = parse_ok & F.when(is_obj, field_ok).otherwise(F.lit(True))
+    # NULL → False once, for the whole verdict: the And, Or and CASE WHEN
+    # above never turn a NULL part of it into a pass
     return df.select(F.col(id_col),
                      F.coalesce(ok, F.lit(False)).alias("valid"))
 

@@ -219,6 +219,28 @@ def test_multiple_of_float_scaling(spark):
     assert got == {("a", "v.multipleOf"), ("b", "v.multipleOf")}
 
 
+def test_multiple_of_beyond_decimal_range(spark):
+    """A value Decimal(38, 12) cannot hold gets a verdict instead of
+    failing the job under ANSI mode, the verdict the document path
+    gives, also under ``not``."""
+    from json_schema_spark.validator.phpsem import multiple_of_ok
+
+    big = [1e30, -3e27, 1e300, 1e26 + 2 ** 35]
+    rows = [(f"r{i}", v) for i, v in enumerate(big)] \
+        + [("inf", float("inf")), ("nan", float("nan")), ("small", 0.75)]
+    for m in (0.5, 0.1, 7.0):
+        got = _violated(spark, rows, "id string, v double",
+                        {"v": {"multipleOf": m}})
+        want = {(i, "v.multipleOf") for i, v in rows
+                if not multiple_of_ok(v, m)}
+        assert got == want, m
+    assert _violated(spark, rows[:1], "id string, v double",
+                     {"v": {"multipleOf": 0.5}}) == set()
+    assert _violated(spark, rows[:1], "id string, v double",
+                     {"v": {"not": {"multipleOf": 0.5}}}) \
+        == {("r0", "v.not")}
+
+
 def test_integer_as_float_rule(spark):
     # 1.0 IS an integer (Check.php:33-41)
     rows = [("a", 1.0), ("b", 1.5)]

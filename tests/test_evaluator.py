@@ -325,3 +325,32 @@ def test_violations_evaluate_each_predicate_once(spark):
             .optimizedPlan().toString()
         assert plan.count("^q+z$") == 1, (observe, plan)
         assert _rows(res.violations()) == [("a", "s.pattern", "xyz")]
+
+
+def test_null_format_verdict_fails_except_under_not_and_one_of(spark):
+    """A format whose check is NULL on every value: the NULL verdict is a
+    violation, ``not`` passes because its operand failed, and the branch
+    of ``oneOf`` counts as failed, so the other branch alone matches."""
+    from json_schema_spark.constraints import formats
+    from json_schema_spark.constraints.evaluator import clear_plan_cache
+
+    formats.register_format("null-check",
+                            lambda c: F.lit(None).cast("boolean"))
+    try:
+        df = spark.createDataFrame([("a", "x")], "id string, s string")
+
+        def violated(spec):
+            res = validate(df, ConstraintSet(columns={"s": spec}),
+                           id_col="id", observe=False)
+            return _rows(res.violations())
+
+        assert violated({"format": "null-check"}) \
+            == [("a", "s.format", "x")]
+        assert violated({"not": {"format": "null-check"}}) == []
+        assert violated({"oneOf": [{"format": "null-check"},
+                                   {"minLength": 0}]}) == []
+    finally:
+        # register_format mutates the module's registry: undo it, and
+        # drop the plans built with the NULL check
+        del formats._REGISTRY["null-check"]
+        clear_plan_cache()

@@ -6,20 +6,26 @@ rejects. Both are evaluated by Spark's (Java) regex engine, as in the
 engine. RX_URI_FAST is tuned for the JVM's regex compiler; REFERENCE_FAST
 below is its plain form, and the two must accept the same language.
 
-The exact check's RX_PATH_CHARS and RX_HOSTNAME are written so that Java's
-regex engine does not recurse per character or per label: one long url
-must not overflow the stack and take Spark's JVM down with it."""
+The exact check's RX_PATH_CHARS and RX_HOSTNAME, and RX_EMAIL,
+RX_JSON_POINTER and RX_REL_JSON_POINTER, are written so that Java's regex
+engine does not recurse per character or per label: one long value must
+not overflow the stack and take Spark's JVM down with it."""
 
 import time
 from datetime import datetime
+from functools import reduce
+from operator import or_
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from json_schema_spark.constraints.formats import (
+    RX_EMAIL,
     RX_HOSTNAME,
+    RX_JSON_POINTER,
     RX_PATH_CHARS,
+    RX_REL_JSON_POINTER,
     RX_URI_FAST,
     _uri,
     _uri_exact,
@@ -205,14 +211,13 @@ PATH_HOST_EDGE_CASES = [
 ]
 
 
-def _regex_changed(spark, strings):
-    """strings on which rlike gives a regex and its reference different
-    verdicts."""
+def _regex_changed(spark, strings, pairs):
+    """strings on which rlike gives a regex of ``pairs`` and its reference
+    different verdicts."""
     df = spark.createDataFrame([(s,) for s in strings], "s string")
     s = F.col("s")
-    return [r["s"] for r in df.filter(
-        (s.rlike(RX_PATH_CHARS) != s.rlike(REFERENCE_PATH_CHARS))
-        | (s.rlike(RX_HOSTNAME) != s.rlike(REFERENCE_HOSTNAME))).collect()]
+    changed = [s.rlike(rx) != s.rlike(ref) for rx, ref in pairs]
+    return [r["s"] for r in df.filter(reduce(or_, changed)).collect()]
 
 
 @settings(max_examples=30, deadline=None,
@@ -223,7 +228,75 @@ def _regex_changed(spark, strings):
                               ["\n", " ", "-", "."])).map("".join)),
                 min_size=50, max_size=150))
 def test_path_and_hostname_regexes_language_unchanged(spark, strings):
-    assert _regex_changed(spark, PATH_HOST_EDGE_CASES + strings) == []
+    assert _regex_changed(spark, PATH_HOST_EDGE_CASES + strings, [
+        (RX_PATH_CHARS, REFERENCE_PATH_CHARS),
+        (RX_HOSTNAME, REFERENCE_HOSTNAME)]) == []
+
+
+# RX_EMAIL, RX_JSON_POINTER and RX_REL_JSON_POINTER as they were before
+# their repeated groups became possessive. Java overflowed its stack on
+# them at 3,364, 6,200 and 6,194 characters.
+REFERENCE_EMAIL = (
+    r"^[A-Za-z0-9.!#$%&'*+\/=?^_`{|}~\-]+@"
+    r"(([a-zA-Z0-9]|[a-zA-Z0-9][a-zA-Z0-9\-]*[a-zA-Z0-9])\.)+"
+    r"([A-Za-z0-9]|[A-Za-z0-9][A-Za-z0-9\-]*[A-Za-z0-9])$"
+)
+REFERENCE_JSON_POINTER = r"^(?:/[^/#]*)*$"
+REFERENCE_REL_JSON_POINTER = r"^(0|[1-9][0-9]*)((?:/[^/#]+)*)(#?)$"
+
+EMAIL_POINTER_EDGE_CASES = [
+    "a@b", "a@b.c", "a@b.c.", "a@.b", "a@b..c", "a@-b.c", "a@b-.c",
+    "a@b--c.d", "a@b.c-d", "a@b.c\n", "a@b.c\n\n", "a@b.c ", "@b.c",
+    "a.b+c@d.e", "a@b@c.d", "a@b_c.d", "a@\u00e9.c", "a@1.2",
+    "a@" + ".".join(["ab-c"] * 200), "a@" + ".".join(["ab-c"] * 200) + "-",
+    "", "/", "//", "/a", "/a/", "/a#", "#", "/~0", "/a\n", "a", "/a/b~1c",
+    "0", "1", "01", "10", "0/", "0/a", "0/a/", "0/a#", "0#", "0##",
+    "1/a/b#", "0/a\n", "0\n", "0/\n", "0//a",
+    "/a" * 200, "0" + "/a" * 200 + "#",
+]
+
+_email = st.builds(
+    lambda local, labels, tail: f"{local}@{'.'.join(labels)}{tail}",
+    st.text("aZ9.!#+_~@ -", max_size=6),
+    st.lists(st.text(_ALNUM + "-_", max_size=6), max_size=4),
+    st.sampled_from(["", "", ".", "-", " ", "\n", "\r\n"]))
+_pointer = st.builds(
+    lambda head, segs, tail: head + "".join("/" + s for s in segs) + tail,
+    st.sampled_from(["", "", "0", "1", "10", "01", "a"]),
+    st.lists(st.text("a~01/#\n \u00e9", max_size=4), max_size=4),
+    st.sampled_from(["", "", "#", "\n", "#\n", "/", "//"]))
+
+EMAIL_POINTER_PAIRS = [(RX_EMAIL, REFERENCE_EMAIL),
+                       (RX_JSON_POINTER, REFERENCE_JSON_POINTER),
+                       (RX_REL_JSON_POINTER, REFERENCE_REL_JSON_POINTER)]
+
+
+@settings(max_examples=30, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.data_too_large])
+@given(st.lists(st.one_of(_email, _pointer), min_size=50, max_size=150))
+def test_email_and_pointer_regexes_language_unchanged(spark, strings):
+    assert _regex_changed(spark, EMAIL_POINTER_EDGE_CASES + strings,
+                          EMAIL_POINTER_PAIRS) == []
+
+
+def test_email_and_pointer_regexes_on_long_inputs(spark):
+    """Each of these values overflowed Java's stack under the old form of
+    its regex, an error that exits Spark's JVM."""
+    cases = [
+        (RX_EMAIL, "a@" + "a." * 50_000 + "com", True),
+        (RX_EMAIL, "a@" + "a-b." * 25_000 + "-", False),
+        (RX_JSON_POINTER, "/a" * 50_000, True),
+        (RX_JSON_POINTER, "/a" * 50_000 + "#", False),
+        (RX_REL_JSON_POINTER, "0" + "/a" * 50_000 + "#", True),
+        (RX_REL_JSON_POINTER, "0" + "/a" * 50_000 + "/", False),
+    ]
+    df = spark.createDataFrame(
+        [(i, text) for i, (_, text, _) in enumerate(cases)], "i int, s string")
+    verdict = F.coalesce(*[F.when(F.col("i") == i, F.col("s").rlike(rx))
+                           for i, (rx, _, _) in enumerate(cases)])
+    got = [r[0] for r in df.orderBy("i").select(verdict).collect()]
+    assert got == [want for _, _, want in cases]
 
 
 def test_validate_webtext_verdict_on_long_url(spark):

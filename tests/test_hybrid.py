@@ -262,6 +262,21 @@ def test_variant_path_exact_document_parity(spark):
     json  # keep import
 
 
+def test_variant_path_multiple_of_beyond_decimal_range(spark):
+    """1e30 multipleOf 0.5 is true on the variant path, as on the
+    document path, instead of failing the job under ANSI mode."""
+    from json_schema_spark.validator.hybrid import validate_json_variant
+
+    df = spark.createDataFrame(
+        [(0, '{"a": 1e30}'), (1, '{"a": 1e30, "b": 1e300}'),
+         (2, '{"b": 0.25}')], "id long, json string")
+    schema = {"type": "object",
+              "properties": {"a": {"multipleOf": 0.5},
+                             "b": {"multipleOf": 0.5}}}
+    assert sorted(tuple(r) for r in validate_json_variant(df, schema)
+                  .collect()) == [(0, True), (1, True), (2, False)]
+
+
 def test_variant_path_null_vs_absent_required(spark):
     """PHP property_exists semantics: required passes on explicit null
     and fails on an absent key."""

@@ -676,6 +676,27 @@ def test_streaming_drift_matches_batch_operator(spark, tmp_path):
         assert abs(streamed2[day][1] - batch[day][1]) < 2e-6
 
 
+def test_streaming_drift_replayed_batch_counts_once(spark):
+    """foreachBatch delivers at least once: a second delivery of batch 1
+    leaves the counts, and the PSI, as one delivery left them."""
+    from json_schema_spark.ops.streaming import StreamingDriftMonitor
+
+    def batch(langs):
+        return spark.createDataFrame(
+            [("2025-06-01 00:00:00", lang) for lang in langs],
+            "ts string, lang string").withColumn("ts", F.to_timestamp("ts"))
+
+    reports = []
+    mon = StreamingDriftMonitor({"en": 0.5, "de": 0.5}, cat_col="lang",
+                                ts_col="ts",
+                                sink=lambda rep, bid: reports.append(rep))
+    mon(batch(["en"] * 3), 0)
+    mon(batch(["de"]), 1)
+    mon(batch(["de"]), 1)
+    assert [r[0]["psi"] for r in reports[1:]] == [0.274653, 0.274653]
+    assert sorted(mon.counts.values()) == [1, 3]
+
+
 def test_chunking_and_url_filter_compose_with_streams(spark, tmp_path):
     """chunk_documents and filter_urls are stateless projections /
     filters (chunking's Generate is append-safe), so both must run on

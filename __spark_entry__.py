@@ -70,7 +70,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from json_schema_spark import validate
 
     df = _docs(spark, "/root/testdata/sf0.001")
-    res = validate(df, _documents_cset(), id_col="doc_id", observe=False)
+    res = validate(df, _documents_cset(), id_col="doc_id")
     return res.violations()
 
 
@@ -82,7 +82,7 @@ def _q_validate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_schema_spark import validate
 
     res = validate(_docs(spark, sf_dir), _documents_cset(),
-                   id_col="doc_id", observe=False)
+                   id_col="doc_id")
     return res.violations()
 
 
@@ -2094,8 +2094,7 @@ def _q_kw_combinators(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "then": {"maxLength": 5},
                    "else": {"minLength": 4}},
     })
-    res = validate(_docs(spark, sf_dir), cset, id_col="doc_id",
-                   observe=False)
+    res = validate(_docs(spark, sf_dir), cset, id_col="doc_id")
     return res.violations()
 
 
@@ -2154,7 +2153,7 @@ def _q_kw_array(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tf": {"items": [{}, {}], "additionalItems": False},
         "ts": {"items": [{}, {}], "additionalItems": {"minLength": 3}},
     })
-    return validate(df, cset, id_col="doc_id", observe=False).violations()
+    return validate(df, cset, id_col="doc_id").violations()
 
 
 _SQL_KW_ARRAY = """
@@ -2230,7 +2229,7 @@ def _q_kw_object(spark: SparkSession, sf_dir: str) -> DataFrame:
                   "minProperties": 2, "maxProperties": 2},
         "source": {"dependencies": ["lang_ok"]},
     })
-    return validate(df, cset, id_col="doc_id", observe=False).violations()
+    return validate(df, cset, id_col="doc_id").violations()
 
 
 _SQL_KW_OBJECT = """
@@ -2292,7 +2291,7 @@ def _q_kw_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "exclusiveMaximum": 500},
         "ratio": {"multipleOf": 0.25},
     })
-    return validate(df, cset, id_col="doc_id", observe=False).violations()
+    return validate(df, cset, id_col="doc_id").violations()
 
 
 _SQL_KW_NUMERIC = """
@@ -2365,7 +2364,7 @@ def _q_kw_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "jp": {"format": "json-pointer"}, "u": {"format": "uri"},
     })
     return validate(_format_probe_df(spark, sf_dir), cset,
-                    id_col="doc_id", observe=False).violations()
+                    id_col="doc_id").violations()
 
 
 def _sql_kw_formats() -> str:
@@ -2550,7 +2549,7 @@ def _q_kw_content(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b64": {"contentEncoding": "base64"},
         "js": {"contentMediaType": "application/json"},
     })
-    return validate(df, cset, id_col="doc_id", observe=False).violations()
+    return validate(df, cset, id_col="doc_id").violations()
 
 
 _SQL_KW_CONTENT = """

@@ -33,6 +33,6 @@ spark = get_spark(cores=4)
 df = spark.createDataFrame(
     [(1, "507f191e810c19729de860ea"), (2, "nope")], "id long, oid string")
 res = validate(df, ConstraintSet(columns={"oid": {"format": "objectId"}}),
-               id_col="id", observe=False)
+               id_col="id")
 res.violations().show()   # row 2 fails oid.format
 spark.stop()

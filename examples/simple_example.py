@@ -34,6 +34,6 @@ spark = get_spark(cores=4)
 df = spark.createDataFrame([(1, 10), (2, 9), (3, None)], "id long, n long")
 res = validate(df, ConstraintSet(columns={"n": {"type": ["integer", "null"],
                                                "minimum": 10}}),
-               id_col="id", observe=False)
+               id_col="id")
 res.violations().show()   # row 2 fails n.minimum
 spark.stop()

@@ -229,12 +229,34 @@ def _canonicalize_spec(spec: dict[str, Any]) -> dict[str, Any]:
     return out
 
 
+def _if_predicate(col: Column, dtype: T.DataType, spec: dict[str, Any],
+                  path: str) -> Column | None:
+    """if/then/else folded to one conditional predicate
+    (Validator.php:280-335; F.when keeps it a pure expression), or None
+    without ``if``."""
+    if "if" not in spec:
+        return None
+    if_p = _spec_predicate(col, dtype, spec["if"], f"{path}/if")
+    then_p, else_p = [
+        _spec_predicate(col, dtype, spec[kw], f"{path}/{kw}")
+        if kw in spec else F.lit(True) for kw in ("then", "else")]
+    return F.when(if_p, then_p).otherwise(else_p)
+
+
 def _spec_predicate(col: Column, dtype: T.DataType,
                     spec: dict[str, Any], path: str) -> Column:
     """AND of every keyword predicate in a (sub-)spec — used standalone by
     combinators; NULL counts as a failure, as at the top level."""
     spec = _canonicalize_spec(spec)
+    if "dependencies" in spec:
+        # a column-level keyword (other columns' presence): it has no
+        # meaning on a sub-value, and must not pass silently
+        raise SchemaError("dependencies is only supported at a column's "
+                          "top level", f"{path}/dependencies")
     preds = []
+    cond = _if_predicate(col, dtype, spec, path)
+    if cond is not None:
+        preds.append(cond)
     for kw, arg in spec.items():
         built = _keyword_predicate(kw, col, dtype, arg, path)
         if built is not None:
@@ -380,8 +402,8 @@ def _keyword_predicate(kw: str, col: Column, dtype: T.DataType,
         return reduce(Column.__add__, flags) == 1
     if kw == "not":
         return ~_never_null(_spec_predicate(col, dtype, arg, f"{path}/not"))
-    # handled at the set level, or (additionalItems: only beside
-    # tuple-form items) by _additional_items_pred
+    # handled by _if_predicate, at the set level, or (additionalItems:
+    # only beside tuple-form items) by _additional_items_pred
     if kw in ("if", "then", "else", "default", "dependencies",
               "additionalItems"):
         return None
@@ -508,19 +530,10 @@ def compile_constraints(cset, schema: T.StructType) -> list[CompiledConstraint]:
         obs = _observed(col, dtype)
         spec = _canonicalize_spec(spec)
 
-        # if/then/else folds to a single conditional predicate
-        # (Validator.php:280-335; F.when keeps it a pure expression)
-        if "if" in spec:
-            if_p = _spec_predicate(col, dtype, spec["if"], f"#{col_name}/if")
-            then_p = (_spec_predicate(col, dtype, spec["then"],
-                                      f"#{col_name}/then")
-                      if "then" in spec else F.lit(True))
-            else_p = (_spec_predicate(col, dtype, spec["else"],
-                                      f"#{col_name}/else")
-                      if "else" in spec else F.lit(True))
-            out.append(CompiledConstraint(
-                f"{col_name}.if", col_name,
-                F.when(if_p, then_p).otherwise(else_p), obs))
+        cond = _if_predicate(col, dtype, spec, f"#{col_name}")
+        if cond is not None:
+            out.append(CompiledConstraint(f"{col_name}.if", col_name,
+                                          cond, obs))
 
         for kw, arg in spec.items():
             pred = _keyword_predicate(kw, col, dtype, arg, f"#{col_name}")

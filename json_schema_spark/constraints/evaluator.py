@@ -12,21 +12,31 @@ scan, no shuffle for the row-level checks, shuffles only for the
 dataset-level checks (uniqueness, referential) which are explicitly
 skew-managed.
 
-Plan cache. Every name-bound Column of that pass depends only on the
-ConstraintSet, the input schema and ``dataset_checks``, never on the
+Plan cache. Every Column of that pass depends only on the ConstraintSet,
+the input schema, ``dataset_checks`` and ``id_col``, never on the
 DataFrame: the defaults, the compiled constraints (with the literal
 referential ones when ``dataset_checks``), the mask words and ``_ok``, the
-three observation aggregates and the violation array. Built from Python,
+violation array, the id column, the ``inline`` generator of the failing
+rows' violations and its not-null filter, the three aliased observation
+aggregates, and the id key's uniqueness branch (its grouping key, count,
+filter and ``explode(array_repeat(...))`` select list). Built from Python,
 they cost thousands of Py4J round trips, so ``validation_plan`` builds them
 once into a frozen ``ValidationPlan`` and keeps it in a module-level LRU of
 PLAN_CACHE_SIZE entries, keyed by ``(cset.content_hash(), schema.json(),
-dataset_checks)`` and the active SparkContext, so a stopped and restarted
-session never reuses Columns of the old one. ``register_format`` clears
-the cache, because a format's builder is baked into the predicates. A
-``validate()`` call then builds only the DataFrame-bound steps: the
-``withColumns``, a fresh Observation, the ``inline`` of the violations, the
-dataset-level branches and their union. ``compile_constraints`` itself
-stays uncached.
+dataset_checks, id_col)`` and the active SparkContext, so a stopped and
+restarted session never reuses Columns of the old one. ``register_format``
+clears the cache, because a format's builder is baked into the predicates.
+A ``validate()`` call then only applies them to the DataFrame: the
+``withColumns`` of the defaults and the mask, the select and filter of the
+violations, the uniqueness chain, and, when asked, a fresh Observation.
+What a call still builds itself are the DataFrame-dimension referential
+and non-id uniqueness branches and the union of the outputs.
+``compile_constraints`` itself stays uncached.
+
+Observation. ``validate(observe=True)`` adds ``df.observe`` of the three
+counters behind ``metrics()``. Its CollectMetrics node has no whole-stage
+codegen, so it splits the fused stage and every row, wide text columns
+included, leaves compiled code; the default leaves it out.
 """
 
 from __future__ import annotations
@@ -45,6 +55,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
 
+from json_schema_spark.checks.uniqueness import (
+    id_duplicate_columns,
+    id_duplicate_rows,
+    uniqueness_violations,
+)
 from json_schema_spark.constraints.compiler import (
     CompiledConstraint,
     compile_constraints,
@@ -109,7 +124,8 @@ def _referential_constraints(cset: ConstraintSet,
 @dataclass(frozen=True, eq=False)
 class ValidationPlan:
     """Every name-bound Column of validate() for one (ConstraintSet,
-    input schema, dataset_checks), built once by ``validation_plan``."""
+    input schema, dataset_checks, id_col), built once by
+    ``validation_plan``."""
 
     defaults: dict[str, Column]            # column → coalesce(col, default)
     constraints: tuple[CompiledConstraint, ...]
@@ -118,10 +134,17 @@ class ValidationPlan:
     words: dict[str, Column]
     ok: Column                             # no bit set
     violation_count: Column                # constraints the row fails
-    aggregates: dict[str, Column]          # observed name → aggregate
+    observed: tuple[Column, ...]           # the aliased observe() counters
     # one (constraint_id, observed_value) struct per constraint, in
     # constraint order, null where the annotated row passes it
     violation_array: Column
+    id: Column                             # id_col as a string
+    # inline of the failing rows' violation structs, and the filter
+    # dropping the nulls it yields for the constraints a row passes
+    failed: Column
+    is_violation: Column
+    # id_duplicate_columns(id_col) when the set has the id key unique
+    id_duplicates: tuple[Column, ...] | None
 
     def annotate(self, df: DataFrame) -> DataFrame:
         """``df`` plus the mask words and ``_ok``."""
@@ -137,14 +160,12 @@ class ValidationPlan:
         with no observation between them, the optimizer would push that
         Filter into the mask's projection and evaluate every predicate
         twice."""
-        return (annotated
-                .select(*cols, F.inline(F.when(~F.col(OK_COL),
-                                               self.violation_array)))
-                .filter(F.col("constraint_id").isNotNull()))
+        return (annotated.select(*cols, self.failed)
+                .filter(self.is_violation))
 
 
 def _build_plan(cset: ConstraintSet, schema: T.StructType,
-                dataset_checks: bool) -> ValidationPlan:
+                dataset_checks: bool, id_col: str) -> ValidationPlan:
     compiled = compile_constraints(cset, schema)
     if dataset_checks:
         compiled += _referential_constraints(cset, schema)
@@ -176,11 +197,15 @@ def _build_plan(cset: ConstraintSet, schema: T.StructType,
         words=words,
         ok=ok,
         violation_count=count,
-        aggregates={
-            "rows_total": F.count(F.lit(1)),
-            "rows_failed": F.sum((~F.col(OK_COL)).cast("long")),
-            "violations_total": F.sum(count.cast("long"))},
-        violation_array=violations)
+        observed=(F.count(F.lit(1)).alias("rows_total"),
+                  F.sum((~F.col(OK_COL)).cast("long")).alias("rows_failed"),
+                  F.sum(count.cast("long")).alias("violations_total")),
+        violation_array=violations,
+        id=F.col(id_col).cast("string").alias(id_col),
+        failed=F.inline(F.when(~F.col(OK_COL), violations)),
+        is_violation=F.col("constraint_id").isNotNull(),
+        id_duplicates=id_duplicate_columns(id_col)
+        if dataset_checks and [id_col] in cset.unique_keys else None)
 
 
 _PLANS: OrderedDict[tuple, tuple[weakref.ref, ValidationPlan]] = OrderedDict()
@@ -194,17 +219,19 @@ def clear_plan_cache() -> None:
 
 
 def validation_plan(cset: ConstraintSet, schema: T.StructType,
-                    dataset_checks: bool = True) -> ValidationPlan:
+                    dataset_checks: bool = True,
+                    id_col: str = "url") -> ValidationPlan:
     """The ValidationPlan of ``cset`` over ``schema``, from the LRU when
     this SparkContext has built it before (see the module docstring)."""
     sc = SparkContext._active_spark_context
-    key = (id(sc), cset.content_hash(), schema.json(), dataset_checks)
+    key = (id(sc), cset.content_hash(), schema.json(), dataset_checks,
+           id_col)
     with _PLANS_LOCK:
         hit = _PLANS.get(key)
         if hit is not None and hit[0]() is sc:
             _PLANS.move_to_end(key)
             return hit[1]
-    plan = _build_plan(cset, schema, dataset_checks)
+    plan = _build_plan(cset, schema, dataset_checks, id_col)
     with _PLANS_LOCK:
         _PLANS[key] = (weakref.ref(sc), plan)
         _PLANS.move_to_end(key)
@@ -242,9 +269,7 @@ class ValidationResult:
     def violations(self) -> DataFrame:
         """(id, constraint_id, observed_value) — row-level violations plus
         dataset-level (uniqueness / referential) ones."""
-        row_level = self.plan.violation_rows(
-            self.annotated,
-            F.col(self.id_col).cast("string").alias(self.id_col))
+        row_level = self.plan.violation_rows(self.annotated, self.plan.id)
         if self._dataset_violations is not None:
             row_level = row_level.unionByName(self._dataset_violations)
         return row_level
@@ -314,29 +339,32 @@ class ValidationResult:
 
     def metrics(self) -> dict[str, Any]:
         """Scan-free metrics recorded by df.observe — valid after any action
-        on ``annotated`` (or a derived output)."""
+        on ``annotated`` (or a derived output); empty unless validate()
+        was called with ``observe=True``."""
         if self.observation is None:
             return {}
         return dict(self.observation.get)
 
 
-def _dataset_checks(df: DataFrame, cset: ConstraintSet,
-                    id_col: str) -> tuple[DataFrame | None, list[str]]:
+def _dataset_checks(df: DataFrame, cset: ConstraintSet, id_col: str,
+                    plan: ValidationPlan
+                    ) -> tuple[DataFrame | None, list[str]]:
     """Dataset-level checks that genuinely need data movement → violation
     rows, and their constraint ids. Uniqueness always shuffles (see
-    checks/uniqueness.py for the skew story); referential checks against a
+    checks/uniqueness.py for the skew story); the id key's branch is
+    applied from the plan's Columns. Referential checks against a
     *DataFrame* dimension broadcast-join. Literal allow-list referentials
     are pure predicates and are fused into the single-pass row-level
     projection instead (see validate()) — zero extra scans for them.
     """
     from json_schema_spark.checks.referential import referential_violations
-    from json_schema_spark.checks.uniqueness import uniqueness_violations
 
     parts: list[DataFrame] = []
     ids: list[str] = []
-    for key in cset.unique:
-        cols = list(key) if isinstance(key, (list, tuple)) else [key]
-        parts.append(uniqueness_violations(df, cols, id_col=id_col))
+    for cols in cset.unique_keys:
+        parts.append(id_duplicate_rows(df, plan.id_duplicates)
+                     if cols == [id_col]
+                     else uniqueness_violations(df, cols, id_col=id_col))
         ids.append(".".join(cols) + ".unique")
     for col, allowed in cset.referential.items():
         if isinstance(allowed, DataFrame):
@@ -353,12 +381,17 @@ def validate(
     cset: ConstraintSet,
     id_col: str = "url",
     dataset_checks: bool = True,
-    observe: bool = True,
+    observe: bool = False,
 ) -> ValidationResult:
     """Apply the schema defaults and annotate ``df`` with the validation
     plan of ``cset`` over ``df``'s schema (compiled on first use, then
-    cached). Pure transformation — no action is triggered."""
-    plan = validation_plan(cset, df.schema, dataset_checks)
+    cached). Pure transformation — no action is triggered.
+
+    ``observe=True`` fills ``metrics()``. It costs a ``CollectMetrics``
+    node over every annotated row, which whole-stage codegen does not
+    compile, so each row leaves the fused stage; leave it off unless the
+    counters are read."""
+    plan = validation_plan(cset, df.schema, dataset_checks, id_col)
     if plan.defaults:
         df = df.withColumns(plan.defaults)
     annotated = plan.annotate(df)
@@ -366,11 +399,10 @@ def validate(
     obs = None
     if observe:
         obs = Observation("jsv_metrics")
-        annotated = annotated.observe(
-            obs, *[agg.alias(name) for name, agg in plan.aggregates.items()])
+        annotated = annotated.observe(obs, *plan.observed)
 
-    ds_viol, ds_ids = (_dataset_checks(df, cset, id_col) if dataset_checks
-                       else (None, []))
+    ds_viol, ds_ids = (_dataset_checks(df, cset, id_col, plan)
+                       if dataset_checks else (None, []))
 
     return ValidationResult(
         annotated=annotated,

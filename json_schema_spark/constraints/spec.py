@@ -169,6 +169,12 @@ class ConstraintSet:
         for col, spec in self.columns.items():
             _check_column_spec(col, spec)
 
+    @property
+    def unique_keys(self) -> list[list[str]]:
+        """The column list of each uniqueness key."""
+        return [list(u) if isinstance(u, (list, tuple)) else [u]
+                for u in self.unique]
+
     # -- identity ------------------------------------------------------
     def content_hash(self) -> str:
         """Stable hash of the spec — recorded in checkpoint lineage
@@ -178,8 +184,7 @@ class ConstraintSet:
         payload = json.dumps(
             {
                 "columns": self.columns,
-                "unique": [list(u) if isinstance(u, (list, tuple)) else [u]
-                           for u in self.unique],
+                "unique": self.unique_keys,
                 "referential": {
                     k: _allow_list_key(v)
                     for k, v in self.referential.items()

@@ -49,9 +49,9 @@ def stream_violations(stream_df: DataFrame, cset: ConstraintSet,
             raise ValueError(
                 f"multiple timestamp columns {ts_cols}; pass ts_col=")
         ts = F.col(ts_cols[0]) if ts_cols else F.current_timestamp()
-    plan = validation_plan(cset, stream_df.schema, dataset_checks=False)
-    return (plan.violation_rows(plan.annotate(stream_df),
-                                F.col(id_col).cast("string").alias(id_col),
+    plan = validation_plan(cset, stream_df.schema, dataset_checks=False,
+                           id_col=id_col)
+    return (plan.violation_rows(plan.annotate(stream_df), plan.id,
                                 ts.alias("event_ts"))
             .select(id_col, "constraint_id", "observed_value", "event_ts"))
 

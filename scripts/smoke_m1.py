@@ -3,12 +3,14 @@ import time
 
 from json_schema_spark.session import get_spark
 from json_schema_spark.sources.webtext import generate_webtext
-from json_schema_spark.flagship import validate_webtext
+from json_schema_spark.constraints.evaluator import validate
+from json_schema_spark.flagship import webtext_constraints
 
 spark = get_spark(cores=8)
 df = generate_webtext(spark, 6000)
 t0 = time.time()
-res = validate_webtext(df)
+# the flagship call, observed so that metrics() has its counters
+res = validate(df, webtext_constraints(), id_col="url", observe=True)
 summary = res.constraint_summary().collect()
 print("constraint_summary:")
 for r in summary:

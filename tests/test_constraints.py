@@ -303,6 +303,47 @@ def test_if_then_else(spark):
         ("a", "v.if"), ("b", "v.if")}
 
 
+def test_if_then_inside_sub_specs(spark):
+    """if/then under allOf, not and array items folds as it does at the
+    top level: each wrapper's verdict on "bbbb", "abcd" and "bb" equals
+    the document validator's on the same value."""
+    from json_schema_spark.validator.document import (
+        DocumentValidator, ValidationError, compile_schema)
+
+    cond = {"if": {"minLength": 3}, "then": {"pattern": "^a"}}
+    columns = {"s1": {"allOf": [cond]}, "s2": {"not": cond},
+               "a": {"items": cond}}
+    values = ["bbbb", "abcd", "bb"]
+    got = _violated(spark, [(v, v, v, [v]) for v in values],
+                    "id string, s1 string, s2 string, a array<string>",
+                    columns)
+    want = set()
+    for col, spec in columns.items():
+        compiled = compile_schema(spec)
+        for v in values:
+            try:
+                DocumentValidator().validate([v] if col == "a" else v,
+                                             compiled)
+            except ValidationError:
+                want.add((v, f"{col}.{next(iter(spec))}"))
+    assert ("bbbb", "s1.allOf") in want and ("abcd", "s2.not") in want
+    assert got == want
+
+
+def test_dependencies_inside_sub_spec_is_a_schema_error(spark):
+    """dependencies names other columns, so it only means something at
+    a column's top level; below it the compiler refuses it, with its
+    path, instead of dropping it."""
+    for spec, path in (
+            ({"allOf": [{"dependencies": ["q"]}]},
+             "#p/allOf[0]/dependencies"),
+            ({"items": {"dependencies": ["q"]}}, "#p/items/dependencies")):
+        with pytest.raises(SchemaError) as err:
+            _violated(spark, [("a", ["x"], "y")],
+                      "id string, p array<string>, q string", {"p": spec})
+        assert err.value.path == path
+
+
 def test_dependencies_list_form(spark):
     rows = [("a", "x", "y"), ("b", "x", None), ("c", None, None)]
     cols = {"p": {"dependencies": ["q"]}}
@@ -382,7 +423,7 @@ def test_unknown_format_is_schema_error(spark):
 def test_observe_metrics(spark):
     df = spark.createDataFrame([("a", ""), ("b", "ok")], "id string, s string")
     res = validate(df, ConstraintSet(columns={"s": {"minLength": 1}}),
-                   id_col="id")
+                   id_col="id", observe=True)
     res.annotated.count()  # any action materializes the observation
     m = res.metrics()
     assert m["rows_total"] == 2

@@ -23,7 +23,7 @@ def test_fixture_outputs_pinned(spark):
     cset = ConstraintSet(columns={
         "s": {"minLength": 2, "pattern": "^a"},
         "n": {"minimum": 0, "maximum": 10}})
-    res = validate(df, cset, id_col="id")
+    res = validate(df, cset, id_col="id", observe=True)
     assert res.constraint_ids == ["s.minLength", "s.pattern",
                                   "n.minimum", "n.maximum"]
     assert _rows(res.violations()) == [
@@ -53,7 +53,7 @@ def test_second_mask_word(spark):
         [("ok", *[1] * n), ("bad", *bad)],
         "id string, " + ", ".join(f"{c} long" for c in cols)).coalesce(1)
     cset = ConstraintSet(columns={c: {"minimum": 0} for c in cols})
-    res = validate(df, cset, id_col="id")
+    res = validate(df, cset, id_col="id", observe=True)
     assert [c for c in res.annotated.columns if c.startswith("_mask")] \
         == ["_mask0", "_mask1"]
     assert _rows(res.violations()) == [
@@ -69,7 +69,7 @@ def test_second_mask_word(spark):
 
 def test_empty_constraint_set(spark):
     df = spark.createDataFrame([("a", 1), ("b", 2)], "id string, v long")
-    res = validate(df, ConstraintSet(columns={}), id_col="id")
+    res = validate(df, ConstraintSet(columns={}), id_col="id", observe=True)
     v = res.violations()
     assert v.columns == ["id", "constraint_id", "observed_value"]
     assert v.collect() == []
@@ -151,7 +151,8 @@ def test_second_validate_compiles_nothing(spark, monkeypatch):
     first = validate(df, ConstraintSet(columns={"n": {"minimum": 0}},
                                        name="once"), id_col="id")
     second = validate(df, ConstraintSet(columns={"n": {"minimum": 0}},
-                                        name="again"), id_col="id")
+                                        name="again"), id_col="id",
+                      observe=True)
     assert calls == ["once"]
     assert _rows(first.violations()) == _rows(second.violations()) \
         == [("b", "n.minimum", "-1")]
@@ -222,7 +223,7 @@ def test_plan_cache_under_concurrent_lookups(spark, monkeypatch):
     from json_schema_spark.constraints import evaluator
 
     monkeypatch.setattr(evaluator, "_build_plan",
-                        lambda cset, schema, dataset_checks:
+                        lambda cset, schema, dataset_checks, id_col:
                         cset.columns["n"]["minimum"])
     evaluator.clear_plan_cache()
     schema = T.StructType([T.StructField("n", T.LongType())])
@@ -259,28 +260,42 @@ def test_plan_cache_under_concurrent_lookups(spark, monkeypatch):
 
 def test_warm_flagship_build_round_trips(spark, monkeypatch):
     """Building validate_webtext(df).violations() from a cached plan
-    takes at most 500 Py4J round trips (about 3,100 when every call
-    rebuilt every Column). py4j's deferred releases of earlier objects
-    (memory commands) are not part of the build and are not counted."""
+    takes at most 100 Py4J round trips, and the row-level call
+    (dataset_checks=False) at most 70: every Column comes from the plan,
+    and a call only applies them (about 3,100 when every call rebuilt
+    every Column, 314 and 153 when the plan held only the row-level
+    pass). py4j's deferred releases of earlier objects (memory commands)
+    are not part of the build and are not counted."""
     import py4j.clientserver as cs
 
-    from json_schema_spark.flagship import validate_webtext
+    from json_schema_spark.flagship import (
+        validate_webtext,
+        webtext_constraints,
+    )
     from json_schema_spark.sources.webtext import generate_webtext
 
     df = generate_webtext(spark, 200)
-    validate_webtext(df).violations()
-    sent = []
     real = cs.ClientServerConnection.send_command
 
-    def counted(self, command):
-        sent.append(command)
-        return real(self, command)
+    def round_trips(build):
+        build()
+        sent = []
 
-    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
-    validate_webtext(df).violations()
-    monkeypatch.undo()
-    n = sum(not c.startswith("m\n") for c in sent)
-    assert 0 < n <= 500
+        def counted(self, command):
+            sent.append(command)
+            return real(self, command)
+
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command",
+                            counted)
+        build()
+        monkeypatch.undo()
+        return sum(not c.startswith("m\n") for c in sent)
+
+    n = round_trips(lambda: validate_webtext(df).violations())
+    assert 0 < n <= 100
+    n = round_trips(lambda: validate(
+        df, webtext_constraints(), dataset_checks=False).violations())
+    assert 0 < n <= 70
 
 
 def test_content_hash_keeps_list_hashes():

@@ -86,38 +86,90 @@ _EXTRA_STRING_KEYWORDS = [
     ("url", "minLength", 8), ("lang", "type", "string")]
 
 
-def test_webtext_row_stage_methods_fit_jit_limit(spark):
+@pytest.fixture(scope="module")
+def cached_webtext(spark):
+    from json_schema_spark.sources.webtext import generate_webtext
+
+    df = generate_webtext(spark, 1000).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def test_default_violations_stay_in_one_codegen_stage(cached_webtext):
+    """The default validate() observes nothing: its violations plan over
+    cached rows is the scan and one codegen stage of Project, Generate
+    and Filter. CollectMetrics has no codegen, so an observation would
+    split that stage and take every row out of compiled code."""
+    from json_schema_spark.constraints.evaluator import validate
+    from json_schema_spark.flagship import webtext_constraints
+
+    res = validate(cached_webtext, webtext_constraints(),
+                   dataset_checks=False)
+    plan = _plan(res.violations())
+    assert "CollectMetrics" not in plan, plan
+    top = plan.split("InMemoryTableScan")[0]
+    assert re.findall(r"\*\((\d+)\) (\w+)", top) == [
+        ("1", "Filter"), ("1", "Generate"), ("1", "Project"),
+        ("1", "Project")], top
+    assert res.metrics() == {}
+
+
+def test_observed_violations_fill_metrics(cached_webtext):
+    """observe=True keeps the counters: after one action on violations()
+    metrics() holds the row-level counts of the 1,000 generated rows."""
+    from json_schema_spark.constraints.evaluator import validate
+    from json_schema_spark.flagship import webtext_constraints
+
+    cset = webtext_constraints()
+    rows = validate(cached_webtext, cset, dataset_checks=False,
+                    observe=True)
+    assert "CollectMetrics" in _plan(rows.violations())
+    assert rows.violations().count() == 32
+    assert rows.metrics() == {"rows_total": 1000, "rows_failed": 20,
+                              "violations_total": 32}
+    # the flagship call: the fused lang referential counts, the 20 url
+    # uniqueness rows do not
+    flagship = validate(cached_webtext, cset, observe=True)
+    assert flagship.violations().count() == 58
+    assert flagship.metrics() == {"rows_total": 1000, "rows_failed": 20,
+                                  "violations_total": 38}
+
+
+def test_webtext_row_stage_methods_fit_jit_limit(spark, cached_webtext):
     """HotSpot does not JIT-compile a method over 8,000 bytecode bytes
     (DontCompileHugeMethods); Spark's hugeMethodLimit (65,535) lets such a
     method run anyway, interpreted. The row-level validation stages over
     cached rows, as the benchmark runs them, must stay under the limit,
-    for the flagship set and for it plus six string keywords."""
+    for the flagship set and for it plus six string keywords, with and
+    without the observation."""
     from json_schema_spark.constraints.evaluator import validate
     from json_schema_spark.constraints.spec import ConstraintSet
     from json_schema_spark.flagship import webtext_constraints
-    from json_schema_spark.sources.webtext import generate_webtext
 
     flagship = webtext_constraints()
     columns = {c: dict(spec) for c, spec in flagship.columns.items()}
     for col, kw, arg in _EXTRA_STRING_KEYWORDS:
         columns[col][kw] = arg
     extended = ConstraintSet(columns=columns)
-    df = generate_webtext(spark, 1000).cache()
-    df.count()
     sizes = {}
     for name, cset in (("flagship", flagship), ("+6", extended)):
-        out = validate(df, cset, dataset_checks=False).violations()
-        stages = spark._jvm.org.apache.spark.sql.execution.debug.package \
-            .codegenStringSeq(out._jdf.queryExecution().executedPlan())
-        sizes[name] = [stages.apply(i)._3().maxMethodCodeSize()
-                       for i in range(stages.size())]
-    df.unpersist()
-    for name, s in sizes.items():
+        for observe in (False, True):
+            out = validate(cached_webtext, cset, dataset_checks=False,
+                           observe=observe).violations()
+            stages = spark._jvm.org.apache.spark.sql.execution.debug \
+                .package.codegenStringSeq(
+                    out._jdf.queryExecution().executedPlan())
+            sizes[name, observe] = [
+                stages.apply(i)._3().maxMethodCodeSize()
+                for i in range(stages.size())]
+    for key, s in sizes.items():
         # a stage that failed to compile reports -1
-        assert s and 0 < min(s) and max(s) < 8000, (name, sizes)
+        assert s and 0 < min(s) and max(s) < 8000, (key, sizes)
     # the flagship stage keeps its headroom: 6,518 bytes when the rule
     # "a NULL verdict fails" moved from each keyword to the mask bit
-    assert max(sizes["flagship"]) <= 6600, sizes
+    for observe in (False, True):
+        assert max(sizes["flagship", observe]) <= 6600, sizes
 
 
 def test_referential_dim_join_broadcasts(spark, docs):

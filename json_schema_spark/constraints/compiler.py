@@ -175,11 +175,12 @@ def _type_pred(col: Column, dtype: T.DataType, arg: Any) -> Column | None:
     if jt in ("number", "integer"):
         # numeric unification (Check.php:23-41, Validator.php:205-216):
         # integer always satisfies number; a fraction-free float satisfies
-        # integer (the 1.0-is-an-integer rule).
+        # integer (the 1.0-is-an-integer rule). `% 1`, not floor():
+        # floor(double) is a BIGINT clamped at +-2^63, so 1e20 != floor.
         if "number" in types or (jt == "integer" and "integer" in types):
             value_ok = F.lit(True)
         elif "integer" in types:
-            value_ok = col == F.floor(col)
+            value_ok = col % 1 == 0
         else:
             value_ok = F.lit(False)
     else:

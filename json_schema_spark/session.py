@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, in whole GiB, capped at 16g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "json_schema_spark",
     cores: int | str | None = None,
@@ -24,6 +30,9 @@ def get_spark(
     ``cores`` may be an int (local[N]) or "*" (all). On a real cluster this
     module is not used — the engine is master-agnostic; spark-submit owns the
     session config and callers pass their own SparkSession everywhere.
+    The driver heap is ``SPARK_DRIVER_MEM`` when set, else half the host's
+    physical memory capped at 16g: a heap past the host's memory gets the
+    JVM (or a neighbour) OOM-killed instead of spilling.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -40,7 +49,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )

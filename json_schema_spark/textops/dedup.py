@@ -340,34 +340,16 @@ def near_duplicates(df: DataFrame, text_col: str = "text",
             .filter(F.col("jaccard") >= threshold))
 
 
-def winnowing_fingerprints(col: Column, k: int = 8, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03): hash every char k-gram (rolling window), keep the minimum
-    hash of each window of ``w`` consecutive k-gram hashes, dedupe.
-    Guarantees any shared substring of length >= k+w-1 shares a
-    fingerprint — the classic containment-detection primitive.
-
-    Pure expressions: sequence/transform/substring/md5/slice/array_min —
-    per-row work is O(len * (k + w)) character ops, fully codegen'd."""
-    n = F.length(col)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.substring(F.md5(F.substring(col, i, k)), 1, 16))
-    fps = F.transform(
-        F.sequence(F.lit(1), F.size(grams) - (w - 1)),
-        lambda i: F.array_min(F.slice(grams, i, w)))
-    # guard: F.sequence(1, x) with x < 1 generates a DESCENDING sequence,
-    # so both sequences need n >= k + w - 1 (>= 1 window)
-    return F.when(n >= k + w - 1, F.array_distinct(fps)) \
-            .otherwise(F.array().cast("array<string>"))
-
-
 def winnowing_fingerprint_rows(df: DataFrame, text_col: str = "text",
                                id_col: str = "doc_id", k: int = 8,
                                w: int = 4) -> DataFrame:
-    """Distinct (id, fp) winnowing fingerprints, computed gram-at-a-time.
+    """Distinct (id, fp) winnowing fingerprints (Schleimer/Wilkerson/
+    Aiken, SIGMOD'03), computed gram-at-a-time: the minimum md5 of each
+    window of ``w`` consecutive char k-grams, so any shared substring of
+    length >= k+w-1 shares a fingerprint.
 
-    Equivalent to exploding `winnowing_fingerprints`, but each k-gram md5
+    Equivalent to exploding the array form
+    (`tests/harness.py:winnowing_fingerprints`), but each k-gram md5
     is evaluated exactly ONCE: the array form's nested
     transform(slice(grams,...)) re-evaluates the whole grams expression
     per window element (Catalyst does no CSE inside lambda bodies —

@@ -128,8 +128,8 @@ def _variant_prop_pred(v: Column, spec: dict) -> Column:
                 opts.append(is_string)
             elif t == "integer":
                 # numeric unification: fraction-free values are integers
-                opts.append((jt == "BIGINT")
-                            | (is_num & (dval == F.floor(dval))))
+                # (`% 1`: floor(double) clamps at +-2^63, see compiler)
+                opts.append((jt == "BIGINT") | (is_num & (dval % 1 == 0)))
             elif t == "number":
                 opts.append(is_num)
             elif t == "boolean":

@@ -1,12 +1,17 @@
-"""Dev smoke: generate webtext, run the flagship validation, print outputs."""
+"""Dev smoke: generate webtext, run the flagship validation, print outputs.
+Imports the checkout it sits in: `python scripts/smoke_m1.py`."""
+import os
+import sys
 import time
 
-from json_schema_spark.session import get_spark
-from json_schema_spark.sources.webtext import generate_webtext
-from json_schema_spark.constraints.evaluator import validate
-from json_schema_spark.flagship import webtext_constraints
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-spark = get_spark(cores=8)
+from json_schema_spark.session import get_spark  # noqa: E402
+from json_schema_spark.sources.webtext import generate_webtext  # noqa: E402
+from json_schema_spark.constraints.evaluator import validate  # noqa: E402
+from json_schema_spark.flagship import webtext_constraints  # noqa: E402
+
+spark = get_spark()
 df = generate_webtext(spark, 6000)
 t0 = time.time()
 # the flagship call, observed so that metrics() has its counters

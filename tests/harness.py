@@ -1,12 +1,12 @@
 """Test harnesses shared by several test modules: a fixture encoder, an
-ANN recall@k gate and a plan probe. None of them is part of the engine's
-API."""
+ANN recall@k gate, a plan probe and the array-form winnowing reference.
+None of them is part of the engine's API."""
 
 from __future__ import annotations
 
 import struct
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,3 +52,23 @@ def plan_has_shuffle(df: DataFrame) -> bool:
     """True when the executed plan hash-partitions (an Exchange)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return "Exchange hashpartitioning" in plan
+
+
+def winnowing_fingerprints(col: Column, k: int = 8, w: int = 4) -> Column:
+    """Winnowing fingerprints as one array expression per row: hash every
+    char k-gram, keep the minimum hash of each window of ``w``
+    consecutive k-gram hashes, dedupe. The reference that
+    `textops.dedup.winnowing_fingerprint_rows` must equal once exploded;
+    the engine does not use it because its nested transform re-hashes
+    every gram per window element."""
+    n = F.length(col)
+    grams = F.transform(
+        F.sequence(F.lit(1), n - (k - 1)),
+        lambda i: F.substring(F.md5(F.substring(col, i, k)), 1, 16))
+    fps = F.transform(
+        F.sequence(F.lit(1), F.size(grams) - (w - 1)),
+        lambda i: F.array_min(F.slice(grams, i, w)))
+    # guard: F.sequence(1, x) with x < 1 generates a DESCENDING sequence,
+    # so both sequences need n >= k + w - 1 (>= 1 window)
+    return F.when(n >= k + w - 1, F.array_distinct(fps)) \
+            .otherwise(F.array().cast("array<string>"))

@@ -242,11 +242,18 @@ def test_multiple_of_beyond_decimal_range(spark):
 
 
 def test_integer_as_float_rule(spark):
-    # 1.0 IS an integer (Check.php:33-41)
-    rows = [("a", 1.0), ("b", 1.5)]
+    # 1.0 IS an integer (Check.php:33-41), at any magnitude: floor() of a
+    # double is a BIGINT clamped at 2^63, so 1e20 must not be tested by it
+    rows = [("a", 1.0), ("b", 1.5), ("c", 1e20), ("d", -1e20),
+            ("e", 9.3e18), ("f", 2.5), ("g", 3.0), ("h", float("nan"))]
     got = _violated(spark, rows, "id string, v double",
                     {"v": {"type": "integer"}})
-    assert got == {("b", "v.type")}
+    assert got == {("b", "v.type"), ("f", "v.type"), ("h", "v.type")}
+    from decimal import Decimal
+    rows = [("a", Decimal("100000000000000000000")), ("b", Decimal(7))]
+    got = _violated(spark, rows, "id string, v decimal(21,0)",
+                    {"v": {"type": "integer"}})
+    assert got == set()
 
 
 # ---- array keywords -------------------------------------------------------

@@ -200,9 +200,12 @@ def test_fast_path_numeric_type_fidelity(spark):
     schema = {"type": "object",
               "properties": {"n": {"type": "integer", "minimum": 10}}}
     assert is_fast_path(schema)
+    # past 2^63 too: 1e20 and the 21-digit integer are integers
     rows = [(1, '{"n": 250}'), (2, '{"n": 250.0}'), (3, '{"n": 1.5}'),
             (4, '{"n": "abc"}'), (5, '{"n": 5}'), (6, '{}'),
-            (7, '{"n": true}')]
+            (7, '{"n": true}'), (8, '{"n": 1e20}'),
+            (9, '{"n": 100000000000000000000}'), (10, '{"n": -1e20}'),
+            (11, '{"n": 9.3e18}'), (12, '{"n": 2.5}'), (13, '{"n": 30.0}')]
     df = spark.createDataFrame(rows, "id long, json string")
     fast = {r["id"]: r["valid"] for r in
             validate_json_auto(df, schema, "json", id_col="id").collect()}
@@ -210,7 +213,8 @@ def test_fast_path_numeric_type_fidelity(spark):
             validate_json_column(df, schema, "json").collect()}
     assert fast == slow
     assert fast == {1: True, 2: True, 3: False, 4: False, 5: False,
-                    6: True, 7: False}
+                    6: True, 7: False, 8: True, 9: True, 10: False,
+                    11: True, 12: False, 13: True}
 
 
 def test_variant_path_exact_document_parity(spark):

@@ -129,45 +129,6 @@ def test_windowed_violation_counts(spark, webtext_dir):
     assert names == ["window", "constraint_id", "n"]
 
 
-def test_stateful_host_monitor(spark, webtext_dir, tmp_path):
-    """applyInPandasWithState: cumulative per-host counts must equal the
-    batch ground truth after draining the stream."""
-    from json_schema_spark.ops.streaming import host_violation_monitor
-
-    schema = spark.read.parquet(webtext_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "32")
-              .parquet(webtext_dir))
-    out = host_violation_monitor(stream, webtext_constraints())
-    q = (out.writeStream.format("memory").queryName("host_monitor")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    # last emitted row per host == cumulative truth
-    got = {r["host"]: (r["rows_total"], r["rows_failed"])
-           for r in spark.sql(
-               "SELECT host, rows_total, rows_failed FROM ("
-               " SELECT *, row_number() OVER (PARTITION BY host "
-               "   ORDER BY rows_total DESC) rn FROM host_monitor) "
-               "WHERE rn = 1").collect()}
-
-    from json_schema_spark.constraints.evaluator import validate
-    batch = validate(spark.read.parquet(webtext_dir),
-                     webtext_constraints(), id_col="url",
-                     dataset_checks=False, observe=False)
-    truth = {r["host"]: (r["t"], r["f"]) for r in
-             batch.annotated.groupBy(
-                 F.regexp_extract(F.col("url"),
-                                  r"^[a-z][a-z0-9+.\-]*://([^/]*)", 1)
-                 .alias("host"))
-             .agg(F.count(F.lit(1)).alias("t"),
-                  F.sum((~F.col("_ok")).cast("long")).alias("f"))
-             .collect()}
-    assert got == truth
-
-
 def test_stream_violations_ts_col_disambiguation(spark):
     import pytest
     from pyspark.sql import functions as F  # noqa: F401
@@ -405,53 +366,6 @@ def test_keyless_asof_join_parallel_carry(spark):
     # constant — no global single-partition sort of the data
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "windowspecdefinition(_bkt" in plan
-
-
-def test_stream_sessions_finalize_past_watermark(spark, tmp_path):
-    """Append-mode session windows emit exactly once, when the
-    watermark passes their close: a later flush batch advances the
-    watermark and finalizes the earlier session."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-
-    from json_schema_spark.ops.streaming import stream_sessions
-
-    src = tmp_path / "events"
-    src.mkdir()
-    f1 = src / "a_batch1.json"
-    f1.write_text("\n".join([
-        '{"user_id": "u1", "ts": "2024-01-01 10:00:00"}',
-        '{"user_id": "u1", "ts": "2024-01-01 10:05:00"}',
-        '{"user_id": "u1", "ts": "2024-01-01 10:10:00"}']))
-    time.sleep(0.05)
-    f2 = src / "b_batch2.json"
-    f2.write_text('{"user_id": "u1", "ts": "2024-01-03 00:00:00"}')
-    # pin discovery order: source sorts by modification time
-    now = time.time()
-    os.utime(f1, (now - 60, now - 60))
-    os.utime(f2, (now, now))
-
-    stream = (spark.readStream
-              .schema("user_id string, ts string")
-              .option("maxFilesPerTrigger", "1")
-              .json(str(src))
-              .select("user_id", F.col("ts").cast("timestamp").alias("ts")))
-    out = stream_sessions(stream, gap="30 minutes", watermark="1 hour")
-    q = (out.writeStream.format("memory").queryName("sess")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    rows = spark.sql("SELECT * FROM sess").collect()
-    finalized = {(str(r["session_start"]), r["n_events"]) for r in rows}
-    # the 10:00-10:10 session (3 events, one 30-min-gap window) is
-    # finalized by the day-later flush; the flush's own session stays
-    # open past end-of-stream and must NOT be emitted
-    assert ("2024-01-01 10:00:00", 3) in finalized
-    assert all(not s.startswith("2024-01-03") for s, _ in finalized)
 
 
 def test_keyless_asof_null_ts_matches_keyed(spark):
@@ -839,15 +753,17 @@ def test_streaming_near_novel_filter_replay_after_index_write(spark,
     """A batch re-run after its index write (a crash before Spark
     commits it) must hand the sink the same rows: the replay probes
     only the complete batches below its id, never its own buckets. An
-    index_dir in the old append-only layout is refused."""
+    index_dir in the old append-only layout is refused, and so is one
+    reopened under other LSH settings: its band hashes would never
+    collide with the new ones, so seen rows would re-emit."""
     from json_schema_spark.ops.streaming import StreamingNearNovelFilter
 
     out: dict[int, list] = {}
 
-    def make(idx):
+    def make(idx, **lsh):
         return StreamingNearNovelFilter(
             idx, sink=lambda df, bid: out.__setitem__(
-                bid, sorted(r.doc_id for r in df.collect())))
+                bid, sorted(r.doc_id for r in df.collect())), **lsh)
 
     def words(stem):
         return " ".join(f"{stem}{i}" for i in range(30))
@@ -868,6 +784,18 @@ def test_streaming_near_novel_filter_replay_after_index_write(spark,
     b0.write.parquet(old)
     with pytest.raises(ValueError, match="older layout"):
         make(old)
+
+    for other in ({"k": 5}, {"num_hashes": 32}, {"bands": 8},
+                  {"k": 5, "bands": 8}):
+        with pytest.raises(ValueError) as err:
+            make(idx, **other)
+        msg = str(err.value)
+        assert "k=3 num_hashes=16 bands=4" in msg, msg
+        scheme = (f"k={other.get('k', 3)} "
+                  f"num_hashes={other.get('num_hashes', 16)} "
+                  f"bands={other.get('bands', 4)}")
+        assert scheme in msg, msg
+    make(idx, k=3, num_hashes=16, bands=4)  # the same settings reopen it
 
 
 def test_streaming_near_novel_filter_keeps_two_index_versions(spark,

@@ -2,8 +2,10 @@
 
 Every public top-level function or class in `json_schema_spark/` must be
 used outside `tests/` — by the package itself, `__spark_entry__.py`,
-`perfbench/`, `scripts/`, `examples/` or `bench.py` — or be named in
-COVERAGE.md, which says why a test-only capability is kept. A use is a
+`perfbench/`, `scripts/`, `examples/` or `bench.py` — or have a row in
+COVERAGE.md's "Kept without a non-test caller" table, which says why a
+test-only capability is kept; a mention elsewhere in COVERAGE.md does not
+excuse it. A use is a
 Name or Attribute node, or a string literal equal to the name (so that
 dispatch tables such as `validator/checks.FORMAT_FUNCS` count). Imports,
 `__all__` lists and the definition's own body do not count."""
@@ -74,10 +76,14 @@ def _used_names(tree: ast.AST) -> set[str]:
     return used
 
 
-def _coverage_names() -> set[str]:
-    """Identifiers inside COVERAGE.md's backtick spans."""
-    text = (ROOT / "COVERAGE.md").read_text()
-    return {ident for span in re.findall(r"`([^`]+)`", text)
+def _kept_names(text: str) -> set[str]:
+    """Identifiers in the backtick spans of the first cell of each row
+    of the "Kept without a non-test caller" table in ``text``."""
+    section = text.split("## Kept without a non-test caller", 1)[1]
+    section = section.split("\n## ", 1)[0]
+    return {ident
+            for row in re.findall(r"^\|([^|\n]*)\|", section, re.M)
+            for span in re.findall(r"`([^`]+)`", row)
             for ident in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", span)}
 
 
@@ -85,13 +91,23 @@ def test_every_public_name_has_a_non_test_user_or_a_coverage_entry():
     used: set[str] = set()
     for path in _modules():
         used |= _used_names(ast.parse(path.read_text()))
-    documented = _coverage_names()
+    documented = _kept_names((ROOT / "COVERAGE.md").read_text())
     orphans = sorted(f"{module}:{name}"
                      for name, module in _public_defs().items()
                      if name not in used and name not in documented)
     assert not orphans, (
         "public names used only by tests; delete them, or say in "
-        "COVERAGE.md why they stay:\n" + "\n".join(orphans))
+        "COVERAGE.md's \"Kept without a non-test caller\" table why "
+        "they stay:\n" + "\n".join(orphans))
+
+
+def test_only_kept_table_rows_excuse_a_name():
+    text = ("## Operators\n\n| Op | `a/b.elsewhere` |\n|---|---|\n\n"
+            "## Kept without a non-test caller\n\nSee `prose_name`.\n\n"
+            "| Name | Why |\n|---|---|\n"
+            "| `m/x.kept_one` / `kept_two` | uses `why_name` |\n\n"
+            "## Later\n\n| `m/y.after` | x |\n")
+    assert _kept_names(text) == {"m", "x", "kept_one", "kept_two"}
 
 
 def test_scan_sees_uses_and_ignores_imports_and_self_reference():

@@ -7,7 +7,8 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from tests.harness import ann_recall, encode_bmp_gray
+from tests.harness import (ann_recall, encode_bmp_gray,
+                           winnowing_fingerprints)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -224,7 +225,7 @@ def test_multimodal_features(spark):
 
 def test_winnowing_containment(spark):
     from json_schema_spark.textops.dedup import (
-        containment_pairs, winnowing_fingerprints)
+        containment_pairs, winnowing_fingerprint_rows)
     from pyspark.sql import functions as F
 
     shared = "the quick brown fox jumps over the lazy dog many times today"
@@ -243,6 +244,11 @@ def test_winnowing_containment(spark):
         F.col("text")).alias("f")).collect()
     by_id = {r["doc_id"]: set(r["f"]) for r in fps}
     assert len(by_id[1] & by_id[2]) >= 3
+    # the gram-at-a-time rows the engine uses equal the array form
+    rows: dict = {}
+    for r in winnowing_fingerprint_rows(df).collect():
+        rows.setdefault(r["_id"], set()).add(r["fp"])
+    assert rows == by_id
     # short text -> empty fingerprints, no descending-sequence blowup
     short = spark.createDataFrame([(1, "tiny")], "doc_id long, text string")
     out = short.select(winnowing_fingerprints(F.col("text")).alias("f")) \
